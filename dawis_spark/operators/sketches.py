@@ -30,7 +30,7 @@ against the exact count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import text as TXT
@@ -780,6 +780,31 @@ def _rank_select_core(
     return stats, bcounts, chosen, candidates
 
 
+def array_lit(vals: list, elem_type: str) -> Column:
+    """A literal ``array<elem_type>`` (``double`` or ``bigint``) built
+    with ONE py4j call, however long ``vals`` is.
+
+    ``F.lit(list)`` expands to ``array(lit(v0), lit(v1), ...)`` — one
+    py4j round trip per element, and a numpy array is no cheaper (its
+    py4j converter sets each element with its own call). The EDF walk
+    inlines four ~n_buckets arrays per build (percentile fractions,
+    boundaries, offsets, one per summed column): ~4k round trips at
+    n_buckets=1024, most of a walk's driver-side build time. Here the
+    values travel as ONE comma-joined string literal that Spark splits
+    and casts. ``repr`` round-trips every double exactly (and Spark's
+    string->double cast is correctly rounded, ``inf``/``nan`` included);
+    bigints are exact decimal text. ConstantFolding collapses the
+    split + cast into one array ``Literal`` in the optimized plan, so no
+    row ever parses the string. (A SQL ``array(1.5D, ...)`` text is also
+    one call, but parsing it holds far more driver heap.)"""
+    conv = float if elem_type == "double" else int
+    if not vals:
+        # split("") yields [""], not []
+        return F.array().cast(f"array<{elem_type}>")
+    text = ",".join(repr(conv(v)) for v in vals)
+    return F.split(F.lit(text), ",").cast(f"array<{elem_type}>")
+
+
 def range_partitioned_ranks(
     df: DataFrame,
     value_col: str,
@@ -790,7 +815,6 @@ def range_partitioned_ranks(
     n_col: str | None = None,
     sum_col: str | None = None,
     sum_of: str | None = None,
-    log_scale: bool = False,
     sum_cols: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Exact global dense row-numbering WITHOUT a single-partition sort.
@@ -808,11 +832,15 @@ def range_partitioned_ranks(
          rank order and ties (same value) never straddle buckets;
       3. per-bucket counts (<= n_buckets rows) -> each bucket's rank
          offset by a prefix-sum computed on the DRIVER from the
-         collected count relation (r15; <= n_buckets exact-integer rows,
-         inlined as literal arrays) — deliberately not a window, so no
-         partition-less WindowExec node exists anywhere in the plan,
-         and no bucket-count exchange / broadcast join exists in the
-         per-action plan either;
+         collected count relation (r15; <= n_buckets exact-integer rows)
+         — deliberately not a window, so no partition-less WindowExec
+         node exists anywhere in the plan, and no bucket-count exchange
+         / broadcast join exists in the per-action plan either. Each
+         offset array (like the boundary array and the percentile
+         fractions) is inlined with ``array_lit``: ONE py4j call
+         carrying a comma-joined string that Spark splits and casts,
+         constant-folded to a literal array in the optimized plan, so
+         no row parses it (``F.lit(list)`` paid one call per element);
       4. row_number within each bucket (parallelism = populated
          buckets, each sorting ~n/n_buckets rows) + broadcast offset.
 
@@ -861,12 +889,6 @@ def range_partitioned_ranks(
     array scan in the hot path). Quantile sketch error only moves COARSE
     boundaries; ranks/sums stay bit-identical to the global window.
 
-    ``log_scale`` is retained for API compatibility and is now a no-op:
-    equi-depth boundaries are invariant under any strictly monotone
-    transform of the value axis, so the signed-log re-draw it used to
-    request no longer changes the plan (it was the r13 opt-in remedy
-    for exactly the whale collapse the quantile boundaries retire).
-
     NULL handling: NULL ``value_col`` rows are routed to the bucket that
     matches Spark's window NULL ordering — bucket 0 for ascending (ASC =
     NULLS FIRST) and the last bucket for descending (DESC = NULLS LAST).
@@ -877,7 +899,6 @@ def range_partitioned_ranks(
     """
     from pyspark.sql import Window
 
-    del log_scale  # no-op since the r14 equi-depth boundaries (see doc)
     n_bnd = n_buckets - 1
     stats_aggs = [F.count(F.lit(1)).alias("__n")]
     if n_bnd > 0:
@@ -891,7 +912,7 @@ def range_partitioned_ranks(
         stats_aggs.append(
             F.percentile_approx(
                 F.col(value_col).cast("double"),
-                [i / n_buckets for i in range(1, n_buckets)],
+                array_lit([i / n_buckets for i in range(1, n_buckets)], "double"),
                 max(2 * n_buckets, 2048),
             ).alias("__bnd")
         )
@@ -931,7 +952,7 @@ def range_partitioned_ranks(
         # try_element_at returns NULL past the array end, and a NULL
         # comparison never increments, which also gives NULL values the
         # window's NULL ordering for free (see docstring).
-        bnd_lit = F.lit(bnd_vals)
+        bnd_lit = array_lit(bnd_vals, "double")
         vd = F.col(value_col).cast("double")
         joined_stats = joined_stats.withColumn("__bs", F.lit(0))
         step = 1 << (n_bnd.bit_length() - 1)
@@ -990,15 +1011,6 @@ def range_partitioned_ranks(
             soff_vals[i][b] = cums[i]
             cums[i] += int(r[f"__bs{i}"])
 
-    def _arr_lit(vals: list[int]):
-        # ONE py4j literal from the whole Python list (then one cast):
-        # the old F.array(*[F.lit(v) ...]) made a py4j round trip per
-        # element — n_buckets x (1 + n_sum_cols) ≈ 6k driver calls that
-        # dominated every EDF-walk caller's plan-build time (~12 s of a
-        # jonckheere 18 s build at sf0.1; r16, guide §5 driver work).
-        # Same literal array expression either way.
-        return F.lit([int(v) for v in vals]).cast("array<bigint>")
-
     order = [F.desc(value_col) if desc else F.asc(value_col)] + [
         F.asc(c) for c in tie_cols
     ]
@@ -1014,14 +1026,14 @@ def range_partitioned_ranks(
     ]
     joined = (
         bucketed.withColumn(
-            "__off", F.element_at(_arr_lit(off_vals), F.col("__b") + 1)
+            "__off", F.element_at(array_lit(off_vals, "bigint"), F.col("__b") + 1)
         )
         .withColumn("__rnb", F.row_number().over(w_in))
     )
     for i in range(len(pairs)):
         joined = joined.withColumn(
             f"__soff{i}",
-            F.element_at(_arr_lit(soff_vals[i]), F.col("__b") + 1),
+            F.element_at(array_lit(soff_vals[i], "bigint"), F.col("__b") + 1),
         )
     for i, (out_name, src) in enumerate(pairs):
         joined = joined.withColumn(
@@ -1047,7 +1059,6 @@ def exact_ntile(
     desc: bool = False,
     out_col: str = "__ntile",
     n_buckets: int = 1024,
-    log_scale: bool = False,
 ) -> DataFrame:
     """``ntile(k) OVER (ORDER BY value [DESC], ties)`` without the
     single-partition sort: global ranks from
@@ -1068,7 +1079,6 @@ def exact_ntile(
         n_buckets=n_buckets,
         out_col="__r",
         n_col="__nn",
-        log_scale=log_scale,
     )
     tile = (
         f"case when __r <= (__nn % {k}) * (__nn div {k} + 1) "

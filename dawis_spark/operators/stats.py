@@ -39,7 +39,6 @@ def value_cum_walk(
     n_buckets: int = 1024,
     rank_col: str = "__r",
     desc: bool = False,
-    log_scale: bool = False,
 ) -> DataFrame:
     """Distributed EDF walk over a distinct-value relation: inclusive
     running sums ``cum_<c>`` of each integer count column in
@@ -57,9 +56,7 @@ def value_cum_walk(
     collapse (one 1e6x value pushed every other distinct value into
     linear bucket 0 and the walk back to the single-task cost, 15.6 s)
     re-measures at ~the uniform cost with no caller opt-in (SCALE.md
-    round-14 row). ``log_scale`` is retained as a no-op for API
-    compatibility — equi-depth boundaries are invariant under monotone
-    transforms of the value axis."""
+    round-14 row)."""
     from dawis_spark.operators.sketches import range_partitioned_ranks
 
     return range_partitioned_ranks(
@@ -69,7 +66,6 @@ def value_cum_walk(
         desc=desc,
         n_buckets=n_buckets,
         out_col=rank_col,
-        log_scale=log_scale,
         sum_cols=[(f"cum_{c}", c) for c in count_cols],
     )
 
@@ -1112,7 +1108,9 @@ def anderson_darling_k(
     version without continuity correction): tail-weighted integrated
     EDF discrepancy across ALL groups — the heavy-tail-sensitive member
     of the drift panel (KS = supremum, CvM = integrated, AD = tail-
-    weighted integrated). One row (k_groups, n_rows, a2_akn).
+    weighted integrated). One row (k_groups, n_rows, a2_akn); a single
+    distinct pooled value gives a2_akn = 0.0 (no pooled split point, so
+    the sum is empty).
 
     Exactness: per (group, pooled-value) numerators (N*M_gv - n_g*B_v)
     are exact DECIMAL(38,0); each grid cell pays one double division
@@ -1182,12 +1180,15 @@ def anderson_darling_k(
         terms.select("g", "v", "t_term")
         .repartition(1)
         .sortWithinPartitions("g", "v")
-        .agg(F.sum("t_term").alias("s"))
+        .agg(F.coalesce(F.sum("t_term"), F.lit(0.0)).alias("s"))
     )
     # k_groups/n_rows read off the k-row groups relation and the 1-row
     # total instead of a second end-to-end pass over the grid: the grid
     # is a cross join, so every group appears in terms, and n is the
-    # pooled row count by construction — identical values
+    # pooled row count by construction — identical values. A single
+    # distinct pooled value leaves terms empty (b = n everywhere): the
+    # statistic is then the empty sum, (k, n, 0.0), not a NULL; empty
+    # input has no n and gives (0, NULL, NULL)
     meta = groups.agg(
         F.count(F.lit(1)).cast("int").alias("k_groups")
     ).crossJoin(F.broadcast(tot.select(F.col("n").alias("n_rows"))))

@@ -190,6 +190,11 @@ def repetition_stats(
     Output: (id, n_tokens, dup_token_frac, top_token_frac, dup_ngram_frac),
     fractions rounded to 6 for oracle parity.
 
+    Precondition: ``id_col`` is unique per input row. Every signal is
+    computed per row, so duplicate ids give one output row per input row
+    with the same id; they are not merged into one document. Callers
+    that may hold duplicates must aggregate the text per id first.
+
     Scale: ENTIRELY map-side since r16 (the token_entropy run-length
     shape): each document sorts its OWN token array and its OWN n-gram
     multiset, and every per-unit count is a run length of the sorted

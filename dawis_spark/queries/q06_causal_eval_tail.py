@@ -1043,13 +1043,12 @@ terms AS (
            / CAST(n_g AS DOUBLE) AS t_term
   FROM scored CROSS JOIN tot WHERE b < n),
 folded AS (
-  SELECT CAST(COUNT(DISTINCT g) AS INT) AS k_groups,
-         CAST(MAX(n) AS BIGINT) AS n_rows,
-         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+  SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
            list(t_term ORDER BY g, v)), (a, e) -> a + e) AS s
   FROM terms)
-SELECT k_groups, n_rows, ROUND(s / CAST(n_rows AS DOUBLE), 6) AS a2_akn
-FROM folded
+SELECT (SELECT CAST(COUNT(*) AS INT) FROM groups) AS k_groups,
+       n AS n_rows, ROUND(s / CAST(n AS DOUBLE), 6) AS a2_akn
+FROM folded CROSS JOIN tot
 """
 
 

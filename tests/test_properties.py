@@ -309,10 +309,9 @@ def test_int_uniformizer_dual_rendering_agrees(spark, keys):
         st.integers(min_value=-(10**12), max_value=10**12), min_size=1, max_size=30
     ),
     desc=st.booleans(),
-    log_scale=st.booleans(),
     nb=st.sampled_from([1, 2, 7, 64]),
 )
-def test_range_partitioned_ranks_property(spark, vals, desc, log_scale, nb):
+def test_range_partitioned_ranks_property(spark, vals, desc, nb):
     """For ANY integer multiset (ties, negatives, whale magnitudes),
     bucket counts, and flag combination, ranks AND running sums equal
     the global-window form bit-for-bit — the 'identical by construction'
@@ -329,7 +328,7 @@ def test_range_partitioned_ranks_property(spark, vals, desc, log_scale, nb):
         r["k"]: (r["r"], r["cum"])
         for r in range_partitioned_ranks(
             df, "v", ["k"], desc=desc, n_buckets=nb,
-            out_col="r", sum_col="cum", log_scale=log_scale,
+            out_col="r", sum_col="cum",
         ).collect()
     }
     order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]

@@ -131,8 +131,8 @@ def test_whale_guard_broadcasts_whale_set(spark):
 
 
 def test_range_partitioned_ranks_log_scale_identical_ranks(spark):
-    """log_scale only re-draws bucket boundaries (strictly monotone
-    transform): ranks and running sums stay bit-identical to the global
+    """Equi-depth boundaries (which retired the former ``log_scale``
+    flag) keep ranks and running sums bit-identical to the global
     window, including under a whale value that collapses linear buckets."""
     from dawis_spark.operators.sketches import range_partitioned_ranks
 
@@ -149,7 +149,7 @@ def test_range_partitioned_ranks_log_scale_identical_ranks(spark):
             r["k"]: (r["r"], r["cum"])
             for r in range_partitioned_ranks(
                 df, "v", ["k"], desc=desc, n_buckets=16,
-                out_col="r", sum_col="cum", log_scale=True,
+                out_col="r", sum_col="cum",
             ).collect()
         }
         order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]

@@ -286,6 +286,43 @@ def test_anderson_darling_orders_separation(spark):
     assert a_sep > a_same
 
 
+def test_anderson_darling_degenerate_inputs_match_oracle(spark):
+    """Spark and the DuckDB oracle share one definition on degenerate
+    input: a single distinct pooled value is (k, n, 0.0), the empty
+    sum; empty input is (0, NULL, NULL). A two-value input checks the
+    ordinary case through the same path."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from dawis_spark.operators.stats import anderson_darling_k
+    from dawis_spark.queries.q06_causal_eval_tail import _ADK_ORACLE
+
+    cases = {
+        "one_value": [("1-URGENT", 12.5), ("5-LOW", 12.5), ("5-LOW", 12.5)],
+        "two_values": [("1-URGENT", 1.0), ("5-LOW", 2.0), ("5-LOW", 1.0)],
+        "empty": [],
+    }
+    got = {}
+    for name, rows in cases.items():
+        orders = spark.createDataFrame(
+            rows, "o_orderpriority string, o_totalprice double"
+        ).select(
+            "o_orderpriority",
+            F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
+        )
+        r = anderson_darling_k(orders, "cents", "o_orderpriority").first()
+        con = duckdb.connect()
+        con.execute(
+            "CREATE TABLE orders(o_orderpriority VARCHAR, o_totalprice DOUBLE)"
+        )
+        if rows:
+            con.executemany("INSERT INTO orders VALUES (?, ?)", rows)
+        assert tuple(r) == con.execute(_ADK_ORACLE).fetchone(), name
+        got[name] = tuple(r)
+    assert got["one_value"] == (2, 3, 0.0)
+    assert got["empty"] == (0, None, None)
+
+
 def test_friedman_perfect_ordering_hits_maximum(spark):
     """3 complete blocks, 3 treatments, identical ordering in every
     block -> Q = n(k-1) = 6, the statistic's maximum."""

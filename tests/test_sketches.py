@@ -93,3 +93,90 @@ def test_weighted_sketch_builds_match_per_occurrence(spark):
         for r in cs_sketch(counts, "v", d=5, w=64, weight_col="n").collect()
     }
     assert occ_cs == wt_cs
+
+
+def test_array_lit_round_trips_exactly(spark):
+    """The one-call string literal keeps every value bit-exact: doubles
+    through ``repr`` and Spark's correctly rounded string->double cast
+    (subnormals, extremes, signed zero, infinities, NaN), bigints at
+    both ends of their range, and the empty list (``split`` of an empty
+    string would give one empty element)."""
+    import math
+
+    from dawis_spark.operators.sketches import array_lit
+
+    doubles = [i / 1024 for i in range(1, 1024)] + [
+        -1.5, 0.1, 1 / 3, -0.0, 5e-324, -5e-324,
+        1.7976931348623157e308, -1.7976931348623157e308,
+        math.inf, -math.inf, math.nan,
+    ]
+    bigints = [2**63 - 1, -(2**63 - 1), 0, -7, 1024]
+    row = spark.range(1).select(
+        array_lit(doubles, "double").alias("d"),
+        array_lit(bigints, "bigint").alias("b"),
+        array_lit([], "double").alias("ed"),
+        array_lit([], "bigint").alias("eb"),
+    ).first()
+    assert len(row["d"]) == len(doubles)
+    for got, want in zip(row["d"], doubles):
+        if math.isnan(want):
+            assert math.isnan(got)
+        else:
+            assert got == want and math.copysign(1, got) == math.copysign(1, want)
+    assert row["b"] == bigints
+    assert row["ed"] == [] and row["eb"] == []
+
+
+def _edf_walk(spark, n_buckets):
+    from dawis_spark.operators.sketches import range_partitioned_ranks
+
+    df = spark.range(3000).selectExpr("id AS k", "(id * 7919) % 2003 AS v")
+    return range_partitioned_ranks(
+        df, "v", ["k"], n_buckets=n_buckets, out_col="r", sum_col="cum"
+    )
+
+
+def test_edf_walk_array_literals_fold_to_constants(spark):
+    """The split + cast of each array literal is constant-folded: the
+    optimized plan carries literal arrays, so no row parses a string."""
+    plan = _edf_walk(spark, 64)._jdf.queryExecution().optimizedPlan().toString()
+    assert "element_at([" in plan
+    assert "split(" not in plan
+
+
+def test_edf_walk_build_py4j_calls_do_not_grow_with_buckets(spark):
+    """One walk's build makes O(log n_buckets) py4j calls, not
+    O(n_buckets): per-element literals made about 20k calls at
+    n_buckets=1024 against about 1.2k at 16. What remains of the
+    difference is the six extra binary-search projections (about 100
+    calls each), so fewer than one extra call per extra bucket."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    _edf_walk(spark, 16)  # warm up session-level lookups
+    spark.catalog.clearCache()
+    orig = cs.ClientServerConnection.send_command
+    n_sent = [0]
+
+    def counting(self, command):
+        n_sent[0] += 1
+        return orig(self, command)
+
+    calls = {}
+    cs.ClientServerConnection.send_command = counting
+    # freed Python proxies send py4j delete commands; collect garbage
+    # outside the counted window so no earlier build's objects land in it
+    gc.disable()
+    try:
+        for nb in (16, 1024):
+            gc.collect()
+            n_sent[0] = 0
+            walk = _edf_walk(spark, nb)
+            calls[nb] = n_sent[0]
+            del walk
+            spark.catalog.clearCache()
+    finally:
+        gc.enable()
+        cs.ClientServerConnection.send_command = orig
+    assert calls[1024] - calls[16] < 1024 - 16, calls
