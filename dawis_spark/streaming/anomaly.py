@@ -26,21 +26,11 @@ defining batch-equivalence test of this module family.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dawis_spark.operators.anomaly import MAD_SIGMA
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        T.StructField("values", T.ArrayType(T.DoubleType()), True),
-    ]
-)
+from dawis_spark.streaming import detector
 
 
 def _half_up6(x: float) -> float:
@@ -67,65 +57,26 @@ def stream_robust_anomalies(
     """
     import numpy as np
 
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(bucket_col, T.LongType()),
-            T.StructField(value_col, T.DoubleType()),
-            T.StructField("robust_z", T.DoubleType()),
-            T.StructField("is_anomaly", T.BooleanType()),
-        ]
-    )
-
-    def fold(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        fresh: dict = {}
-        for pdf in pdfs:
-            for b, v in zip(pdf[bucket_col].tolist(), pdf[value_col].tolist()):
-                fresh[int(b)] = float(v)  # last row per bucket wins in-batch
-        hist: dict = {}
-        if state.exists:
-            prev_b, prev_v = state.get
-            hist = dict(zip(prev_b, prev_v))
-        hist.update(fresh)  # redelivered bucket replaces its old value
-        kept = sorted(hist.items())[-max_history:]
-        state.update(([b for b, _ in kept], [v for _, v in kept]))
-
+    def score(fresh, kept):
         vals = np.array([v for _, v in kept], dtype=np.float64)
         med = float(np.median(vals))
         mad = float(np.median(np.abs(vals - med)))
-        out_b, out_v, out_z, out_flag = [], [], [], []
         retained = dict(kept)
+        rows = []
         for b in sorted(fresh):
             if b not in retained:
                 continue  # older than the retention window after merge
             v = retained[b]
             if mad == 0.0:
-                z, flag = None, False
+                rows.append((b, v, None, False))
             else:
                 z = _half_up6((v - med) / (MAD_SIGMA * mad))
-                flag = abs(z) > z_threshold
-            out_b.append(b)
-            out_v.append(v)
-            out_z.append(z)
-            out_flag.append(flag)
-        yield pd.DataFrame(
-            {
-                key_col: [str(key[0])] * len(out_b),
-                bucket_col: out_b,
-                value_col: out_v,
-                "robust_z": out_z,
-                "is_anomaly": out_flag,
-            }
-        )
+                rows.append((b, v, z, abs(z) > z_threshold))
+        return rows
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector.scored_series(
+        stream_df, key_col, bucket_col, [value_col], float,
+        [(value_col, T.DoubleType()), ("robust_z", T.DoubleType()),
+         ("is_anomaly", T.BooleanType())],
+        score, max_history,
     )

@@ -2,14 +2,7 @@
 ``cusum_changepoints`` query (Page 1954 one-sided upward CUSUM in the
 cumsum-minus-running-min closed form, integer cents end to end).
 
-Same state posture as streaming/anomaly.py: the per-key state is the
-series' retained (bucket, value) history capped at ``max_history``
-buckets — the input is already a per-bucket rollup, so state is
-retention-window-sized, never event-volume-sized. Each micro-batch
-folds the new final bucket aggregates in (same-bucket redelivery
-REPLACES — idempotent), recomputes the reference (total, n_days) and
-the integer CUSUM over the retained series, and emits the scored rows
-for the buckets present in the batch.
+State, latch and queue sink: streaming/detector.py.
 
 Arithmetic matches the batch query EXACTLY: x = 20*nd*v - 21*tot,
 S = cum - min(0, running_min(cum)), breach when S > 20*tot — pure
@@ -20,19 +13,11 @@ defining batch-equivalence property, tested).
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        T.StructField("values", T.ArrayType(T.LongType()), True),
-    ]
-)
+from dawis_spark.streaming import detector
 
 
 def cusum_closed_form(series: list[tuple[int, int]]) -> list[tuple[int, int, bool]]:
@@ -65,58 +50,16 @@ def stream_cusum(
 ) -> DataFrame:
     """Monitor each arriving (key, bucket, v_cents) final rollup row;
     emit (key, bucket, cusum_scaled, breached) for the batch's buckets."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(bucket_col, T.LongType()),
-            T.StructField("cusum_scaled", T.LongType()),
-            T.StructField("breached", T.BooleanType()),
-        ]
-    )
 
-    def fold(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        fresh: dict = {}
-        for pdf in pdfs:
-            for b, v in zip(pdf[bucket_col].tolist(), pdf[cents_col].tolist()):
-                fresh[int(b)] = int(v)
-        hist: dict = {}
-        if state.exists:
-            prev_b, prev_v = state.get
-            hist = dict(zip(prev_b, prev_v))
-        hist.update(fresh)
-        kept = sorted(hist.items())[-max_history:]
-        state.update(([b for b, _ in kept], [v for _, v in kept]))
-
+    def score(fresh, kept):
         scored = {b: (s, fl) for b, s, fl in cusum_closed_form(kept)}
-        out_b = [b for b in sorted(fresh) if b in scored]
-        yield pd.DataFrame(
-            {
-                key_col: [str(key[0])] * len(out_b),
-                bucket_col: out_b,
-                "cusum_scaled": [scored[b][0] for b in out_b],
-                "breached": [scored[b][1] for b in out_b],
-            }
-        )
+        return [(b, *scored[b]) for b in sorted(fresh) if b in scored]
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector.scored_series(
+        stream_df, key_col, bucket_col, [cents_col], int,
+        [("cusum_scaled", T.LongType()), ("breached", T.BooleanType())],
+        score, max_history,
     )
-
-_ALERT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        T.StructField("values", T.ArrayType(T.LongType()), True),
-        T.StructField("alerted", T.BooleanType(), True),
-    ]
-)
 
 
 def stream_cusum_alerts(
@@ -147,59 +90,16 @@ def stream_cusum_alerts(
     Scale: state per key = the retained (bucket, value) series capped
     at ``max_history`` + a bool; monitored keys are catalog-bounded;
     the alert stream is at most |keys| rows EVER."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(bucket_col, T.LongType()),
-            T.StructField("cusum_scaled", T.LongType()),
-            T.StructField("n_buckets", T.LongType()),
-            T.StructField("crossed_ms", T.LongType()),
-        ]
-    )
 
-    def fold(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        fresh: dict = {}
-        for pdf in pdfs:
-            for b, v in zip(pdf[bucket_col].tolist(), pdf[cents_col].tolist()):
-                fresh[int(b)] = int(v)
-        hist: dict = {}
-        alerted = False
-        if state.exists:
-            prev_b, prev_v, alerted = state.get
-            hist = dict(zip(prev_b, prev_v))
-            alerted = bool(alerted)
-        hist.update(fresh)
-        kept = sorted(hist.items())[-max_history:]
-
-        if not alerted:
-            breach = next(
-                ((b, s) for b, s, fl in cusum_closed_form(kept) if fl), None
-            )
-            if breach is not None:
-                alerted = True
-                yield pd.DataFrame(
-                    {
-                        key_col: [str(key[0])],
-                        bucket_col: [breach[0]],
-                        "cusum_scaled": [breach[1]],
-                        "n_buckets": [len(kept)],
-                        "crossed_ms": [state.getCurrentProcessingTimeMs()],
-                    }
-                )
-        state.update(
-            ([b for b, _ in kept], [v for _, v in kept], alerted)
+    def first_breach(kept):
+        return next(
+            ((b, s, len(kept)) for b, s, fl in cusum_closed_form(kept) if fl),
+            None,
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=_ALERT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector.latched_alerts(
+        stream_df, key_col, bucket_col, [cents_col],
+        ["cusum_scaled", "n_buckets"], first_breach, max_history,
     )
 
 
@@ -210,27 +110,10 @@ def cusum_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "shift"):
     bucket, data = the JSON context). Returns the foreachBatch
     ``DataStreamWriter``; delivery inherits the queue's at-least-once
     commit-after-send contract."""
-    from pyspark.sql import functions as F
-
-    key_col, bucket_col, *_ = alert_stream.columns
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        queue.add(
-            batch_df.select(
-                F.timestamp_millis(F.col("crossed_ms")).alias("date"),
-                F.lit(group).alias("group"),
-                F.concat(
-                    F.lit("CUSUM level shift on "),
-                    F.col(key_col),
-                    F.lit(" at bucket "),
-                    F.col(bucket_col).cast("string"),
-                ).alias("message"),
-                F.to_json(
-                    F.struct(key_col, bucket_col, "cusum_scaled", "n_buckets")
-                ).alias("data"),
-            )
-        )
-
-    return alert_stream.writeStream.foreachBatch(sink)
+    key, bucket, *_ = alert_stream.columns
+    return detector.alerts_to_queue(
+        alert_stream, queue, group,
+        ["CUSUM level shift on ", F.col(key), " at bucket ",
+         F.col(bucket).cast("string")],
+        [key, bucket, "cusum_scaled", "n_buckets"],
+    )

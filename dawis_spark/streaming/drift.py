@@ -31,10 +31,27 @@ from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dawis_spark.operators.drift import bin_index, psi_from_counts
+from dawis_spark.streaming import detector
+
+
+def _add_to_histogram(
+    counts: list[int],
+    pdfs: Iterable[pd.DataFrame],
+    value_col: str,
+    ref_lo: float,
+    ref_hi: float,
+) -> None:
+    """Bin one micro-batch's rows into ``counts`` in place. NULL values
+    are skipped, the way a SQL aggregate ignores NULL (Arrow hands a
+    nullable column to pandas as NaN, which no bin can take)."""
+    for pdf in pdfs:
+        for x in pdf[value_col].dropna().tolist():
+            counts[bin_index(float(x), ref_lo, ref_hi, len(counts))] += 1
 
 
 def stream_psi_drift(
@@ -67,9 +84,7 @@ def stream_psi_drift(
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         counts = list(state.get[0]) if state.exists else [0] * n_bins
-        for pdf in pdfs:
-            for x in pdf[value_col]:
-                counts[bin_index(float(x), ref_lo, ref_hi, n_bins)] += 1
+        _add_to_histogram(counts, pdfs, value_col, ref_lo, ref_hi)
         state.update((counts,))
         n = sum(counts)
         if n:
@@ -147,9 +162,7 @@ def stream_psi_alerts(
             if state.exists
             else ([0] * n_bins, False)
         )
-        for pdf in pdfs:
-            for x in pdf[value_col]:
-                counts[bin_index(float(x), ref_lo, ref_hi, n_bins)] += 1
+        _add_to_histogram(counts, pdfs, value_col, ref_lo, ref_hi)
         n = sum(counts)
         if not alerted and n >= min_rows:
             psi = psi_from_counts(ref_counts, counts)
@@ -183,25 +196,9 @@ def psi_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "drift"):
     Returns the ``DataStreamWriter`` (foreachBatch) — callers attach
     checkpoint/trigger and ``start()``; delivery inherits the queue's
     at-least-once commit-after-send contract."""
-    from pyspark.sql import functions as F
-
-    key_col, *_ = alert_stream.columns
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        queue.add(
-            batch_df.select(
-                F.timestamp_millis(F.col("crossed_ms")).alias("date"),
-                F.lit(group).alias("group"),
-                F.concat(
-                    F.lit("PSI drift on "),
-                    F.col(key_col),
-                    F.lit(": psi="),
-                    F.round("psi", 4).cast("string"),
-                ).alias("message"),
-                F.to_json(F.struct(key_col, "n_rows", "psi")).alias("data"),
-            )
-        )
-
-    return alert_stream.writeStream.foreachBatch(sink)
+    key, *_ = alert_stream.columns
+    return detector.alerts_to_queue(
+        alert_stream, queue, group,
+        ["PSI drift on ", F.col(key), ": psi=", F.round("psi", 4).cast("string")],
+        [key, "n_rows", "psi"],
+    )

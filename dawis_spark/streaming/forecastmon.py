@@ -12,13 +12,9 @@ Where SPC asks "is this point far from the series' CENTER", this asks
 "is this point far from where the series was HEADED" — a trending
 series never breaches (the trend is the forecast), a trend BREAK does.
 
-Same state posture as streaming/spc.py: per-key state is the retained
-(bucket, cents) rollup series capped at ``max_history`` plus an
-``alerted`` latch; same-bucket redelivery REPLACES (idempotent). Each
-micro-batch replays ``first_holt_residual_breach`` — the SAME
-all-integer closed form the batch query and its DuckDB oracle use
-(operators/forecast.py) — over the retained union; the first crossing
-emits ONE alert row, then the latch holds.
+State, latch and queue sink: streaming/detector.py; the closed form is
+operators/forecast.first_holt_residual_breach, shared with the batch
+query and its DuckDB oracle.
 
 Per-tick consistency (tested, the msprt.py discipline): at every tick
 the decision is the closed form over the rollups retained so far, so
@@ -40,22 +36,11 @@ whether the final retained series breaches does not.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
 
 from dawis_spark.operators.forecast import first_holt_residual_breach
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        T.StructField("values", T.ArrayType(T.LongType()), True),
-        T.StructField("alerted", T.BooleanType(), True),
-    ]
-)
+from dawis_spark.streaming import detector
 
 
 def stream_forecast_residual_alerts(
@@ -80,60 +65,16 @@ def stream_forecast_residual_alerts(
     Scale: state per key = the capped (bucket, value) series + a bool;
     monitored keys are catalog-bounded; the alert stream is at most
     |keys| rows EVER. The replay is one O(retained) integer pass."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(bucket_col, T.LongType()),
-            T.StructField("forecast_cents", T.LongType()),
-            T.StructField("resid_cents", T.LongType()),
-            T.StructField("n_resid", T.LongType()),
-            T.StructField("crossed_ms", T.LongType()),
-        ]
-    )
 
-    def fold(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        fresh: dict = {}
-        for pdf in pdfs:
-            for b, v in zip(pdf[bucket_col].tolist(), pdf[cents_col].tolist()):
-                fresh[int(b)] = int(v)
-        hist: dict = {}
-        alerted = False
-        if state.exists:
-            prev_b, prev_v, alerted = state.get
-            hist = dict(zip(prev_b, prev_v))
-            alerted = bool(alerted)
-        hist.update(fresh)
-        kept = sorted(hist.items())[-max_history:]
+    def first_breach(kept):
+        if len(kept) < 2:
+            return None
+        hit = first_holt_residual_breach(kept, k_milli=k_milli, min_resid=min_resid)
+        return hit and hit[:4]
 
-        if not alerted and len(kept) > 1:
-            breach = first_holt_residual_breach(
-                kept, k_milli=k_milli, min_resid=min_resid
-            )
-            if breach is not None:
-                alerted = True
-                b, f, r, n, _ = breach
-                yield pd.DataFrame(
-                    {
-                        key_col: [str(key[0])],
-                        bucket_col: [b],
-                        "forecast_cents": [f],
-                        "resid_cents": [r],
-                        "n_resid": [n],
-                        "crossed_ms": [state.getCurrentProcessingTimeMs()],
-                    }
-                )
-        state.update(([b for b, _ in kept], [v for _, v in kept], alerted))
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector.latched_alerts(
+        stream_df, key_col, bucket_col, [cents_col],
+        ["forecast_cents", "resid_cents", "n_resid"], first_breach, max_history,
     )
 
 
@@ -146,38 +87,12 @@ def forecast_alerts_to_queue(
     bucket, predicted vs actual; data = the JSON context). Returns the
     foreachBatch ``DataStreamWriter``; delivery inherits the queue's
     at-least-once commit-after-send contract."""
-    from pyspark.sql import functions as F
-
-    key_col, bucket_col, *_ = alert_stream.columns
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        queue.add(
-            batch_df.select(
-                F.timestamp_millis(F.col("crossed_ms")).alias("date"),
-                F.lit(group).alias("group"),
-                F.concat(
-                    F.lit("Forecast surprise on "),
-                    F.col(key_col),
-                    F.lit(" at bucket "),
-                    F.col(bucket_col).cast("string"),
-                    F.lit(": predicted "),
-                    F.col("forecast_cents").cast("string"),
-                    F.lit("c, residual "),
-                    F.col("resid_cents").cast("string"),
-                    F.lit("c"),
-                ).alias("message"),
-                F.to_json(
-                    F.struct(
-                        F.col(key_col),
-                        F.col(bucket_col),
-                        "forecast_cents",
-                        "resid_cents",
-                        "n_resid",
-                    )
-                ).alias("data"),
-            )
-        )
-
-    return alert_stream.writeStream.foreachBatch(sink)
+    key, bucket, *_ = alert_stream.columns
+    return detector.alerts_to_queue(
+        alert_stream, queue, group,
+        ["Forecast surprise on ", F.col(key), " at bucket ",
+         F.col(bucket).cast("string"), ": predicted ",
+         F.col("forecast_cents").cast("string"), "c, residual ",
+         F.col("resid_cents").cast("string"), "c"],
+        [key, bucket, "forecast_cents", "resid_cents", "n_resid"],
+    )

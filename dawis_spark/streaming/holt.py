@@ -2,34 +2,23 @@
 ``holt_linear_forecast`` query: per-key trend-aware level tracking and
 h-step-ahead forecasts that refresh as daily rollup rows arrive.
 
-Same state posture as streaming/cusum.py: per-key state is the retained
-(bucket, value) history capped at ``max_history`` buckets — the input
-is a per-bucket rollup, so state is retention-window-sized, never
-event-volume-sized. Same-bucket redelivery REPLACES (idempotent). Each
-micro-batch folds the updated history through the SAME ``holt_fit``
-the batch operator uses (operators/forecast.py), so after any tick
-sequence the final tick's emitted forecasts equal the batch operator
-over the retained history — the module family's batch-equivalence
-contract, tested in tests/test_streaming_windows.py.
+State: streaming/detector.py.
+
+Each micro-batch folds the retained
+history through the SAME ``holt_fit`` the batch operator uses
+(operators/forecast.py), so after any tick sequence the final tick's
+emitted forecasts equal the batch operator over the retained history —
+the module family's batch-equivalence contract, tested in
+tests/test_streaming_windows.py.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dawis_spark.operators.forecast import holt_fit
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        T.StructField("values", T.ArrayType(T.LongType()), True),
-    ]
-)
+from dawis_spark.streaming import detector
 
 
 def stream_holt(
@@ -44,53 +33,19 @@ def stream_holt(
     emit, per key per batch, the refreshed h-step forecasts anchored at
     the latest retained bucket: (key, bucket, h, forecast, level,
     trend, n_points)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(bucket_col, T.LongType()),
-            T.StructField("h", T.IntegerType()),
-            T.StructField("forecast", T.LongType()),
-            T.StructField("level", T.LongType()),
-            T.StructField("trend", T.LongType()),
-            T.StructField("n_points", T.LongType()),
-        ]
-    )
 
-    def fold(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        fresh: dict = {}
-        for pdf in pdfs:
-            for b, v in zip(pdf[bucket_col].tolist(), pdf[cents_col].tolist()):
-                fresh[int(b)] = int(v)
-        hist: dict = {}
-        if state.exists:
-            prev_b, prev_v = state.get
-            hist = dict(zip(prev_b, prev_v))
-        hist.update(fresh)
-        kept = sorted(hist.items())[-max_history:]
-        state.update(([b for b, _ in kept], [v for _, v in kept]))
-
+    def score(fresh, kept):
         lvl, tr = holt_fit([v for _, v in kept])
         anchor = kept[-1][0]
-        yield pd.DataFrame(
-            {
-                key_col: [str(key[0])] * horizon,
-                bucket_col: [anchor] * horizon,
-                "h": list(range(1, horizon + 1)),
-                "forecast": [lvl + h * tr for h in range(1, horizon + 1)],
-                "level": [lvl] * horizon,
-                "trend": [tr] * horizon,
-                "n_points": [len(kept)] * horizon,
-            }
-        )
+        return [
+            (anchor, h, lvl + h * tr, lvl, tr, len(kept))
+            for h in range(1, horizon + 1)
+        ]
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector.scored_series(
+        stream_df, key_col, bucket_col, [cents_col], int,
+        [("h", T.IntegerType()), ("forecast", T.LongType()),
+         ("level", T.LongType()), ("trend", T.LongType()),
+         ("n_points", T.LongType())],
+        score, max_history,
     )

@@ -10,13 +10,10 @@ p_always_valid <= alpha" is not a heuristic — it is the test's own
 operating mode. PSI/CUSUM/Page-Hinkley/SPC watch a single series for
 drift; this one watches a CONTROL/TREATMENT pair for a real effect.
 
-State posture = streaming/spc.py: per experiment key the retained
-per-bucket arm rollups (n, sum, sumsq per arm; same-bucket redelivery
-REPLACES, so delivery is idempotent) capped at ``max_history``, plus an
-``alerted`` latch. Each batch folds the fresh rollups in and replays the
-closed form over the retained series — one shared function
-(``msprt_closed_form``) between the stream, the batch query shape, and
-the equivalence test.
+Per-key state is the retained per-bucket arm rollups (n, sum, sumsq per
+arm) plus the latch; state, latch and queue sink: streaming/detector.py.
+Each batch replays ``msprt_closed_form`` — one shared function between
+the stream, the batch query shape, and the equivalence test.
 
 Arithmetic: pooled plug-in variance s2 from the retained (nn, sx, sxx)
 moments — exact integer sums, cleared-denominator form; the normal
@@ -33,25 +30,12 @@ row per key ever.
 from __future__ import annotations
 
 import math
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
 
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        T.StructField("n0s", T.ArrayType(T.LongType()), True),
-        T.StructField("s0s", T.ArrayType(T.LongType()), True),
-        T.StructField("ss0s", T.ArrayType(T.LongType()), True),
-        T.StructField("n1s", T.ArrayType(T.LongType()), True),
-        T.StructField("s1s", T.ArrayType(T.LongType()), True),
-        T.StructField("ss1s", T.ArrayType(T.LongType()), True),
-        T.StructField("alerted", T.BooleanType(), True),
-    ]
-)
+from dawis_spark.streaming import detector
 
 Rollup = Tuple[int, int, int, int, int, int, int]
 # (bucket, n0, s0, ss0, n1, s1, ss1)
@@ -121,92 +105,22 @@ def stream_msprt_alerts(
     that earlier decision — the standard always-valid-inference
     behavior (any stopping time is valid; WHICH stopping time you hit
     depends on delivery order)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(bucket_col, T.LongType()),
-            T.StructField("p_milli", T.LongType()),
-            T.StructField("log_e_milli", T.LongType()),
-            T.StructField("n_ctrl", T.LongType()),
-            T.StructField("n_treat", T.LongType()),
-            T.StructField("crossed_ms", T.LongType()),
-        ]
-    )
 
-    def fold(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        fresh: dict[int, tuple] = {}
-        for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                d = row._asdict()
-                fresh[int(d[bucket_col])] = (
-                    int(d["n0"]),
-                    int(d["s0"]),
-                    int(d["ss0"]),
-                    int(d["n1"]),
-                    int(d["s1"]),
-                    int(d["ss1"]),
-                )
-        hist: dict[int, tuple] = {}
-        alerted = False
-        if state.exists:
-            bs, n0s, s0s, ss0s, n1s, s1s, ss1s, alerted = state.get
-            hist = {
-                b: (n0, s0, ss0, n1, s1, ss1)
-                for b, n0, s0, ss0, n1, s1, ss1 in zip(
-                    bs, n0s, s0s, ss0s, n1s, s1s, ss1s
-                )
-            }
-            alerted = bool(alerted)
-        hist.update(fresh)
-        kept = sorted(hist.items())[-max_history:]
-        series = [(b, *vals) for b, vals in kept]
-
-        if not alerted:
-            crossing = next(
-                (
-                    (b, cn0, cn1, ln_l, p)
-                    for b, cn0, cn1, ln_l, p in msprt_closed_form(series)
-                    if p <= alpha
-                ),
-                None,
-            )
-            if crossing is not None:
-                alerted = True
-                b, cn0, cn1, ln_l, p = crossing
-                yield pd.DataFrame(
-                    {
-                        key_col: [str(key[0])],
-                        bucket_col: [b],
-                        "p_milli": [round(p * 1000)],
-                        "log_e_milli": [round(ln_l * 1000)],
-                        "n_ctrl": [cn0],
-                        "n_treat": [cn1],
-                        "crossed_ms": [state.getCurrentProcessingTimeMs()],
-                    }
-                )
-        state.update(
+    def first_breach(kept):
+        walk = msprt_closed_form([(b, *v) for b, v in kept])
+        return next(
             (
-                [b for b, _ in kept],
-                [v[0] for _, v in kept],
-                [v[1] for _, v in kept],
-                [v[2] for _, v in kept],
-                [v[3] for _, v in kept],
-                [v[4] for _, v in kept],
-                [v[5] for _, v in kept],
-                alerted,
-            )
+                (b, round(p * 1000), round(ln_l * 1000), cn0, cn1)
+                for b, cn0, cn1, ln_l, p in walk
+                if p <= alpha
+            ),
+            None,
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector.latched_alerts(
+        stream_df, key_col, bucket_col, ["n0", "s0", "ss0", "n1", "s1", "ss1"],
+        ["p_milli", "log_e_milli", "n_ctrl", "n_treat"], first_breach,
+        max_history, state_fields=["n0s", "s0s", "ss0s", "n1s", "s1s", "ss1s"],
     )
 
 
@@ -217,37 +131,11 @@ def msprt_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "msprt"):
     crossing bucket, and always-valid p; data = the JSON context.
     Delivery inherits the queue's at-least-once commit-after-send
     contract."""
-    from pyspark.sql import functions as F
-
-    key_col, bucket_col, *_ = alert_stream.columns
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        queue.add(
-            batch_df.select(
-                F.timestamp_millis(F.col("crossed_ms")).alias("date"),
-                F.lit(group).alias("group"),
-                F.concat(
-                    F.lit("mSPRT significance on "),
-                    F.col(key_col),
-                    F.lit(" at bucket "),
-                    F.col(bucket_col).cast("string"),
-                    F.lit(" (p="),
-                    (F.col("p_milli") / 1000).cast("string"),
-                    F.lit(")"),
-                ).alias("message"),
-                F.to_json(
-                    F.struct(
-                        key_col,
-                        bucket_col,
-                        "p_milli",
-                        "log_e_milli",
-                        "n_ctrl",
-                        "n_treat",
-                    )
-                ).alias("data"),
-            )
-        )
-
-    return alert_stream.writeStream.foreachBatch(sink)
+    key, bucket, *_ = alert_stream.columns
+    return detector.alerts_to_queue(
+        alert_stream, queue, group,
+        ["mSPRT significance on ", F.col(key), " at bucket ",
+         F.col(bucket).cast("string"), " (p=",
+         (F.col("p_milli") / 1000).cast("string"), ")"],
+        [key, bucket, "p_milli", "log_e_milli", "n_ctrl", "n_treat"],
+    )

@@ -2,10 +2,9 @@
 ``page_hinkley_drift`` query, completing the detector family that feeds
 the alert queue: PSI (distribution drift, streaming/drift.py), CUSUM
 (level shift, streaming/cusum.py), PAGE-HINKLEY (sustained mean drift,
-this module). Same state posture as streaming/cusum.py: per-key state is
-the retained (bucket, v_cents) rollup series capped at ``max_history``
-(same-bucket redelivery REPLACES — idempotent) plus the single-shot
-``alerted`` latch.
+this module).
+
+State, latch and queue sink: streaming/detector.py.
 
 Arithmetic matches the batch query EXACTLY (integer cents end to end):
 dv_t = v_t - cum_t // t (truncating-division running mean), m_t = sum of
@@ -17,20 +16,10 @@ form — the family's batch-equivalence property, tested.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
 
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        T.StructField("values", T.ArrayType(T.LongType()), True),
-        T.StructField("alerted", T.BooleanType(), True),
-    ]
-)
+from dawis_spark.streaming import detector
 
 
 def ph_closed_form(series: list[tuple[int, int]]) -> list[tuple[int, int, bool]]:
@@ -66,59 +55,16 @@ def stream_page_hinkley_alerts(
     Scale: state per key = the capped retained series + a bool;
     monitored keys are catalog-bounded; the alert stream is at most
     |keys| rows ever."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(bucket_col, T.LongType()),
-            T.StructField("ph_cents", T.LongType()),
-            T.StructField("n_buckets", T.LongType()),
-            T.StructField("crossed_ms", T.LongType()),
-        ]
-    )
 
-    def fold(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        fresh: dict = {}
-        for pdf in pdfs:
-            for b, v in zip(pdf[bucket_col].tolist(), pdf[cents_col].tolist()):
-                fresh[int(b)] = int(v)
-        hist: dict = {}
-        alerted = False
-        if state.exists:
-            prev_b, prev_v, alerted = state.get
-            hist = dict(zip(prev_b, prev_v))
-            alerted = bool(alerted)
-        hist.update(fresh)
-        kept = sorted(hist.items())[-max_history:]
-
-        if not alerted:
-            alarm = next(
-                ((b, ph) for b, ph, fl in ph_closed_form(kept) if fl), None
-            )
-            if alarm is not None:
-                alerted = True
-                yield pd.DataFrame(
-                    {
-                        key_col: [str(key[0])],
-                        bucket_col: [alarm[0]],
-                        "ph_cents": [alarm[1]],
-                        "n_buckets": [len(kept)],
-                        "crossed_ms": [state.getCurrentProcessingTimeMs()],
-                    }
-                )
-        state.update(
-            ([b for b, _ in kept], [v for _, v in kept], alerted)
+    def first_breach(kept):
+        return next(
+            ((b, ph, len(kept)) for b, ph, fl in ph_closed_form(kept) if fl),
+            None,
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector.latched_alerts(
+        stream_df, key_col, bucket_col, [cents_col],
+        ["ph_cents", "n_buckets"], first_breach, max_history,
     )
 
 
@@ -127,27 +73,10 @@ def ph_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "mean-drift"
     third detector landing in the same ALERT_SCHEMA -> Dispatcher path.
     Returns the foreachBatch ``DataStreamWriter``; delivery inherits
     the queue's at-least-once commit-after-send contract."""
-    from pyspark.sql import functions as F
-
-    key_col, bucket_col, *_ = alert_stream.columns
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        queue.add(
-            batch_df.select(
-                F.timestamp_millis(F.col("crossed_ms")).alias("date"),
-                F.lit(group).alias("group"),
-                F.concat(
-                    F.lit("Page-Hinkley mean drift on "),
-                    F.col(key_col),
-                    F.lit(" at bucket "),
-                    F.col(bucket_col).cast("string"),
-                ).alias("message"),
-                F.to_json(
-                    F.struct(key_col, bucket_col, "ph_cents", "n_buckets")
-                ).alias("data"),
-            )
-        )
-
-    return alert_stream.writeStream.foreachBatch(sink)
+    key, bucket, *_ = alert_stream.columns
+    return detector.alerts_to_queue(
+        alert_stream, queue, group,
+        ["Page-Hinkley mean drift on ", F.col(key), " at bucket ",
+         F.col(bucket).cast("string")],
+        [key, bucket, "ph_cents", "n_buckets"],
+    )

@@ -2,13 +2,7 @@
 ``spc_xbar_breaches`` query (Shewhart individuals chart with the four
 Western Electric run rules, moving-range sigma).
 
-Same state posture as streaming/cusum.py: per-key state is the retained
-(bucket, cents) rollup series capped at ``max_history`` plus an
-``alerted`` latch. Each micro-batch folds the new final bucket rollups
-in (same-bucket redelivery REPLACES — idempotent), recomputes the
-chart limits over the retained series, and scores every retained bucket
-with the WE rules; the first batch whose recomputed chart breaches any
-rule emits ONE alert row, then the latch holds.
+State, latch and queue sink: streaming/detector.py.
 
 Arithmetic matches the batch query's semantics over the retained
 series: mu = mean, sigma = mean moving range / 1.128, rule flags off
@@ -24,20 +18,10 @@ landing in the same queue -> Dispatcher path.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
 
-_ALERT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        T.StructField("values", T.ArrayType(T.LongType()), True),
-        T.StructField("alerted", T.BooleanType(), True),
-    ]
-)
+from dawis_spark.streaming import detector
 
 
 def spc_closed_form(
@@ -108,64 +92,17 @@ def stream_spc_alerts(
     Scale: state per key = the capped (bucket, value) series + a bool;
     monitored keys are catalog-bounded; the alert stream is at most
     |keys| rows EVER."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(bucket_col, T.LongType()),
-            T.StructField("rule_mask", T.LongType()),
-            T.StructField("sigma_units_milli", T.LongType()),
-            T.StructField("n_buckets", T.LongType()),
-            T.StructField("crossed_ms", T.LongType()),
-        ]
-    )
 
-    def fold(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        fresh: dict = {}
-        for pdf in pdfs:
-            for b, v in zip(pdf[bucket_col].tolist(), pdf[cents_col].tolist()):
-                fresh[int(b)] = int(v)
-        hist: dict = {}
-        alerted = False
-        if state.exists:
-            prev_b, prev_v, alerted = state.get
-            hist = dict(zip(prev_b, prev_v))
-            alerted = bool(alerted)
-        hist.update(fresh)
-        kept = sorted(hist.items())[-max_history:]
+    def first_breach(kept):
+        return next(
+            ((b, m, u, len(kept)) for b, u, m in spc_closed_form(kept) if m > 0),
+            None,
+        )
 
-        if not alerted:
-            breach = next(
-                (
-                    (b, u, m)
-                    for b, u, m in spc_closed_form(kept)
-                    if m > 0
-                ),
-                None,
-            )
-            if breach is not None:
-                alerted = True
-                yield pd.DataFrame(
-                    {
-                        key_col: [str(key[0])],
-                        bucket_col: [breach[0]],
-                        "rule_mask": [breach[2]],
-                        "sigma_units_milli": [breach[1]],
-                        "n_buckets": [len(kept)],
-                        "crossed_ms": [state.getCurrentProcessingTimeMs()],
-                    }
-                )
-        state.update(([b for b, _ in kept], [v for _, v in kept], alerted))
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=_ALERT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector.latched_alerts(
+        stream_df, key_col, bucket_col, [cents_col],
+        ["rule_mask", "sigma_units_milli", "n_buckets"], first_breach,
+        max_history,
     )
 
 
@@ -176,10 +113,7 @@ def spc_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "spc"):
     bucket, and the fired-rule list; data = the JSON context). Returns
     the foreachBatch ``DataStreamWriter``; delivery inherits the
     queue's at-least-once commit-after-send contract."""
-    from pyspark.sql import functions as F
-
-    key_col, bucket_col, *_ = alert_stream.columns
-
+    key, bucket, *_ = alert_stream.columns
     rules = F.concat_ws(
         "+",
         *[
@@ -189,32 +123,9 @@ def spc_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "spc"):
             for j in range(4)
         ],
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        queue.add(
-            batch_df.select(
-                F.timestamp_millis(F.col("crossed_ms")).alias("date"),
-                F.lit(group).alias("group"),
-                F.concat(
-                    F.lit("SPC rule breach ("),
-                    rules,
-                    F.lit(") on "),
-                    F.col(key_col),
-                    F.lit(" at bucket "),
-                    F.col(bucket_col).cast("string"),
-                ).alias("message"),
-                F.to_json(
-                    F.struct(
-                        key_col,
-                        bucket_col,
-                        "rule_mask",
-                        "sigma_units_milli",
-                        "n_buckets",
-                    )
-                ).alias("data"),
-            )
-        )
-
-    return alert_stream.writeStream.foreachBatch(sink)
+    return detector.alerts_to_queue(
+        alert_stream, queue, group,
+        ["SPC rule breach (", rules, ") on ", F.col(key), " at bucket ",
+         F.col(bucket).cast("string")],
+        [key, bucket, "rule_mask", "sigma_units_milli", "n_buckets"],
+    )

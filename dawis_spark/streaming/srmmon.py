@@ -9,12 +9,7 @@ matter — the "stop reading metrics, assignment is broken" pager, which
 must fire while the experiment is still running, not in the nightly
 batch.
 
-Same state posture as streaming/spc.py: per-key state is the retained
-(bucket, n_a, n_b) rollup series capped at ``max_history`` plus an
-``alerted`` latch; same-bucket redelivery REPLACES (idempotent). Each
-micro-batch replays ``srm_closed_form`` — a pure function of the
-retained series, shared with the batch-equivalence test — and the
-first crossing emits one alert row, then the latch holds.
+State, latch and queue sink: streaming/detector.py.
 
 This is the SEVENTH detector in the measure->decide->deliver family
 (PSI, CUSUM, Page-Hinkley, SPC/WE, mSPRT, Holt-residual, SRM); its
@@ -25,25 +20,14 @@ the r14 consolidation's point.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
+
+from dawis_spark.streaming import detector
 
 # chi-square(1 dof) upper critical value at alpha = 0.05 — the batch
 # query's literal (queries/q06:_SRM_CRIT)
 SRM_CRIT = 3.841459
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buckets", T.ArrayType(T.LongType()), True),
-        T.StructField("nas", T.ArrayType(T.LongType()), True),
-        T.StructField("nbs", T.ArrayType(T.LongType()), True),
-        T.StructField("alerted", T.BooleanType(), True),
-    ]
-)
 
 
 def srm_closed_form(
@@ -93,74 +77,17 @@ def stream_srm_alerts(
     bool; monitored experiments are catalog-bounded; the alert stream
     is at most |keys| rows EVER. The replay is one O(retained) integer
     pass."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(bucket_col, T.LongType()),
-            T.StructField("cum_n_a", T.LongType()),
-            T.StructField("cum_n_b", T.LongType()),
-            T.StructField("chi2_milli", T.LongType()),
-            T.StructField("crossed_ms", T.LongType()),
-        ]
-    )
 
-    def fold(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        fresh: dict = {}
-        for pdf in pdfs:
-            for b, a, bb in zip(
-                pdf[bucket_col].tolist(),
-                pdf[na_col].tolist(),
-                pdf[nb_col].tolist(),
-            ):
-                fresh[int(b)] = (int(a), int(bb))
-        hist: dict = {}
-        alerted = False
-        if state.exists:
-            prev_b, prev_a, prev_bb, alerted = state.get
-            hist = {
-                b: (a, bb) for b, a, bb in zip(prev_b, prev_a, prev_bb)
-            }
-            alerted = bool(alerted)
-        hist.update(fresh)
-        kept = sorted(hist.items())[-max_history:]
-
-        if not alerted:
-            breach = next(
-                (row for row in srm_closed_form(kept, min_n=min_n) if row[4]),
-                None,
-            )
-            if breach is not None:
-                alerted = True
-                b, na, nb, chi2m, _ = breach
-                yield pd.DataFrame(
-                    {
-                        key_col: [str(key[0])],
-                        bucket_col: [b],
-                        "cum_n_a": [na],
-                        "cum_n_b": [nb],
-                        "chi2_milli": [chi2m],
-                        "crossed_ms": [state.getCurrentProcessingTimeMs()],
-                    }
-                )
-        state.update(
-            (
-                [b for b, _ in kept],
-                [a for _, (a, _) in kept],
-                [bb for _, (_, bb) in kept],
-                alerted,
-            )
+    def first_breach(kept):
+        return next(
+            (row[:4] for row in srm_closed_form(kept, min_n=min_n) if row[4]),
+            None,
         )
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return detector.latched_alerts(
+        stream_df, key_col, bucket_col, [na_col, nb_col],
+        ["cum_n_a", "cum_n_b", "chi2_milli"], first_breach, max_history,
+        state_fields=["nas", "nbs"],
     )
 
 
@@ -171,37 +98,11 @@ def srm_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "srm"):
     bucket, and the broken split; data = the JSON context). Returns the
     foreachBatch ``DataStreamWriter``; delivery inherits the queue's
     at-least-once commit-after-send contract."""
-    from pyspark.sql import functions as F
-
-    key_col, bucket_col, *_ = alert_stream.columns
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        queue.add(
-            batch_df.select(
-                F.timestamp_millis(F.col("crossed_ms")).alias("date"),
-                F.lit(group).alias("group"),
-                F.concat(
-                    F.lit("Sample-ratio mismatch on "),
-                    F.col(key_col),
-                    F.lit(" at bucket "),
-                    F.col(bucket_col).cast("string"),
-                    F.lit(": "),
-                    F.col("cum_n_a").cast("string"),
-                    F.lit(" vs "),
-                    F.col("cum_n_b").cast("string"),
-                ).alias("message"),
-                F.to_json(
-                    F.struct(
-                        key_col,
-                        bucket_col,
-                        "cum_n_a",
-                        "cum_n_b",
-                        "chi2_milli",
-                    )
-                ).alias("data"),
-            )
-        )
-
-    return alert_stream.writeStream.foreachBatch(sink)
+    key, bucket, *_ = alert_stream.columns
+    return detector.alerts_to_queue(
+        alert_stream, queue, group,
+        ["Sample-ratio mismatch on ", F.col(key), " at bucket ",
+         F.col(bucket).cast("string"), ": ", F.col("cum_n_a").cast("string"),
+         " vs ", F.col("cum_n_b").cast("string")],
+        [key, bucket, "cum_n_a", "cum_n_b", "chi2_milli"],
+    )

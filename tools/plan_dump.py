@@ -1,0 +1,49 @@
+"""Dump full `.explain("formatted")` for named queries into plans/<round>/.
+
+Usage:
+    python tools/plan_dump.py r17 before name1 name2 ...
+    python tools/plan_dump.py r17 after  name1 name2 ...
+
+Writes plans/<round>/<name>_<tag>.txt, so a plan claim can be checked
+against the before and after files. Reads the tables under
+``MINI_SF_DIR`` (default: the catalog's default scale-factor directory).
+"""
+
+from __future__ import annotations
+
+import io
+import os
+import sys
+from contextlib import redirect_stdout
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+
+def main() -> None:
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
+        sys.exit("usage: plan_dump.py <round> <before|after> <name>...")
+    round_, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    from dawis_spark import queries as q
+    from dawis_spark.catalog import DEFAULT_SF_DIR, register_testdata
+    from dawis_spark.session import get_spark
+
+    sf_dir = os.environ.get("MINI_SF_DIR", DEFAULT_SF_DIR)
+    spark = get_spark("dawis-plan-dump")
+    register_testdata(spark, sf_dir)
+    outdir = os.path.join(REPO, "plans", round_)
+    os.makedirs(outdir, exist_ok=True)
+    for name in names:
+        df = q.QUERIES[name](spark, sf_dir)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(outdir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(buf.getvalue())
+        spark.catalog.clearCache()
+        print(f"wrote {path} ({len(buf.getvalue())} bytes)", file=sys.stderr)
+
+
+if __name__ == "__main__":
+    main()
