@@ -75,7 +75,7 @@ def stream_robust_anomalies(
         return rows
 
     return detector.scored_series(
-        stream_df, key_col, bucket_col, [value_col], float,
+        stream_df, key_col, bucket_col, value_col, float,
         [(value_col, T.DoubleType()), ("robust_z", T.DoubleType()),
          ("is_anomaly", T.BooleanType())],
         score, max_history,

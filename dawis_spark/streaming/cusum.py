@@ -56,7 +56,7 @@ def stream_cusum(
         return [(b, *scored[b]) for b in sorted(fresh) if b in scored]
 
     return detector.scored_series(
-        stream_df, key_col, bucket_col, [cents_col], int,
+        stream_df, key_col, bucket_col, cents_col, int,
         [("cusum_scaled", T.LongType()), ("breached", T.BooleanType())],
         score, max_history,
     )
@@ -115,5 +115,4 @@ def cusum_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "shift"):
         alert_stream, queue, group,
         ["CUSUM level shift on ", F.col(key), " at bucket ",
          F.col(bucket).cast("string")],
-        [key, bucket, "cusum_scaled", "n_buckets"],
     )

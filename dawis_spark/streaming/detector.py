@@ -55,9 +55,10 @@ def merge_retained(
     one = len(value_cols) == 1
     fresh: dict = {}
     for pdf in pdfs:
-        pdf = pdf.dropna(subset=[bucket_col, *value_cols])
-        columns = [pdf[c].tolist() for c in value_cols]
-        for b, *vals in zip(pdf[bucket_col].tolist(), *columns):
+        columns = [pdf[c].tolist() for c in (bucket_col, *value_cols)]
+        for b, *vals in zip(*columns):
+            if pd.isna(b) or any(map(pd.isna, vals)):
+                continue
             fresh[int(b)] = cast(vals[0]) if one else tuple(map(cast, vals))
     hist: dict = {}
     if prev_state is not None:
@@ -72,8 +73,9 @@ def _state_arrays(kept: list, n_values: int) -> list:
     values = [v for _, v in kept]
     if n_values > 1:
         values = [[v[i] for v in values] for i in range(n_values)]
-        return [[b for b, _ in kept], *values]
-    return [[b for b, _ in kept], values]
+    else:
+        values = [values]
+    return [[b for b, _ in kept], *values]
 
 
 def _apply(
@@ -85,6 +87,8 @@ def _apply(
     cast: Callable[[Any], Any],
     latched: bool,
 ) -> DataFrame:
+    """The family's one ``applyInPandasWithState``: ``fold`` per key,
+    output ``(key, *out_fields)``, state in the layout above."""
     state = [T.StructField("buckets", T.ArrayType(T.LongType()), True)]
     state += [
         T.StructField(name, T.ArrayType(_ARRAY_ELEMENT[cast]), True)
@@ -107,35 +111,34 @@ def scored_series(
     stream: DataFrame,
     key_col: str,
     bucket_col: str,
-    value_cols: Sequence[str],
+    value_col: str,
     cast: Callable[[Any], Any],
     out_fields: Sequence[Tuple[str, T.DataType]],
     score: Callable[[dict, list], list],
     max_history: int,
-    state_fields: Sequence[str] = ("values",),
 ) -> DataFrame:
-    """Per-batch scoring over each key's retained series, no latch.
+    """Per-batch scoring over each key's retained ``values`` series, no
+    latch.
 
     ``score(fresh, kept)`` returns ``(bucket, *out)`` rows, one value
     per ``out_fields`` (name, type) pair; they are emitted as
     ``(key, bucket, *out)``. A key with nothing retained scores
     nothing."""
-    n_values = len(value_cols)
     names = [key_col, bucket_col, *(name for name, _ in out_fields)]
 
     def fold(key, pdfs, state):
         fresh, kept = merge_retained(
             state.get if state.exists else None,
-            pdfs, bucket_col, value_cols, cast, max_history,
+            pdfs, bucket_col, [value_col], cast, max_history,
         )
-        state.update(tuple(_state_arrays(kept, n_values)))
+        state.update(tuple(_state_arrays(kept, 1)))
         rows = score(fresh, kept) if kept else []
         if rows:
             yield pd.DataFrame([(str(key[0]), *r) for r in rows], columns=names)
 
     out = [T.StructField(bucket_col, T.LongType())]
     out += [T.StructField(name, dtype) for name, dtype in out_fields]
-    return _apply(stream, key_col, fold, out, state_fields, cast, latched=False)
+    return _apply(stream, key_col, fold, out, ["values"], cast, latched=False)
 
 
 def latched_alerts(
@@ -178,21 +181,18 @@ def latched_alerts(
 
 
 def alerts_to_queue(
-    alert_stream: DataFrame,
-    queue,
-    group: str,
-    message: Sequence[Any],
-    data_cols: Sequence[Any],
+    alert_stream: DataFrame, queue, group: str, message: Sequence[Any]
 ):
     """Wire an alert stream into the alert QUEUE (streaming/alerts.
     AlertQueue): each alert row becomes one ALERT_SCHEMA row. ``date``
     is the crossing time, ``message`` concatenates ``message``'s parts
     (a str is a literal, anything else a Column), and ``data`` is the
-    JSON of ``data_cols``, the context the Dispatcher templates render.
-    Returns the foreachBatch ``DataStreamWriter``: callers attach
-    checkpoint/trigger and ``start()``; delivery inherits the queue's
-    at-least-once commit-after-send contract."""
+    JSON of every other alert column, the context the Dispatcher
+    templates render. Returns the foreachBatch ``DataStreamWriter``:
+    callers attach checkpoint/trigger and ``start()``; delivery
+    inherits the queue's at-least-once commit-after-send contract."""
     text = F.concat(*(F.lit(p) if isinstance(p, str) else p for p in message))
+    data = [c for c in alert_stream.columns if c != "crossed_ms"]
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -202,7 +202,7 @@ def alerts_to_queue(
                 F.timestamp_millis(F.col("crossed_ms")).alias("date"),
                 F.lit(group).alias("group"),
                 text.alias("message"),
-                F.to_json(F.struct(*data_cols)).alias("data"),
+                F.to_json(F.struct(*data)).alias("data"),
             )
         )
 

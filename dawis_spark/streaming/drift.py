@@ -50,8 +50,9 @@ def _add_to_histogram(
     are skipped, the way a SQL aggregate ignores NULL (Arrow hands a
     nullable column to pandas as NaN, which no bin can take)."""
     for pdf in pdfs:
-        for x in pdf[value_col].dropna().tolist():
-            counts[bin_index(float(x), ref_lo, ref_hi, len(counts))] += 1
+        for x in pdf[value_col].tolist():
+            if not pd.isna(x):
+                counts[bin_index(float(x), ref_lo, ref_hi, len(counts))] += 1
 
 
 def stream_psi_drift(
@@ -200,5 +201,4 @@ def psi_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "drift"):
     return detector.alerts_to_queue(
         alert_stream, queue, group,
         ["PSI drift on ", F.col(key), ": psi=", F.round("psi", 4).cast("string")],
-        [key, "n_rows", "psi"],
     )

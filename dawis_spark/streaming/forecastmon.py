@@ -94,5 +94,4 @@ def forecast_alerts_to_queue(
          F.col(bucket).cast("string"), ": predicted ",
          F.col("forecast_cents").cast("string"), "c, residual ",
          F.col("resid_cents").cast("string"), "c"],
-        [key, bucket, "forecast_cents", "resid_cents", "n_resid"],
     )

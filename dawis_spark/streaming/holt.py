@@ -43,7 +43,7 @@ def stream_holt(
         ]
 
     return detector.scored_series(
-        stream_df, key_col, bucket_col, [cents_col], int,
+        stream_df, key_col, bucket_col, cents_col, int,
         [("h", T.IntegerType()), ("forecast", T.LongType()),
          ("level", T.LongType()), ("trend", T.LongType()),
          ("n_points", T.LongType())],

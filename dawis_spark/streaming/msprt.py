@@ -137,5 +137,4 @@ def msprt_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "msprt"):
         ["mSPRT significance on ", F.col(key), " at bucket ",
          F.col(bucket).cast("string"), " (p=",
          (F.col("p_milli") / 1000).cast("string"), ")"],
-        [key, bucket, "p_milli", "log_e_milli", "n_ctrl", "n_treat"],
     )

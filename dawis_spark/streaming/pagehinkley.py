@@ -78,5 +78,4 @@ def ph_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "mean-drift"
         alert_stream, queue, group,
         ["Page-Hinkley mean drift on ", F.col(key), " at bucket ",
          F.col(bucket).cast("string")],
-        [key, bucket, "ph_cents", "n_buckets"],
     )

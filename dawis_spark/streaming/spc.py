@@ -127,5 +127,4 @@ def spc_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "spc"):
         alert_stream, queue, group,
         ["SPC rule breach (", rules, ") on ", F.col(key), " at bucket ",
          F.col(bucket).cast("string")],
-        [key, bucket, "rule_mask", "sigma_units_milli", "n_buckets"],
     )

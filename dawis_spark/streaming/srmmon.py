@@ -104,5 +104,4 @@ def srm_alerts_to_queue(alert_stream: DataFrame, queue, group: str = "srm"):
         ["Sample-ratio mismatch on ", F.col(key), " at bucket ",
          F.col(bucket).cast("string"), ": ", F.col("cum_n_a").cast("string"),
          " vs ", F.col("cum_n_b").cast("string")],
-        [key, bucket, "cum_n_a", "cum_n_b", "chi2_milli"],
     )
