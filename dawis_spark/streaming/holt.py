@@ -4,12 +4,11 @@ h-step-ahead forecasts that refresh as daily rollup rows arrive.
 
 State: streaming/detector.py.
 
-Each micro-batch folds the retained
-history through the SAME ``holt_fit`` the batch operator uses
-(operators/forecast.py), so after any tick sequence the final tick's
-emitted forecasts equal the batch operator over the retained history —
-the module family's batch-equivalence contract, tested in
-tests/test_streaming_windows.py.
+Each micro-batch folds the retained history through the SAME
+``holt_fit`` the batch operator uses (operators/forecast.py), so after
+any tick sequence the final tick's emitted forecasts equal the batch
+operator over the retained history — the module family's
+batch-equivalence contract, tested in tests/test_streaming_windows.py.
 """
 
 from __future__ import annotations
