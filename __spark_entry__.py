@@ -11,12 +11,13 @@ adapter so the engine package stays importable on its own.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from dawis_spark import queries as _q  # noqa: E402
 

@@ -12,6 +12,14 @@ pass lists live in BENCH_LOCAL.json / BENCH_HISTORY.jsonl.
 
 Full cold+warm per-query detail goes to BENCH_LOCAL.json next to this file.
 
+Subset runs, for re-measuring a few queries while working on them:
+    python bench.py --only name1 name2 ...
+    python bench.py --top 20      # the 20 slowest warm entries of BENCH_LOCAL.json
+time the named queries with the same loop and print one JSON object
+{"queries": {name: {"cold", "warm", "raw"}}, "warm_total"}; they skip the
+calibration probes and write neither BENCH_LOCAL.json nor
+BENCH_HISTORY.jsonl.
+
 Each query executes fully via the noop datasource sink (forces the whole
 plan — unlike count(), which lets Catalyst prune the projection). The cache
 is cleared between queries so one operator's persist() (e.g. the MinHash
@@ -22,6 +30,7 @@ neighbours' leftovers.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -144,7 +153,73 @@ def _compact(payload: dict, warm: dict[str, float]) -> str:
         keep["_other"] = round(other, 2)
 
 
+def _time_query(spark, fn) -> tuple[float, list[float]]:
+    """One query's cold pass (build + first run) and its warm passes."""
+    t0 = time.time()
+    df = fn(spark, SF_DIR)
+    df.write.mode("overwrite").format("noop").save()
+    cold = time.time() - t0
+    # steady-state: plan already optimized + codegen compiled — the
+    # number that scales with data (cold includes one-time plan
+    # compilation, which amortizes to zero on real workloads). Two
+    # warm runs minimum: in a single shared JVM a single pass gets
+    # charged for a neighbour's GC pause — r3→r4 showed 2-4x phantom
+    # regressions on unchanged code from exactly that.
+    runs = []
+    for _ in range(2):
+        t0 = time.time()
+        df.write.mode("overwrite").format("noop").save()
+        runs.append(time.time() - t0)
+    # noise guard (VERDICT r10 #5: a GC hiccup hit BOTH warm passes of
+    # corpus_filter_pipeline in BENCH_r10 and shipped a 4.4x phantom):
+    # when the two warm passes disagree >1.5x, or the best warm pass
+    # is slower than the cold run (warm <= cold by construction —
+    # cold includes plan compilation), take a third pass so the
+    # median discards the outlier. Bounded cost: only noisy queries
+    # pay it.
+    if (min(runs) > 0.3 and max(runs) / min(runs) > 1.5) or min(
+        runs
+    ) > cold * 1.2:
+        t0 = time.time()
+        df.write.mode("overwrite").format("noop").save()
+        runs.append(time.time() - t0)
+    # drop any persist() an operator took out (minhash/ngram hash
+    # relations): storage-memory hygiene between queries
+    spark.catalog.clearCache()
+    return cold, runs
+
+
+def _subset(spark, queries: dict, names: list[str]) -> None:
+    out: dict[str, dict] = {}
+    for name in names:
+        cold, runs = _time_query(spark, queries[name])
+        out[name] = {
+            "cold": round(cold, 3),
+            "warm": round(statistics.median(runs), 3),
+            "raw": [round(r, 3) for r in runs],
+        }
+        print(
+            f"{name}: warm={out[name]['warm']} cold={out[name]['cold']}"
+            f" raw={out[name]['raw']}",
+            file=sys.stderr,
+        )
+    total = round(sum(v["warm"] for v in out.values()), 3)
+    print(json.dumps({"queries": out, "warm_total": total}, indent=1))
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    pick = ap.add_mutually_exclusive_group()
+    pick.add_argument("--only", nargs="+", metavar="NAME")
+    pick.add_argument("--top", type=int, metavar="N")
+    args = ap.parse_args()
+    repo = os.path.dirname(os.path.abspath(__file__))
+    names = args.only
+    if args.top:
+        with open(os.path.join(repo, "BENCH_LOCAL.json")) as fh:
+            base = json.load(fh)["queries"]
+        names = sorted(base, key=lambda k: -base[k])[: args.top]
+
     from dawis_spark import queries as q
     from dawis_spark.session import get_spark
 
@@ -156,6 +231,9 @@ def main() -> None:
     # shouldn't be charged for 10 parquet schema-footer reads.
     spark.range(1000).count()
     register_testdata(spark, SF_DIR)
+    if names:
+        _subset(spark, q.QUERIES, names)
+        return
     calibration = _calibration(spark)
 
     cold: dict[str, float] = {}
@@ -163,34 +241,8 @@ def main() -> None:
     warm_raw: dict[str, list[float]] = {}
     warm_passes: dict[str, int] = {}
     for name, fn in q.QUERIES.items():
-        t0 = time.time()
-        df = fn(spark, SF_DIR)
-        df.write.mode("overwrite").format("noop").save()
-        cold[name] = round(time.time() - t0, 3)
-        # steady-state: plan already optimized + codegen compiled — the
-        # number that scales with data (cold includes one-time plan
-        # compilation, which amortizes to zero on real workloads). Two
-        # warm runs minimum: in a single shared JVM a single pass gets
-        # charged for a neighbour's GC pause — r3→r4 showed 2-4x phantom
-        # regressions on unchanged code from exactly that.
-        runs = []
-        for _ in range(2):
-            t0 = time.time()
-            df.write.mode("overwrite").format("noop").save()
-            runs.append(time.time() - t0)
-        # noise guard (VERDICT r10 #5: a GC hiccup hit BOTH warm passes of
-        # corpus_filter_pipeline in BENCH_r10 and shipped a 4.4x phantom):
-        # when the two warm passes disagree >1.5x, or the best warm pass
-        # is slower than the cold run (warm <= cold by construction —
-        # cold includes plan compilation), take a third pass so the
-        # median discards the outlier. Bounded cost: only noisy queries
-        # pay it.
-        if (min(runs) > 0.3 and max(runs) / min(runs) > 1.5) or min(
-            runs
-        ) > cold[name] * 1.2:
-            t0 = time.time()
-            df.write.mode("overwrite").format("noop").save()
-            runs.append(time.time() - t0)
+        c, runs = _time_query(spark, fn)
+        cold[name] = round(c, 3)
         # the REPORTED number is the MEDIAN of the warm passes (VERDICT
         # r13 #4): min-of-N systematically reads ratchet-down luck as
         # improvement, and the committed same-box A/B (BENCH_HISTORY
@@ -201,9 +253,6 @@ def main() -> None:
         warm[name] = round(statistics.median(runs), 3)
         warm_raw[name] = [round(r, 3) for r in runs]
         warm_passes[name] = len(runs)
-        # drop any persist() an operator took out (minhash/ngram hash
-        # relations): storage-memory hygiene between queries
-        spark.catalog.clearCache()
 
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     try:
@@ -233,7 +282,6 @@ def main() -> None:
     )
     detail["value_norm"] = round(detail["value"] * norm_factor, 1)
     detail["norm_ref"] = NORM_REF
-    repo = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo, "BENCH_LOCAL.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
     # Full per-query history (VERDICT r8 #4): the driver's stdout tail is

@@ -62,15 +62,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-# last (sf_dir, tables) registered per live session — registration is
+# last sf_dir registered per live session — registration is
 # skipped only when the SAME views would be rebuilt; switching sf_dir on one
 # session re-registers (the views would otherwise point at the old data).
-_CURRENT: dict[int, tuple] = {}
+_CURRENT: dict[int, str] = {}
 
 
-def register_testdata(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, tables=TESTDATA_TABLES
-) -> None:
+def register_testdata(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every testdata table as a temp view (idempotent, memoized).
 
     Re-registration is memoized per session: schema-footer reads for 10
@@ -80,14 +78,13 @@ def register_testdata(
     Also pins the session timezone to UTC so timestamp semantics match the
     DuckDB oracle regardless of who built the SparkSession.
     """
-    key = (sf_dir, tuple(tables))
-    if _CURRENT.get(id(spark)) == key:
+    if _CURRENT.get(id(spark)) == sf_dir:
         return
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    for name in tables:
+    for name in TESTDATA_TABLES:
         if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
             load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _CURRENT[id(spark)] = key
+    _CURRENT[id(spark)] = sf_dir
 
 
 class Warehouse:

@@ -39,7 +39,6 @@ class ModuleConfig:
     name: str
     schedule: str | None = None
     runtime_limit: int = DEFAULT_MODULE_RUNTIME_LIMIT
-    database: str = "warehouse"
     settings: dict = field(default_factory=dict)
 
 
@@ -62,7 +61,6 @@ def _modules(section: dict) -> dict[str, ModuleConfig]:
             name=name,
             schedule=cfg.get("schedule"),
             runtime_limit=int(cfg.get("runtime_limit", DEFAULT_MODULE_RUNTIME_LIMIT)),
-            database=cfg.get("database", "warehouse"),
             settings=cfg.get("settings", {}),
         )
     return out

@@ -11,7 +11,11 @@ Conventions (driver contract, __spark_entry__.py):
   - float aggregates are rounded to a fixed precision on BOTH sides so the
     value-hash is insensitive to summation-order ulp differences;
   - date-ish outputs stay TIMESTAMP (never DATE) so pandas dtypes agree;
-  - each query registers the testdata views itself (idempotent).
+  - each query registers the testdata views itself (idempotent);
+  - a relation several queries build is defined once in ``_fragments.py``
+    (Spark builder next to its oracle SQL text) and called, not copied;
+    callers rename its columns with a ``select``, and a query that needs
+    a different relation keeps its own code.
 
 Scale notes are attached per query: the same plan must make sense at 100 TB
 on a 1000-executor cluster, not just at sf0.01.

@@ -9,6 +9,12 @@ from pyspark.sql import functions as F
 
 from dawis_spark.operators.similarity import TRAIN_SAMPLE_LIMIT
 from dawis_spark.plans.sql_runner import run_query
+from dawis_spark.queries._fragments import (
+    ann_recall_sql,
+    bm25_ctes,
+    exact_topk,
+    recall_at_k,
+)
 from dawis_spark.queries._registry import query
 
 # ---------------------------------------------------------------------------
@@ -2569,26 +2575,8 @@ _BM25_TERMS = ("spark", "hash", "window")
 
 
 def _bm25_oracle(k1: float, b: float, top_n: int) -> str:
-    toks = _TXT.tokens("text", "duck")
-    terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     return f"""
-WITH base AS (SELECT doc_id, {toks} AS __toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(__toks) AS DOUBLE) AS dl FROM base),
-stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl FROM dl),
-tk AS (SELECT doc_id, unnest(__toks) AS token FROM base),
-tf AS (
-  SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM tk
-  WHERE token IN ({terms}) GROUP BY doc_id, token
-),
-dfq AS (SELECT token, CAST(count(*) AS DOUBLE) AS df_t FROM tf GROUP BY token),
-scored AS (
-  SELECT tf.doc_id,
-         ln(1 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-           * (tf * ({k1} + 1))
-           / (tf + {k1} * (1 - {b} + {b} * dl.dl / avgdl)) AS contrib
-  FROM tf JOIN dfq USING (token) JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-)
+{bm25_ctes(_BM25_TERMS, k1, b, "scored")}
 SELECT doc_id, ROUND(SUM(contrib), 6) AS bm25
 FROM scored GROUP BY doc_id
 ORDER BY bm25 DESC, doc_id LIMIT {top_n}
@@ -3282,59 +3270,27 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q20_SQL)
 
 
-def _ann_recall_oracle(k: int) -> str:
-    exact = _embedding_topk_oracle(k, 10).strip()
-    approx = _ann_lsh_oracle(k, 10, 4, 64).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-approx_r AS (SELECT * FROM ({approx}))
-SELECT e.query_id,
-  CAST(COUNT(a.neighbor_id) AS BIGINT) AS hits,
-  ROUND(CAST(COUNT(a.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_at_k
-FROM exact_r e
-LEFT JOIN approx_r a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_lsh", oracle=_ann_recall_oracle(5))
+@query(
+    "ann_recall_lsh",
+    oracle=ann_recall_sql(
+        _embedding_topk_oracle(5, 10), _ann_lsh_oracle(5, 10, 4, 64), 5
+    ),
+)
 def ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-evaluation of the ANN index: recall@5 of the sign-LSH path
     against the exact brute-force top-5, per query — the metric an index
     tuner watches when trading planes/probes against recall. Both sides
     reuse the production operators; the comparison join is on
     (query_id, neighbor_id) — top-k-sized, negligible at any scale."""
-    from dawis_spark.operators.similarity import brute_force_topk, lsh_ann_topk
+    from dawis_spark.operators.similarity import lsh_ann_topk
 
     emb = spark.table("embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(
-        corpus=emb, queries=queries_df, id_col="vec_id",
-        vec_col="embedding", k=5,
-    ).select("query_id", "neighbor_id")
     approx = lsh_ann_topk(
         corpus=emb, queries=queries_df, id_col="vec_id",
         vec_col="embedding", k=5, n_planes=4, dim=64,
-    ).select(
-        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
     )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"])
-        & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
-    )
-    return (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("a_nid").cast("bigint").alias("hits"),
-            F.round(F.count("a_nid").cast("double") / F.lit(5), 6).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return recall_at_k(exact_topk(emb, 5), approx, 5)
 
 
 # skew profile legs: (key name, table, key column) — the three join keys
@@ -3457,58 +3413,26 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_recall_multiprobe_oracle(k: int) -> str:
-    exact = _embedding_topk_oracle(k, 10).strip()
-    approx = _ann_lsh_multiprobe_oracle(k, 10, 4, 64).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-approx_r AS (SELECT * FROM ({approx}))
-SELECT e.query_id,
-  CAST(COUNT(a.neighbor_id) AS BIGINT) AS hits,
-  ROUND(CAST(COUNT(a.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_at_k
-FROM exact_r e
-LEFT JOIN approx_r a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_lsh_multiprobe", oracle=_ann_recall_multiprobe_oracle(5))
+@query(
+    "ann_recall_lsh_multiprobe",
+    oracle=ann_recall_sql(
+        _embedding_topk_oracle(5, 10), _ann_lsh_multiprobe_oracle(5, 10, 4, 64), 5
+    ),
+)
 def ann_recall_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@5 of the MULTI-PROBE sign-LSH path against exact brute-force
     — the companion metric to ann_recall_lsh that quantifies what the
     Hamming-1 probe set buys (0.36 -> 0.76 recall on this corpus at
     sf0.01). Same top-k-sized comparison join."""
-    from dawis_spark.operators.similarity import brute_force_topk, lsh_ann_topk
+    from dawis_spark.operators.similarity import lsh_ann_topk
 
     emb = spark.table("embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(
-        corpus=emb, queries=queries_df, id_col="vec_id",
-        vec_col="embedding", k=5,
-    ).select("query_id", "neighbor_id")
     approx = lsh_ann_topk(
         corpus=emb, queries=queries_df, id_col="vec_id",
         vec_col="embedding", k=5, n_planes=4, dim=64, multi_probe=True,
-    ).select(
-        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
     )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"])
-        & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
-    )
-    return (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("a_nid").cast("bigint").alias("hits"),
-            F.round(F.count("a_nid").cast("double") / F.lit(5), 6).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return recall_at_k(exact_topk(emb, 5), approx, 5)
 
 
 def _chunk_docs_oracle(chunk: int, overlap: int) -> str:
@@ -4134,78 +4058,35 @@ def embedding_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def _ann_recall_pq_oracle(k: int) -> str:
-    exact = _embedding_topk_oracle(k, 10).strip()
-    approx = _pq_ann_oracle(k, 10, 4, 16, 16).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-approx_r AS (SELECT * FROM ({approx}))
-SELECT e.query_id,
-  CAST(COUNT(a.neighbor_id) AS BIGINT) AS hits,
-  ROUND(CAST(COUNT(a.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_at_k
-FROM exact_r e
-LEFT JOIN approx_r a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_pq", oracle=_ann_recall_pq_oracle(5))
+@query(
+    "ann_recall_pq",
+    oracle=ann_recall_sql(
+        _embedding_topk_oracle(5, 10), _pq_ann_oracle(5, 10, 4, 16, 16), 5
+    ),
+)
 def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the PQ ADC scan against exact brute force, per query —
     the metric that tunes M/Ks (code budget) against quality, completing
     the self-eval set (LSH, multiprobe, PQ). Both sides reuse the
     production operators; the comparison join is top-k-sized."""
-    from dawis_spark.operators.similarity import brute_force_topk, pq_topk, pq_train
+    from dawis_spark.operators.similarity import pq_topk, pq_train
 
     emb = spark.table("embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10)
     books = pq_train(emb, "vec_id", "embedding", n_subspaces=4, n_codes=16)
-    exact = brute_force_topk(
-        corpus=emb, queries=queries_df, id_col="vec_id",
-        vec_col="embedding", k=5,
-    ).select("query_id", "neighbor_id")
     approx = pq_topk(
         corpus=emb, queries=queries_df, id_col="vec_id",
         vec_col="embedding", k=5, books=books,
-    ).select(
-        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
     )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"])
-        & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
-    )
-    return (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("a_nid").cast("bigint").alias("hits"),
-            F.round(F.count("a_nid").cast("double") / F.lit(5), 6).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return recall_at_k(exact_topk(emb, 5), approx, 5)
 
 
-def _ann_recall_ivfadc_oracle(k: int) -> str:
-    exact = _embedding_topk_oracle(k, 10).strip()
-    approx = _ivfadc_oracle(k, 10, 16, 4, 4, 16, 16, 64).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-approx_r AS (SELECT * FROM ({approx}))
-SELECT e.query_id,
-  CAST(COUNT(a.neighbor_id) AS BIGINT) AS hits,
-  ROUND(CAST(COUNT(a.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_at_k
-FROM exact_r e
-LEFT JOIN approx_r a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_ivfadc", oracle=_ann_recall_ivfadc_oracle(5))
+@query(
+    "ann_recall_ivfadc",
+    oracle=ann_recall_sql(
+        _embedding_topk_oracle(5, 10), _ivfadc_oracle(5, 10, 16, 4, 4, 16, 16, 64), 5
+    ),
+)
 def ann_recall_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the full production ANN pipeline (trained-quantizer
     residual IVFPQ) against exact brute force, per query — the self-eval
@@ -4213,40 +4094,16 @@ def ann_recall_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes + 4-probe search) holds quality, completing the recall set
     (LSH, multiprobe, PQ, IVFADC). Both sides reuse the production
     operators; the comparison join is top-k-sized."""
-    from dawis_spark.operators.similarity import (
-        brute_force_topk,
-        ivfpq_residual_ann_topk,
-    )
+    from dawis_spark.operators.similarity import ivfpq_residual_ann_topk
 
     emb = spark.table("embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(
-        corpus=emb, queries=queries_df, id_col="vec_id",
-        vec_col="embedding", k=5,
-    ).select("query_id", "neighbor_id")
     approx = ivfpq_residual_ann_topk(
         corpus=emb, queries=queries_df, id_col="vec_id",
         vec_col="embedding", k=5, n_centroids=16, n_probe=4,
         n_subspaces=4, n_codes=16,
-    ).select(
-        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
     )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"])
-        & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
-    )
-    return (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("a_nid").cast("bigint").alias("hits"),
-            F.round(F.count("a_nid").cast("double") / F.lit(5), 6).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return recall_at_k(exact_topk(emb, 5), approx, 5)
 
 
 _SESSION_WINDOW_ORACLE = """

@@ -8,6 +8,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dawis_spark.catalog import register_testdata
+from dawis_spark.queries._fragments import (
+    TRADE_EDGES_CTES,
+    ann_recall_sql,
+    bm25_ctes,
+    exact_topk,
+    recall_at_k,
+    recall_col,
+    recall_sql,
+    trade_edges,
+)
 from dawis_spark.queries._registry import query
 from dawis_spark.queries.q01_spine_dedup_ann import (
     _BM25_TERMS,
@@ -315,23 +325,12 @@ def embedding_filtered_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def _ann_recall_filtered_ivf_oracle(k: int) -> str:
-    exact = _filtered_topk_oracle(k, 10, 3).strip()
-    approx = _filtered_ivf_oracle(k, 10, 8, 3, 64, 3).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-approx_r AS (SELECT * FROM ({approx}))
-SELECT e.query_id,
-  CAST(COUNT(a.neighbor_id) AS BIGINT) AS hits,
-  ROUND(CAST(COUNT(a.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_at_k
-FROM exact_r e
-LEFT JOIN approx_r a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_filtered_ivf", oracle=_ann_recall_filtered_ivf_oracle(5))
+@query(
+    "ann_recall_filtered_ivf",
+    oracle=ann_recall_sql(
+        _filtered_topk_oracle(5, 10, 3), _filtered_ivf_oracle(5, 10, 8, 3, 64, 3), 5
+    ),
+)
 def ann_recall_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the composed filtered-IVF path against the exact
     filtered brute-force baseline, per query — proves the composition
@@ -350,25 +349,8 @@ def ann_recall_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = ivf_ann_topk(
         corpus=filtered, queries=queries_df, id_col="vec_id",
         vec_col="embedding", k=5, n_centroids=8, n_probe=3,
-    ).select(
-        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
     )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"])
-        & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
-    )
-    return (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("a_nid").cast("bigint").alias("hits"),
-            F.round(F.count("a_nid").cast("double") / F.lit(5), 6).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return recall_at_k(exact, approx, 5)
 
 
 def _kmv_oracle(k: int) -> str:
@@ -761,32 +743,11 @@ def ann_recall_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     trunc = emb.select(
         "vec_id", F.expr("slice(embedding, 1, 16)").alias("embedding")
     )
-    exact = brute_force_topk(
-        corpus=emb, queries=emb.filter(F.col("vec_id") < 10),
-        id_col="vec_id", vec_col="embedding", k=5,
-    ).select("query_id", "neighbor_id")
     approx = brute_force_topk(
         corpus=trunc, queries=trunc.filter(F.col("vec_id") < 10),
         id_col="vec_id", vec_col="embedding", k=5,
-    ).select(
-        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
     )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"])
-        & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
-    )
-    return (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("a_nid").cast("bigint").alias("hits"),
-            F.round(F.count("a_nid").cast("double") / F.lit(5), 6).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return recall_at_k(exact_topk(emb, 5), approx, 5)
 
 
 def _scd2_oracle() -> str:
@@ -1508,15 +1469,7 @@ def _pagerank_oracle(iterations: int, top_n: int) -> str:
     from dawis_spark.operators.graph import pagerank_oracle_ctes
 
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {TRADE_EDGES_CTES},
 {pagerank_oracle_ctes('edges', iterations)}
 SELECT node, rank_scaled,
        round(CAST(rank_scaled AS DOUBLE) / 1e12, 6) AS rank
@@ -1548,32 +1501,7 @@ def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the 10x rehearsal for identical results."""
     from dawis_spark.operators.graph import pagerank
 
-    pairs = (
-        spark.table("lineitem")
-        .join(
-            spark.table("orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    # symmetrize with one explode (r15): the 2-leg union evaluated the
-    # lineitem-orders distinct-pair join twice at materialization
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-                    F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .persist()
-    )
+    edges = trade_edges(spark).persist()
     return (
         pagerank(edges, iterations=3)
         .select(
@@ -1638,66 +1566,29 @@ def embedding_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def _ann_recall_sq8_oracle(k: int) -> str:
-    exact = _embedding_topk_oracle(k, 10).strip()
-    approx = _sq8_ann_oracle(k, 10, 64).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-approx_r AS (SELECT * FROM ({approx}))
-SELECT e.query_id,
-  CAST(COUNT(a.neighbor_id) AS BIGINT) AS hits,
-  ROUND(CAST(COUNT(a.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_at_k
-FROM exact_r e
-LEFT JOIN approx_r a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_sq8", oracle=_ann_recall_sq8_oracle(5))
+@query(
+    "ann_recall_sq8",
+    oracle=ann_recall_sql(
+        _embedding_topk_oracle(5, 10), _sq8_ann_oracle(5, 10, 64), 5
+    ),
+)
 def ann_recall_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the SQ8 asymmetric scan against exact brute force —
     the quantization family's accuracy dial (expected ≈ 1.0 at 8 bits
     per dimension; drops appear only when [lo, hi] is stretched by
     outlier dimensions). Completes the self-eval set: LSH, multiprobe,
     IVF, PQ, IVFPQ, IVFADC, filtered-IVF, SQ8."""
-    from dawis_spark.operators.similarity import (
-        brute_force_topk,
-        sq8_encode,
-        sq8_stats,
-        sq8_topk,
-    )
+    from dawis_spark.operators.similarity import sq8_encode, sq8_stats, sq8_topk
 
     emb = spark.table("embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(
-        corpus=emb, queries=queries_df, id_col="vec_id",
-        vec_col="embedding", k=5,
-    ).select("query_id", "neighbor_id")
     stats = sq8_stats(emb, "embedding", dim=64).persist()
     codes = sq8_encode(emb, "vec_id", "embedding", stats, dim=64)
     approx = sq8_topk(
         codes, stats, queries_df, id_col="vec_id", vec_col="embedding",
         k=5, dim=64,
-    ).select(
-        F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid")
     )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"])
-        & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
-    )
-    return (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("a_nid").cast("bigint").alias("hits"),
-            F.round(F.count("a_nid").cast("double") / F.lit(5), 6).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return recall_at_k(exact_topk(emb, 5), approx, 5)
 
 
 def _bloom_oracle(m: int, d: int) -> str:
@@ -1892,27 +1783,17 @@ def embedding_ann_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def _ann_recall_refined_oracle(k: int) -> str:
-    exact = _embedding_topk_oracle(k, 10).strip()
-    raw = _ivfpq_oracle(k, 10, 16, 4, 4, 16, 16, 64).strip()
-    refined = _ivfpq_refine_oracle(k, 3, 10, 16, 4, 4, 16, 16, 64).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-raw_r AS (SELECT * FROM ({raw})),
-ref_r AS (SELECT * FROM ({refined}))
-SELECT e.query_id,
-  ROUND(CAST(COUNT(r1.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_ivfpq,
-  ROUND(CAST(COUNT(r2.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_refined
-FROM exact_r e
-LEFT JOIN raw_r r1
-  ON e.query_id = r1.query_id AND e.neighbor_id = r1.neighbor_id
-LEFT JOIN ref_r r2
-  ON e.query_id = r2.query_id AND e.neighbor_id = r2.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_refined", oracle=_ann_recall_refined_oracle(5))
+@query(
+    "ann_recall_refined",
+    oracle=recall_sql(
+        _embedding_topk_oracle(5, 10),
+        [
+            ("raw_r", "r1", _ivfpq_oracle(5, 10, 16, 4, 4, 16, 16, 64)),
+            ("ref_r", "r2", _ivfpq_refine_oracle(5, 3, 10, 16, 4, 4, 16, 16, 64)),
+        ],
+        [recall_col("r1", 5, "recall_ivfpq"), recall_col("r2", 5, "recall_refined")],
+    ),
+)
 def ann_recall_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of raw IVFPQ vs refined IVFPQ against exact brute force,
     per query — the self-eval that justifies the refine stage's extra
@@ -1921,7 +1802,6 @@ def ann_recall_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     training feeds all approximate sides; the comparison joins are
     top-k-sized."""
     from dawis_spark.operators.similarity import (
-        brute_force_topk,
         ivfpq_ann_topk,
         pq_train,
         refine_exact,
@@ -1935,13 +1815,7 @@ def ann_recall_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted (r15): the exact ground truth feeds both recall joins —
     # its corpus×queries scoring pass sits under a broadcast nested loop
     # (no exchange for ReuseExchange to dedupe). queries×k rows.
-    exact = (
-        brute_force_topk(
-            corpus=emb, queries=qs, id_col="vec_id", vec_col="embedding", k=5
-        )
-        .select("query_id", "neighbor_id")
-        .persist()
-    )
+    exact = exact_topk(emb, 5).persist()
     # ONE ADC candidate pool serves both branches (r15): the raw IVFPQ
     # top-5 is by definition ranks 1..5 of the k*refine_factor pool the
     # refine stage starts from (same deterministic (desc cosine, asc id)
@@ -3002,51 +2876,30 @@ def embedding_ann_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def _ann_recall_nsw_oracle(k: int) -> str:
-    exact = _embedding_topk_oracle(k, 10).strip()
-    nsw = _nsw_oracle(k, 10, 8, 2, 4, 10, 2, 64).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-nsw_r AS (SELECT * FROM ({nsw}))
-SELECT e.query_id,
-  ROUND(CAST(COUNT(r.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_nsw
-FROM exact_r e
-LEFT JOIN nsw_r r
-  ON e.query_id = r.query_id AND e.neighbor_id = r.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_nsw", oracle=_ann_recall_nsw_oracle(5))
+@query(
+    "ann_recall_nsw",
+    oracle=recall_sql(
+        _embedding_topk_oracle(5, 10),
+        [("nsw_r", "r", _nsw_oracle(5, 10, 8, 2, 4, 10, 2, 64))],
+        [recall_col("r", 5, "recall_nsw")],
+    ),
+)
 def ann_recall_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the NSW beam search against exact brute force, per
     query — the same self-eval discipline as every other ANN family
     (one shared quantizer training feeds the approximate side)."""
     from dawis_spark.operators.nsw import nsw_ann_topk
-    from dawis_spark.operators.similarity import brute_force_topk, train_kmeans
+    from dawis_spark.operators.similarity import train_kmeans
 
     emb = spark.table("embeddings")
     qs = emb.filter(F.col("vec_id") < 10)
     cents = train_kmeans(emb, "vec_id", "embedding", k=8, iterations=1)
-    exact = brute_force_topk(
-        corpus=emb, queries=qs, id_col="vec_id", vec_col="embedding", k=5
-    ).select("query_id", "neighbor_id")
     approx = nsw_ann_topk(
         emb, qs, "vec_id", "embedding",
         k=5, n_probe=2, m=4, beam=10, hops=2, centroids=cents,
-    ).select(F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid"))
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"])
-        & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
     )
-    return (
-        joined.groupBy("query_id")
-        .agg(
-            F.round(F.count("a_nid").cast("double") / 5, 6).alias("recall_nsw"),
-        )
-        .orderBy("query_id")
+    return recall_at_k(exact_topk(emb, 5), approx, 5).select(
+        "query_id", F.col("recall_at_k").alias("recall_nsw")
     )
 
 
@@ -3226,47 +3079,25 @@ def embedding_ann_bq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def _ann_recall_bq_oracle(k: int) -> str:
-    exact = _embedding_topk_oracle(k, 10).strip()
-    bq = _bq_oracle(k, 8, 10, 64).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-bq_r AS (SELECT * FROM ({bq}))
-SELECT e.query_id,
-  ROUND(CAST(COUNT(r.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_bq
-FROM exact_r e
-LEFT JOIN bq_r r
-  ON e.query_id = r.query_id AND e.neighbor_id = r.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_bq", oracle=_ann_recall_bq_oracle(5))
+@query(
+    "ann_recall_bq",
+    oracle=recall_sql(
+        _embedding_topk_oracle(5, 10),
+        [("bq_r", "r", _bq_oracle(5, 8, 10, 64))],
+        [recall_col("r", 5, "recall_bq")],
+    ),
+)
 def ann_recall_bq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of BQ+rescore against exact brute force, per query —
     prices the 32x compression in recall, the same self-eval discipline
     as every other ANN family."""
     from dawis_spark.operators.bq import bq_topk
-    from dawis_spark.operators.similarity import brute_force_topk
 
     emb = spark.table("embeddings")
     qs = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(
-        corpus=emb, queries=qs, id_col="vec_id", vec_col="embedding", k=5
-    ).select("query_id", "neighbor_id")
-    approx = bq_topk(
-        emb, qs, "vec_id", "embedding", k=5, refine_factor=8, dim=64
-    ).select(F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid"))
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["a_qid"])
-        & (exact["neighbor_id"] == approx["a_nid"]),
-        "left",
-    )
-    return (
-        joined.groupBy("query_id")
-        .agg(F.round(F.count("a_nid").cast("double") / 5, 6).alias("recall_bq"))
-        .orderBy("query_id")
+    approx = bq_topk(emb, qs, "vec_id", "embedding", k=5, refine_factor=8, dim=64)
+    return recall_at_k(exact_topk(emb, 5), approx, 5).select(
+        "query_id", F.col("recall_at_k").alias("recall_bq")
     )
 
 
@@ -3405,27 +3236,9 @@ def bpe_segmented_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hybrid_rrf_oracle(depth: int, k_rrf: int, top_n: int) -> str:
-    toks = _TXT.tokens("text", "duck")
-    terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     cos = _VEC.cosine("q.vec", "c.vec", "duck")
     return f"""
-WITH base AS (SELECT doc_id, {toks} AS __toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(__toks) AS DOUBLE) AS dl FROM base),
-stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl FROM dl),
-tk AS (SELECT doc_id, unnest(__toks) AS token FROM base),
-tf AS (
-  SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM tk
-  WHERE token IN ({terms}) GROUP BY doc_id, token
-),
-dfq AS (SELECT token, CAST(count(*) AS DOUBLE) AS df_t FROM tf GROUP BY token),
-bscored AS (
-  SELECT tf.doc_id,
-         ln(1 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-           * (tf * (1.2 + 1))
-           / (tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / avgdl)) AS contrib
-  FROM tf JOIN dfq USING (token) JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-),
+{bm25_ctes(_BM25_TERMS, 1.2, 0.75, "bscored")},
 bagg AS (
   SELECT doc_id, ROUND(SUM(contrib), 6) AS bm25
   FROM bscored GROUP BY doc_id

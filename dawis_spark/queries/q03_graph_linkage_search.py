@@ -7,6 +7,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dawis_spark.queries._fragments import (
+    DAILY_REV_ORDERS_CTE,
+    DAILY_TYPE_CENTS_SQL,
+    TRADE_EDGES_CTES,
+    bm25_ctes,
+    daily_rev_orders,
+    daily_type_cents,
+    exact_topk,
+    recall_at_k,
+    recall_col,
+    recall_sql,
+    trade_edges,
+    trade_lines,
+    trade_nodes,
+)
 from dawis_spark.queries._registry import query
 from dawis_spark.queries.q01_spine_dedup_ann import (
     _BANDS,
@@ -1102,11 +1117,9 @@ def ctr_wilson_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CUSUM_ORACLE = """
+_CUSUM_ORACLE = f"""
 WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2),
+  {DAILY_TYPE_CENTS_SQL}),
 ref AS (
   SELECT event_type,
          CAST(SUM(v) AS BIGINT) AS tot, CAST(COUNT(*) AS BIGINT) AS nd
@@ -1149,15 +1162,7 @@ def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     divides — int64 end to end."""
     from pyspark.sql import Window
 
-    daily = (
-        spark.table("events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    daily = daily_type_cents(spark)
     ref = daily.groupBy("event_type").agg(
         F.sum("v").cast("bigint").alias("tot"),
         F.count(F.lit(1)).cast("bigint").alias("nd"),
@@ -1988,22 +1993,14 @@ def embedding_ann_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def _ann_recall_jl_oracle(k: int) -> str:
-    exact = _embedding_topk_oracle(k, 10).strip()
-    jl = _jl_oracle(k, 10, 64, 16).strip()
-    return f"""
-WITH exact_r AS (SELECT * FROM ({exact})),
-jl_r AS (SELECT * FROM ({jl}))
-SELECT e.query_id,
-  ROUND(CAST(COUNT(r.neighbor_id) AS DOUBLE) / {k}, 6) AS recall_jl
-FROM exact_r e
-LEFT JOIN jl_r r
-  ON e.query_id = r.query_id AND e.neighbor_id = r.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-@query("ann_recall_jl", oracle=_ann_recall_jl_oracle(5))
+@query(
+    "ann_recall_jl",
+    oracle=recall_sql(
+        _embedding_topk_oracle(5, 10),
+        [("jl_r", "r", _jl_oracle(5, 10, 64, 16))],
+        [recall_col("r", 5, "recall_jl")],
+    ),
+)
 def ann_recall_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the 16-dim JL search against exact 64-dim brute
     force, per query — prices the 4x geometry compression in recall,
@@ -2012,10 +2009,6 @@ def ann_recall_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dawis_spark.operators.similarity import brute_force_topk
 
     emb = spark.table("embeddings")
-    qs = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(
-        corpus=emb, queries=qs, id_col="vec_id", vec_col="embedding", k=5
-    ).select("query_id", "neighbor_id")
     p = jl_project(emb, "vec_id", "embedding", 64, 16)
     approx = brute_force_topk(
         corpus=p,
@@ -2023,17 +2016,9 @@ def ann_recall_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="vec_id",
         vec_col="proj",
         k=5,
-    ).select(F.col("query_id").alias("a_qid"), F.col("neighbor_id").alias("a_nid"))
-    return (
-        exact.join(
-            approx,
-            (F.col("query_id") == F.col("a_qid"))
-            & (F.col("neighbor_id") == F.col("a_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(F.round(F.count("a_nid") / 5, 6).alias("recall_jl"))
-        .orderBy("query_id")
+    )
+    return recall_at_k(exact_topk(emb, 5), approx, 5).select(
+        "query_id", F.col("recall_at_k").alias("recall_jl")
     )
 
 
@@ -2722,9 +2707,7 @@ _EWMA_W = 16  # truncation window: weights 2^(W-1-j) for lag j — exact dyadic
 def _ewma_oracle() -> str:
     return f"""
 WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2),
+  {DAILY_TYPE_CENTS_SQL}),
 ref AS (
   SELECT event_type, CAST(SUM(v) AS BIGINT) AS tot, CAST(COUNT(*) AS BIGINT) AS nd
   FROM daily GROUP BY 1),
@@ -2763,15 +2746,7 @@ def ewma_daily_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: fixed x16 fanout of narrow rows into a partial-aggregated
     (type, day) groupBy — linear, no window over unbounded history."""
-    daily = (
-        spark.table("events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    daily = daily_type_cents(spark)
     ref = daily.groupBy("event_type").agg(
         F.sum("v").cast("bigint").alias("tot"),
         F.count(F.lit(1)).cast("bigint").alias("nd"),
@@ -2902,15 +2877,7 @@ def _ppr_oracle(iterations: int, top_n: int, seed_nation: int) -> str:
     from dawis_spark.operators.graph import ppr_oracle_ctes
 
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {TRADE_EDGES_CTES},
 seeds AS (
   SELECT c_custkey * 2 AS node FROM customer WHERE c_nationkey = {seed_nation}
 ),
@@ -2943,29 +2910,7 @@ def personalized_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations bit-for-bit (operators/graph.py:ppr_oracle_ctes)."""
     from dawis_spark.operators.graph import personalized_pagerank
 
-    pairs = (
-        spark.table("lineitem")
-        .join(spark.table("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    # symmetrize with one explode (r15): the 2-leg union evaluated the
-    # lineitem-orders distinct-pair join twice at materialization
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-                    F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .persist()
-    )
+    edges = trade_edges(spark).persist()
     seeds = (
         spark.table("customer")
         .filter(F.col("c_nationkey") == _PPR_SEED_NATION)
@@ -3174,11 +3119,9 @@ def markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stl_oracle() -> str:
-    return """
+    return f"""
 WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2),
+  {DAILY_TYPE_CENTS_SQL}),
 expanded AS (
   SELECT event_type, day + to_days(CAST(t.o AS INT)) AS day, v
   FROM daily, range(-3, 4) t(o)),
@@ -3221,15 +3164,7 @@ def stl_decomposition_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fixed x7 fanout into a partial-aggregated groupBy, a
     |types|x7-row seasonal aggregate broadcast back. Linear, two small
     shuffles."""
-    daily = (
-        spark.table("events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    daily = daily_type_cents(spark)
     expanded = daily.select(
         "event_type",
         F.explode(F.sequence(F.lit(-3), F.lit(3))).alias("o"),
@@ -3439,15 +3374,7 @@ def _kcore_oracle(k: int, iterations: int) -> str:
     from dawis_spark.operators.graph import kcore_oracle_ctes
 
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {TRADE_EDGES_CTES},
 {kcore_oracle_ctes('edges', k, iterations)}
 SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS side,
        CAST(COUNT(*) AS BIGINT) AS n_nodes,
@@ -3476,35 +3403,12 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly (operators/graph.py:kcore_oracle_ctes)."""
     from dawis_spark.operators.graph import kcore_peel
 
-    pairs = (
-        spark.table("lineitem")
-        .join(spark.table("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    # symmetrize with one explode (r15): the 2-leg union evaluated the
-    # lineitem-orders distinct-pair join twice at materialization.
     # Persist PRE-PARTITIONED by src (r15): the iterative consumer joins
     # and degree counts all require hashpartitioning(src), and the
     # per-iteration state persists split the plan into AQE islands no
     # ReusedExchange spans — an unpartitioned cache was re-shuffled by
     # src once per iteration.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-                    F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .repartition("src")
-        .persist()
-    )
+    edges = trade_edges(spark).repartition("src").persist()
     core = kcore_peel(edges, k=_KCORE_K, iterations=3)
     return (
         core.groupBy(
@@ -3525,15 +3429,7 @@ def _bfs_oracle(max_hops: int, seed_nation: int) -> str:
     from dawis_spark.operators.graph import bfs_oracle_ctes
 
     return f"""
-WITH pairs AS (
-  SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-edges AS (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s AS src, c AS dst FROM pairs
-),
+WITH {TRADE_EDGES_CTES},
 seeds AS (
   SELECT c_custkey * 2 AS node FROM customer WHERE c_nationkey = {seed_nation}
 ),
@@ -3557,29 +3453,7 @@ def bfs_hop_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB replays the level sets exactly."""
     from dawis_spark.operators.graph import bfs_hops
 
-    pairs = (
-        spark.table("lineitem")
-        .join(spark.table("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    # symmetrize with one explode (r15): the 2-leg union evaluated the
-    # lineitem-orders distinct-pair join twice at materialization
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-                    F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .persist()
-    )
+    edges = trade_edges(spark).persist()
     seeds = (
         spark.table("customer")
         .filter(F.col("c_nationkey") == _PPR_SEED_NATION)
@@ -3593,16 +3467,8 @@ def bfs_hop_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DAILY_REV_ORDERS_CTE = """
-daily AS (
-  SELECT o_orderdate AS d,
-         CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM orders GROUP BY 1)
-"""
-
 _SPEARMAN_ORACLE = f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 rk AS (
   SELECT (2 * RANK() OVER (ORDER BY rev) + COUNT(*) OVER (PARTITION BY rev) - 1) AS rx,
          (2 * RANK() OVER (ORDER BY cnt) + COUNT(*) OVER (PARTITION BY cnt) - 1) AS ry
@@ -3644,21 +3510,12 @@ def spearman_daily_rev_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dawis_spark.operators.stats import spearman_rho
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev"),
-            F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        )
-    )
+    daily = daily_rev_orders(spark)
     return spearman_rho(daily, "rev", "cnt")
 
 
 _KENDALL_ORACLE = f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 cls AS (
   SELECT CASE WHEN (a.rev < b.rev AND a.cnt < b.cnt)
                 OR (a.rev > b.rev AND a.cnt > b.cnt) THEN 1 ELSE 0 END AS con,
@@ -3696,16 +3553,7 @@ def kendall_daily_rev_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB; all counts integer-exact (operators/stats.py:kendall_tau_b)."""
     from dawis_spark.operators.stats import kendall_tau_b
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev"),
-            F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        )
-    )
+    daily = daily_rev_orders(spark)
     return kendall_tau_b(daily, "d", "rev", "cnt")
 
 
@@ -3718,7 +3566,7 @@ def _acf_oracle(max_lag: int) -> str:
         f"LEAD(rev, {k}) OVER (ORDER BY d) AS x{k}" for k in range(1, max_lag + 1)
     )
     return f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 leads AS (SELECT rev AS x, {lead_cols} FROM daily),
 gstats AS (
   SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(CAST(rev AS HUGEINT)) AS s,
@@ -3761,15 +3609,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dawis_spark.operators.stats import acf
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev"),
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", "rev")
     return acf(daily, "d", "rev", max_lag=14)
 
 
@@ -3778,9 +3618,7 @@ def _holt_oracle(horizon: int) -> str:
 
     return f"""
 WITH RECURSIVE daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2),
+  {DAILY_TYPE_CENTS_SQL}),
 {holt_oracle_ctes('daily', 'event_type', 'day', 'v', horizon)}
 SELECT k AS event_type, h, forecast AS forecast_cents,
        level AS level_cents, trend AS trend_cents, n_points
@@ -3809,15 +3647,7 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     h rows per key."""
     from dawis_spark.operators.forecast import holt_linear
 
-    daily = (
-        spark.table("events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    daily = daily_type_cents(spark)
     out = holt_linear(daily, "event_type", "day", "v", horizon=7)
     return out.select(
         "event_type",
@@ -3970,31 +3800,13 @@ _IR_K = 20
 
 
 def _ir_eval_oracle(k1: float, b: float, k: int) -> str:
-    toks = _TXT.tokens("text", "duck")
     parts = []
     for qid, terms in _IR_QUERIES:
-        term_list = ", ".join(f"'{t}'" for t in terms)
         rel_pred = " AND ".join(f"list_contains(__toks, '{t}')" for t in terms)
         parts.append(
             f"""
 SELECT * FROM (
-WITH base AS (SELECT doc_id, {toks} AS __toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(__toks) AS DOUBLE) AS dl FROM base),
-stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl FROM dl),
-tk AS (SELECT doc_id, unnest(__toks) AS token FROM base),
-tf AS (
-  SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM tk
-  WHERE token IN ({term_list}) GROUP BY doc_id, token
-),
-dfq AS (SELECT token, CAST(count(*) AS DOUBLE) AS df_t FROM tf GROUP BY token),
-scored AS (
-  SELECT tf.doc_id,
-         ln(1 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-           * (tf * ({k1} + 1))
-           / (tf + {k1} * (1 - {b} + {b} * dl.dl / avgdl)) AS contrib
-  FROM tf JOIN dfq USING (token) JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-),
+{bm25_ctes(terms, k1, b, "scored")},
 top AS (
   SELECT doc_id, ROUND(SUM(contrib), 6) AS bm25
   FROM scored GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT {k}
@@ -4282,17 +4094,8 @@ def hampel_outliers_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-series sort."""
     from dawis_spark.operators.anomaly import hampel_outliers
 
-    daily = (
-        spark.table("events")
-        .groupBy(
-            F.col("event_type").alias("k"),
-            F.date_trunc("day", "ts").alias("day"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
+    daily = daily_type_cents(spark).select(
+        F.col("event_type").alias("k"), "day", "v"
     )
     return (
         hampel_outliers(daily, "k", "day", "v", half_window=3)
@@ -4408,12 +4211,8 @@ def bellman_ford_fastest_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dawis_spark.operators.graph import bellman_ford
 
     rel = (
-        spark.table("lineitem")
-        .join(spark.table("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
+        trade_lines(spark)
+        .groupBy(*trade_nodes())
         .agg(
             F.min(F.datediff(F.col("l_shipdate"), F.col("o_orderdate")))
             .cast("bigint")
@@ -4449,7 +4248,7 @@ def _ccf_oracle(max_lag: int) -> str:
         for k in range(-max_lag, max_lag + 1)
     )
     return f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 wide AS (SELECT cnt AS x, {', '.join(shift_selects)} FROM daily),
 gstats AS (
   SELECT CAST(COUNT(*) AS HUGEINT) AS n,
@@ -4493,16 +4292,7 @@ def ccf_orders_vs_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dawis_spark.operators.stats import ccf
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev"),
-            F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        )
-    )
+    daily = daily_rev_orders(spark)
     return ccf(daily, "d", "cnt", "rev", max_lag=7)
 
 
@@ -4621,12 +4411,10 @@ def _ndcg_ideal_expr(g: int, cw) -> str:
 
 
 def _ndcg_oracle(k1: float, b: float) -> str:
-    toks = _TXT.tokens("text", "duck")
     w_arr = ", ".join(str(w) for w in _NDCG_W)
     cumw_arr = ", ".join(str(w) for w in _NDCG_CUMW)
     parts = []
     for qid, terms in _IR_QUERIES:
-        term_list = ", ".join(f"'{t}'" for t in terms)
         grade = " + ".join(
             f"CASE WHEN list_contains(__toks, '{t}') THEN 1 ELSE 0 END"
             for t in terms
@@ -4650,23 +4438,7 @@ def _ndcg_oracle(k1: float, b: float) -> str:
         parts.append(
             f"""
 SELECT * FROM (
-WITH base AS (SELECT doc_id, {toks} AS __toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(__toks) AS DOUBLE) AS dl FROM base),
-stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl FROM dl),
-tk AS (SELECT doc_id, unnest(__toks) AS token FROM base),
-tf AS (
-  SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM tk
-  WHERE token IN ({term_list}) GROUP BY doc_id, token
-),
-dfq AS (SELECT token, CAST(count(*) AS DOUBLE) AS df_t FROM tf GROUP BY token),
-scored AS (
-  SELECT tf.doc_id,
-         ln(1 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-           * (tf * ({k1} + 1))
-           / (tf + {k1} * (1 - {b} + {b} * dl.dl / avgdl)) AS contrib
-  FROM tf JOIN dfq USING (token) JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-),
+{bm25_ctes(terms, k1, b, "scored")},
 top AS (
   SELECT doc_id, ROUND(SUM(contrib), 6) AS bm25
   FROM scored GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT {_NDCG_K}

@@ -7,6 +7,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dawis_spark.queries._fragments import (
+    DAILY_REV_ORDERS_CTE,
+    DAILY_TYPE_CENTS_SQL,
+    daily_rev_orders,
+    daily_type_cents,
+)
 from dawis_spark.queries._registry import query
 from dawis_spark.queries.q01_spine_dedup_ann import (
     _BANDS,
@@ -20,9 +26,6 @@ from dawis_spark.queries.q01_spine_dedup_ann import (
 from dawis_spark.queries.q02_corpus_quality_classifiers import (
     _bpe_chain_ctes,
     _with_whale_audit,
-)
-from dawis_spark.queries.q03_graph_linkage_search import (
-    _DAILY_REV_ORDERS_CTE,
 )
 
 _LINE_DEDUP_K = 5  # a line repeated across >= K documents is boilerplate
@@ -856,9 +859,7 @@ _MASE_H = 7  # test horizon: the trailing week
 
 _MASE_ORACLE = f"""
 WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2),
+  {DAILY_TYPE_CENTS_SQL}),
 mx AS (SELECT MAX(day) AS maxd FROM daily),
 test AS (
   SELECT t.event_type, CAST(ABS(t.v - p.v) AS BIGINT) AS ae
@@ -898,15 +899,7 @@ def seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one daily rollup (the exchange every forecast query already
     pays), two self-joins on (type, day) over the calendar-bounded daily
     relation, and a |types|-keyed aggregate."""
-    daily = (
-        spark.table("events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    daily = daily_type_cents(spark)
     mx = daily.agg(F.max("day").alias("maxd"))
     d = daily.crossJoin(F.broadcast(mx))
     t7 = d.alias("t").join(
@@ -2491,7 +2484,7 @@ def _ljung_box_oracle(max_lag: int) -> str:
         f"LEAD(rev, {k}) OVER (ORDER BY d) AS x{k}" for k in range(1, max_lag + 1)
     )
     return f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 leads AS (SELECT rev AS x, {lead_cols} FROM daily),
 gstats AS (
   SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(CAST(rev AS HUGEINT)) AS s,
@@ -2546,15 +2539,7 @@ def ljung_box_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dawis_spark.operators.stats import ljung_box
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev"),
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", "rev")
     return ljung_box(daily, "d", "rev", max_lag=10)
 
 
@@ -4221,9 +4206,7 @@ def _hw_oracle(horizon: int) -> str:
 
     return f"""
 WITH RECURSIVE daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2),
+  {DAILY_TYPE_CENTS_SQL}),
 {holt_winters_oracle_ctes('daily', 'event_type', 'day', 'v', 7, horizon)}
 SELECT k AS event_type, h, forecast AS forecast_cents,
        level AS level_cents, trend AS trend_cents,
@@ -4251,15 +4234,7 @@ def holt_winters_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/forecast.py:holt_winters)."""
     from dawis_spark.operators.forecast import holt_winters
 
-    daily = (
-        spark.table("events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    daily = daily_type_cents(spark)
     out = holt_winters(daily, "event_type", "day", "v", m=7, horizon=7)
     return out.select(
         "event_type",
@@ -4339,9 +4314,7 @@ def _hbt_oracle(horizon: int) -> str:
 
     return f"""
 WITH RECURSIVE daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2),
+  {DAILY_TYPE_CENTS_SQL}),
 origins AS (
   SELECT o.o AS origin, MAX(day) - INTERVAL (7 * o.o) DAY AS cutoff
   FROM daily, range(1, {_HBT_ORIGINS + 1}) o(o) GROUP BY o.o),
@@ -4390,15 +4363,7 @@ def holt_backtest_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
     forecast/actual join is keyed on (event_type, day)."""
     from dawis_spark.operators.forecast import holt_linear
 
-    daily = (
-        spark.table("events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    daily = daily_type_cents(spark)
     origins = (
         daily.agg(F.max("day").alias("mx"))
         .select(
@@ -4451,9 +4416,7 @@ def holt_backtest_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _THETA_ORACLE = f"""
 WITH RECURSIVE daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2),
+  {DAILY_TYPE_CENTS_SQL}),
 {{CTES}}
 SELECT k AS event_type, h, forecast AS forecast_cents,
        level AS ses_level_cents, slope AS slope_cents_per_day, n_points
@@ -4489,15 +4452,7 @@ def theta_method_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary; h-row fan-out per key."""
     from dawis_spark.operators.forecast import theta_forecast
 
-    daily = (
-        spark.table("events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    daily = daily_type_cents(spark)
     return (
         theta_forecast(daily, "event_type", "day", "v", horizon=7)
         .select(

@@ -7,6 +7,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dawis_spark.queries._fragments import (
+    DAILY_REV_ORDERS_CTE,
+    DAILY_TYPE_CENTS_SQL,
+    daily_rev_orders,
+    daily_type_cents,
+)
 from dawis_spark.queries._registry import query
 from dawis_spark.queries.q01_spine_dedup_ann import (
     _TS,
@@ -29,7 +35,6 @@ from dawis_spark.queries.q03_graph_linkage_search import (
     _BOOT_A,
     _BOOT_B,
     _BOOT_C,
-    _DAILY_REV_ORDERS_CTE,
     _stats,
 )
 from dawis_spark.queries.q04_sketches_stats_forecast import (
@@ -260,15 +265,7 @@ def matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window as _W
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev")
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", "rev")
     ix = daily.select(
         "d", "rev", (F.row_number().over(_W.orderBy("d")) - 1).alias("t")
     )
@@ -364,9 +361,7 @@ def _mase_oracle() -> str:
 
     return f"""
 WITH RECURSIVE alldaily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events GROUP BY 1, 2),
+  {DAILY_TYPE_CENTS_SQL}),
 cut AS (SELECT MAX(day) - INTERVAL 7 DAY AS cutoff FROM alldaily),
 train AS (
   SELECT a.* FROM alldaily a CROSS JOIN cut WHERE a.day <= cutoff),
@@ -441,15 +436,7 @@ def forecast_model_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dawis_spark.operators.forecast import holt_linear, theta_forecast
     from pyspark.sql import Window as _W
 
-    alldaily = (
-        spark.table("events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    alldaily = daily_type_cents(spark)
     cut = alldaily.agg(
         F.expr("MAX(day) - INTERVAL 7 DAY").alias("cutoff")
     )
@@ -557,7 +544,7 @@ FROM (SELECT *, {{TT}} AS tt FROM (SELECT *, {{AZ}} AS az FROM zs))
 
 def _mk_oracle() -> str:
     return (
-        _MK_ORACLE.replace("{DAILY}", _DAILY_REV_ORDERS_CTE)
+        _MK_ORACLE.replace("{DAILY}", DAILY_REV_ORDERS_CTE)
         .replace("{P}", _BH_P)
         .replace("{TT}", _BH_TT)
         .replace("{AZ}", _BH_AZ)
@@ -580,15 +567,7 @@ def mann_kendall_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the O(days^2) pair join is calendar-bounded (the theil_sen
     adjudication), never row-scale; everything else is one row."""
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev")
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", "rev")
     a = daily.select(F.col("d").alias("da"), F.col("rev").alias("ra"))
     b = daily.select(F.col("d").alias("db"), F.col("rev").alias("rb"))
     pairs = (
@@ -686,7 +665,7 @@ FROM (SELECT * , {{TT}} AS tt FROM (SELECT *, {{AZ}} AS az FROM fs))
 
 def _granger_oracle() -> str:
     return (
-        _GRANGER_ORACLE.replace("{DAILY}", _DAILY_REV_ORDERS_CTE)
+        _GRANGER_ORACLE.replace("{DAILY}", DAILY_REV_ORDERS_CTE)
         .replace("{CASTS}", _OLS2_STAT_CASTS)
         .replace("{B0}", _OLS2_B0)
         .replace("{B1}", _OLS2_B1)
@@ -727,16 +706,7 @@ def granger_orders_to_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev"),
-            F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        )
-    )
+    daily = daily_rev_orders(spark)
     w = Window.orderBy("d")
     dd = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     obs = (
@@ -2540,7 +2510,7 @@ FROM (SELECT *, {{TT}} AS tt FROM (SELECT *, {{AZ}} AS az FROM zs))
 
 def _runs_oracle() -> str:
     return (
-        _RUNS_ORACLE.replace("{DAILY}", _DAILY_REV_ORDERS_CTE)
+        _RUNS_ORACLE.replace("{DAILY}", DAILY_REV_ORDERS_CTE)
         .replace("{P}", _BH_P)
         .replace("{TT}", _BH_TT)
         .replace("{AZ}", _BH_AZ)
@@ -2572,15 +2542,7 @@ def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev")
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", "rev")
     w = Window.orderBy("d")
     moves = daily.select(
         "d",
@@ -2749,7 +2711,7 @@ def mcnemar_langid_vs_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PH_ORACLE = f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 ix AS (
   SELECT d, rev,
          ROW_NUMBER() OVER (ORDER BY d) AS t,
@@ -2800,15 +2762,7 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev")
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", "rev")
     wo = Window.orderBy("d")
     wc = wo.rowsBetween(Window.unboundedPreceding, 0)
     ix = daily.select(
@@ -3091,7 +3045,7 @@ _HURST_SLOPE = (
 )
 
 _HURST_ORACLE = f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 ix AS (
   SELECT rev AS x, ROW_NUMBER() OVER (ORDER BY d) AS t FROM daily),
 blk AS (
@@ -3166,15 +3120,7 @@ def hurst_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("x")
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", F.col("rev").alias("x"))
     ix = daily.select("x", F.row_number().over(Window.orderBy("d")).alias("t"))
     ws = ", ".join(str(w) for w in _HURST_WS)
     blk = ix.selectExpr(
@@ -4005,7 +3951,7 @@ def _ar2_oracle() -> str:
         for h in range(1, _AR2_H + 1)
     )
     return f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 ix AS (
   SELECT rev AS x, ROW_NUMBER() OVER (ORDER BY d) AS t FROM daily),
 lagged AS (
@@ -4075,15 +4021,7 @@ def ar2_forecast_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("x")
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", F.col("rev").alias("x"))
     wt = Window.orderBy("d")
     ix = daily.select("x", F.row_number().over(wt).alias("t"))
     wl = Window.orderBy("t")
@@ -4163,7 +4101,7 @@ _ESD_K = 5
 
 
 def _esd_oracle() -> str:
-    parts = [f"WITH {_DAILY_REV_ORDERS_CTE}", "rem0 AS (SELECT d, rev AS x FROM daily)"]
+    parts = [f"WITH {DAILY_REV_ORDERS_CTE}", "rem0 AS (SELECT d, rev AS x FROM daily)"]
     outs = []
     for r in range(1, _ESD_K + 1):
         parts.append(
@@ -4210,13 +4148,8 @@ def esd_outliers_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily relation — one declarative plan, no driver loop, nothing
     row-scale after the first aggregate."""
     daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("x")
-        )
+        daily_rev_orders(spark)
+        .select("d", F.col("rev").alias("x"))
         # persisted: every round references the survivor chain TWICE
         # (moment agg + candidate scan) and each chain hangs off this
         # relation — without the persist the orders scan re-executes
@@ -4261,7 +4194,7 @@ def esd_outliers_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BS_GAIN = "((csd * nd - sd * td) * (csd * nd - sd * td) / (nd * td * (nd - td)))"
 
 _BINSEG_ORACLE = f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 ix AS (
   SELECT d, rev AS x, ROW_NUMBER() OVER (ORDER BY d) AS t,
          SUM(rev) OVER (ORDER BY d
@@ -4331,15 +4264,7 @@ def binseg_changepoints_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("x")
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", F.col("rev").alias("x"))
     wt = Window.orderBy("d")
     ix = daily.select(
         "d",

@@ -7,6 +7,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dawis_spark.queries._fragments import (
+    DAILY_REV_ORDERS_CTE,
+    bm25_ctes,
+    daily_rev_orders,
+)
 from dawis_spark.queries._registry import query
 from dawis_spark.queries.q01_spine_dedup_ann import (
     _TXT,
@@ -24,7 +29,6 @@ from dawis_spark.queries.q03_graph_linkage_search import (
     _BOOT_A,
     _BOOT_B,
     _BOOT_C,
-    _DAILY_REV_ORDERS_CTE,
     _IR_K,
     _IR_QUERIES,
     _bootstrap_weight_case,
@@ -86,31 +90,13 @@ def leave_one_source_out_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _map_eval_oracle(k1: float, b: float, k: int) -> str:
-    toks = _TXT.tokens("text", "duck")
     parts = []
     for qid, terms in _IR_QUERIES:
-        term_list = ", ".join(f"'{t}'" for t in terms)
         rel_pred = " AND ".join(f"list_contains(__toks, '{t}')" for t in terms)
         parts.append(
             f"""
 SELECT * FROM (
-WITH base AS (SELECT doc_id, {toks} AS __toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(__toks) AS DOUBLE) AS dl FROM base),
-stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl FROM dl),
-tk AS (SELECT doc_id, unnest(__toks) AS token FROM base),
-tf AS (
-  SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM tk
-  WHERE token IN ({term_list}) GROUP BY doc_id, token
-),
-dfq AS (SELECT token, CAST(count(*) AS DOUBLE) AS df_t FROM tf GROUP BY token),
-scored AS (
-  SELECT tf.doc_id,
-         ln(1 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-           * (tf * ({k1} + 1))
-           / (tf + {k1} * (1 - {b} + {b} * dl.dl / avgdl)) AS contrib
-  FROM tf JOIN dfq USING (token) JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-),
+{bm25_ctes(terms, k1, b, "scored")},
 top AS (
   SELECT doc_id, ROUND(SUM(contrib), 6) AS bm25
   FROM scored GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT {k}
@@ -1310,7 +1296,7 @@ _SPC_U1 = f"CASE WHEN {_SPC_X} < mu - sigma THEN 1 ELSE 0 END"
 _SPC_UNITS = f"ROUND(({_SPC_X} - mu) / sigma, 4)"
 
 _SPC_ORACLE = f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 lagd AS (
   SELECT d, rev, LAG(rev) OVER (ORDER BY d) AS prev FROM daily),
 lim AS (
@@ -1376,15 +1362,7 @@ def spc_xbar_breaches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    daily = (
-        spark.table("orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev")
-        )
-    )
+    daily = daily_rev_orders(spark).select("d", "rev")
     wd = Window.orderBy("d")
     lagd = daily.select("d", "rev", F.lag("rev").over(wd).alias("prev"))
     lim = lagd.agg(

@@ -18,10 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dawis_spark.plans.bounded import register_bounded
+from dawis_spark.queries._fragments import DAILY_REV_ORDERS_CTE
 from dawis_spark.queries._registry import query
-from dawis_spark.queries.q03_graph_linkage_search import (
-    _DAILY_REV_ORDERS_CTE,
-)
 from dawis_spark.queries.q04_sketches_stats_forecast import (
     _BH_AZ,
     _BH_P,
@@ -283,7 +281,7 @@ _TP_Z = (
 
 def _turning_points_oracle() -> str:
     return f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 tp AS (
   SELECT rev,
          LAG(rev) OVER (ORDER BY d) AS prv,
@@ -382,7 +380,7 @@ _ADF_SE = f"sqrt((ssr / (n - 2)) * n / {_ADF_DEN})"
 
 def _adf_oracle() -> str:
     return f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 lagged AS (
   SELECT rev, LAG(rev) OVER (ORDER BY d) AS prv FROM daily),
 pairs AS (
@@ -517,7 +515,7 @@ def _pacf_oracle(m: int) -> str:
         for k in range(1, m + 1)
     )
     return f"""
-WITH {_DAILY_REV_ORDERS_CTE},
+WITH {DAILY_REV_ORDERS_CTE},
 leads AS (SELECT d, rev AS x, {lead_cols} FROM daily),
 gstats AS (
   SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(CAST(rev AS HUGEINT)) AS s,

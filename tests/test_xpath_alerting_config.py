@@ -267,6 +267,7 @@ operations:
 aggregations:
   gsc:
     runtime_limit: 1200
+    database: warehouse  # legacy key: accepted and ignored
 """
 
 

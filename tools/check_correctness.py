@@ -25,7 +25,8 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
@@ -183,7 +184,7 @@ def main(only: list[str]) -> int:
     if out:
         import json
 
-        path = os.path.join("/root/repo", out)
+        path = os.path.join(REPO, out)
         with open(path, "w") as fh:
             json.dump(
                 {

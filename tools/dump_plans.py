@@ -4,11 +4,13 @@ headline queries. Usage: python tools/dump_plans.py [sf_dir]"""
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 PICKS = {
     "q1_pricing_summary": "pushed date filter, map-side partial agg",
@@ -235,7 +237,7 @@ def main() -> None:
             df.explain("formatted")
         lines = [l.rstrip() for l in buf.getvalue().splitlines() if KEEP.search(l)]
         out += [f"## {name}\n\n_{note}_\n", "```", *lines[:28], "```\n"]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(out)} lines)")
 

@@ -24,10 +24,11 @@ This stresses customer rollups (rfm/gini/pareto), the supply graph under
 a hot node (pagerank/kcore/bellman-ford), and every user-partitioned
 journey window (20% of all events in one window partition).
 
-Output: /root/repo/.testdata/sf1 (gitignored). Usage:
+Output: .testdata/sf1 in this checkout (gitignored). Usage, from the
+checkout root:
     python tools/make_sf1.py [--skew]
-    SPARK_GRAFT_SF_DIR=/root/repo/.testdata/sf1 python bench.py
-    SPARK_GRAFT_SF_DIR=/root/repo/.testdata/sf1skew python bench.py
+    SPARK_GRAFT_SF_DIR=.testdata/sf1 python bench.py
+    SPARK_GRAFT_SF_DIR=.testdata/sf1skew python bench.py
 """
 
 from __future__ import annotations
@@ -41,7 +42,8 @@ import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
 SKEW = "--skew" in sys.argv[1:]
-DST = "/root/repo/.testdata/sf1skew" if SKEW else "/root/repo/.testdata/sf1"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DST = os.path.join(REPO, ".testdata", "sf1skew" if SKEW else "sf1")
 REPLICAS = 10
 STRIDE = 100_000_000  # > any key in sf0.1
 SKEW_MOD = 5  # 1/5 of rows land on the hot key (~20% mass)

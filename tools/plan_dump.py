@@ -7,17 +7,35 @@ Usage:
 Writes plans/<round>/<name>_<tag>.txt, so a plan claim can be checked
 against the before and after files. Reads the tables under
 ``MINI_SF_DIR`` (default: the catalog's default scale-factor directory).
+
+Each dump goes through ``normalize_plan``, so two dumps of one unchanged
+query are byte-identical even when they come from different processes.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+_PLAN_ID = re.compile(r"\[plan_id=\d+\]")
+_EXPR_ID = re.compile(r"#(\d+)")
+
+
+def normalize_plan(text: str) -> str:
+    """Drop the per-session exchange ``plan_id`` counter and renumber the
+    ``#n`` expression ids in order of first appearance; both counters are
+    global to the JVM, so they differ between processes for one plan."""
+    ids: dict[str, str] = {}
+    text = _PLAN_ID.sub("[plan_id]", text)
+    return _EXPR_ID.sub(
+        lambda m: "#" + ids.setdefault(m.group(1), str(len(ids) + 1)), text
+    )
 
 
 def main() -> None:
@@ -38,11 +56,12 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
+        text = normalize_plan(buf.getvalue())
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
-            fh.write(buf.getvalue())
+            fh.write(text)
         spark.catalog.clearCache()
-        print(f"wrote {path} ({len(buf.getvalue())} bytes)", file=sys.stderr)
+        print(f"wrote {path} ({len(text)} bytes)", file=sys.stderr)
 
 
 if __name__ == "__main__":
