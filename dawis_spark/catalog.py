@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # The driver-generated benchmark tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -105,8 +106,13 @@ class Warehouse:
     def exists(self, table: str) -> bool:
         return os.path.exists(self.path(table))
 
-    def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+    def read(self, table: str, schema: StructType | None = None) -> DataFrame:
+        """The table's rows; pass its known ``schema`` to skip the job
+        that infers one from the parquet footers."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self.path(table))
 
     def write(
         self,

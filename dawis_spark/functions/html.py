@@ -13,9 +13,11 @@ The reference uses BeautifulSoup/lxml; this container has neither, so the
 parser is Python's stdlib html.parser — tolerant of the fixture corpus and
 dependency-free. If lxml lands later, only this module changes.
 
-All UDFs are Arrow-batched pandas UDFs (Series -> Series): one
-serialization per ~10k-row batch, not per row. At 100 TB these run
-map-side, scaling with executors; the DAG above/below them stays JVM-side.
+All UDFs are Arrow-batched pandas UDFs: one serialization per ~10k-row
+batch, not per row. ``html_facts`` returns a struct (Series ->
+DataFrame) so one parse serves every field a check reads; the others
+map a body Series to one value per body. At 100 TB these run map-side,
+scaling with executors; the DAG above/below them stays JVM-side.
 """
 
 from __future__ import annotations
@@ -83,23 +85,24 @@ def _parse(body: str) -> _Extractor:
     return ex
 
 
-def _series_extract(field: str):
-    def fn(bodies: pd.Series) -> pd.Series:
-        return bodies.map(lambda b: getattr(_parse(b), field))
-
-    return fn
-
-
-extract_titles = F.pandas_udf(
-    _series_extract("titles"), T.ArrayType(T.StringType())
+HTML_FACTS = T.StructType(
+    [
+        T.StructField(name, T.ArrayType(T.StringType()))
+        for name in ("titles", "descriptions", "canonicals", "h1s")
+    ]
 )
-extract_descriptions = F.pandas_udf(
-    _series_extract("descriptions"), T.ArrayType(T.StringType())
-)
-extract_canonicals = F.pandas_udf(
-    _series_extract("canonicals"), T.ArrayType(T.StringType())
-)
-extract_h1 = F.pandas_udf(_series_extract("h1s"), T.ArrayType(T.StringType()))
+
+
+@F.pandas_udf(HTML_FACTS)
+def html_facts(bodies: pd.Series) -> pd.DataFrame:
+    """Titles, meta descriptions, canonical hrefs and h1 texts of each
+    body from one parse. Read the fields off the struct column
+    downstream (``F.col("__f.titles")``), so every consumer shares the
+    one evaluation."""
+    parsed = [_parse(b) for b in bodies]
+    return pd.DataFrame(
+        {name: [getattr(p, name) for p in parsed] for name in HTML_FACTS.names}
+    )
 
 
 @F.pandas_udf(T.StringType())

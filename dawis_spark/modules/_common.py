@@ -2,8 +2,10 @@
 
 Reference: service/check.py:27-57 — every check lands as
 (created, urlset, check, value, valid, diff, error, url RECORD) with the
-value always stringified (:45). One helper builds that projection so each
-module's checks are narrow map-side selects unioned into one plan.
+value always stringified (:45). ``emit_check_legs`` builds that projection:
+the checks a module derives from one relation are legs of one select over
+it, and ``union_checks`` joins the checks of different relations into one
+plan.
 """
 
 from __future__ import annotations
@@ -20,20 +22,52 @@ def emit_checks(
     diff: Column | None = None,
     error: Column | None = None,
 ) -> DataFrame:
-    """Project one check per input row into the normalized checks schema.
+    """One check per input row: ``emit_check_legs`` with a single leg."""
+    return emit_check_legs(df, [check_leg(check_name, valid, value, diff, error)])
 
-    ``df`` must carry ``urlset`` and ``url`` (struct) columns; ``created``
-    is stamped at evaluation time like the reference's utcnow.
-    """
-    return df.select(
+
+def check_leg(
+    check_name: str,
+    valid: Column,
+    value: Column | None = None,
+    diff: Column | None = None,
+    error: Column | None = None,
+    when: Column | None = None,
+) -> Column:
+    """One check a row emits, as a one-element array of its fields; the
+    value is stringified like the reference's (:45). With ``when`` the
+    row emits it only where ``when`` is true (the leg is NULL
+    elsewhere)."""
+    leg = F.array(
+        F.struct(
+            F.lit(check_name).alias("check"),
+            (value if value is not None else F.lit("")).cast("string").alias("value"),
+            valid.cast("boolean").alias("valid"),
+            (diff if diff is not None else F.lit("")).cast("string").alias("diff"),
+            (error if error is not None else F.lit("")).cast("string").alias("error"),
+        )
+    )
+    return leg if when is None else F.when(when, leg)
+
+
+def emit_check_legs(df: DataFrame, legs: list[Column]) -> DataFrame:
+    """Every check each row of ``df`` emits, in the checks schema, from ONE
+    projection of ``df``: a leg is an array of check structs
+    (``check_leg``, or several per row) or NULL, and the non-NULL legs are
+    flattened into rows. Unlike a union of per-check projections, the
+    plan under ``df`` runs once however many checks read it. ``df`` must
+    carry ``urlset`` and ``url`` (struct) columns; ``created`` is stamped
+    at evaluation time like the reference's utcnow."""
+    emitted = F.flatten(F.filter(F.array(*legs), lambda leg: leg.isNotNull()))
+    return df.select("urlset", "url", F.inline(emitted)).select(
         F.current_timestamp().alias("created"),
-        F.col("urlset"),
-        F.lit(check_name).alias("check"),
-        (value if value is not None else F.lit("")).cast("string").alias("value"),
-        valid.cast("boolean").alias("valid"),
-        (diff if diff is not None else F.lit("")).cast("string").alias("diff"),
-        (error if error is not None else F.lit("")).cast("string").alias("error"),
-        F.col("url"),
+        "urlset",
+        "check",
+        "value",
+        "valid",
+        "diff",
+        "error",
+        "url",
     )
 
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dawis_spark.functions.html import extract_h1
+from dawis_spark.functions.html import html_facts
 from dawis_spark.modules import register
 from dawis_spark.modules._common import emit_checks
 
@@ -19,7 +19,7 @@ from dawis_spark.modules._common import emit_checks
 def evaluate(docs: DataFrame, config: dict) -> DataFrame:
     """config: {"count_headline_h1": {"assert": 1}}"""
     want = int(config["count_headline_h1"]["assert"])
-    counted = docs.withColumn("__n", F.size(extract_h1(F.col("body"))))
+    counted = docs.withColumn("__n", F.size(html_facts(F.col("body")).h1s))
     return emit_checks(
         counted,
         "htmlheadings-count_headline_h1",

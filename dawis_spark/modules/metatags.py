@@ -14,58 +14,55 @@ Reference: modules/operation/custom/metatags.py. Checks (per urlset config):
   multiple tags -> 'metatags-problem-multi-title/-description' (:89-113)
   canonical self-reference           — canonical href == own URL (:740-770)
 
-Spark shape (SURVEY §3.3): ONE pandas-UDF extraction pass, then every check
-is a projection/window/groupBy branch of that cached frame, unioned into a
-single checks append.
+Spark shape (SURVEY §3.3): ONE ``html_facts`` pandas-UDF pass parses each
+document; every check is a leg of one projection over that extraction
+(the change and duplicate checks read window columns of the same frame),
+and ``emit_check_legs`` flattens the legs into the checks rows. The plan
+is linear, so no check re-runs the parse and nothing is cached.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from dawis_spark.functions.html import (
-    extract_canonicals,
-    extract_descriptions,
-    extract_titles,
-)
+from dawis_spark.functions.html import html_facts
 from dawis_spark.functions.urls import assemble_url
 from dawis_spark.modules import register
-from dawis_spark.modules._common import emit_checks, union_checks
+from dawis_spark.modules._common import check_leg, emit_check_legs
 
 
 def _tag_checks(
-    df: DataFrame, tag: str, values_col: str, config: dict
-) -> list[DataFrame]:
-    """Shared title/description check family. ``values_col`` holds the
-    extracted tag texts array."""
+    df: DataFrame, tag: str, vals: Column, config: dict
+) -> tuple[DataFrame, list[Column]]:
+    """Shared title/description check family over ``vals``, the
+    extracted tag texts. Returns ``df`` with the window columns the
+    configured checks read, and the checks' legs."""
     cfg = config.get(tag, {})
-    parts: list[DataFrame] = []
-    vals = F.col(values_col)
+    legs: list[Column] = []
     multi = F.size(vals) > 1
+    single = ~multi
     nonempty = F.array_remove(F.transform(vals, lambda t: F.trim(t)), "")
     # last non-empty value wins, like the reference's overwrite loop
     value = F.when(F.size(nonempty) > 0, F.element_at(nonempty, -1)).otherwise(
         F.lit("")
     )
-    single = df.filter(~multi)
 
     if "problem_multi" in cfg:
-        parts.append(
-            emit_checks(
-                df.filter(multi),
+        legs.append(
+            check_leg(
                 f"metatags-problem-multi-{tag}",
                 valid=F.lit(False),
                 value=F.size(vals),
                 error=F.lit(f"multiple {tag} tags"),
+                when=multi,
             )
         )
     if f"has_{tag}" in cfg:
         want = bool(cfg[f"has_{tag}"])
         exists = F.size(nonempty) > 0
-        parts.append(
-            emit_checks(
-                single,
+        legs.append(
+            check_leg(
                 f"metatags-has_{tag}",
                 valid=exists == F.lit(want),
                 value=value,
@@ -73,101 +70,77 @@ def _tag_checks(
                     (F.size(vals) == 0) & (exists != F.lit(want)),
                     F.lit(f"{tag} missing"),
                 ).otherwise(F.lit("")),
+                when=single,
             )
         )
     if f"is_{tag}_empty" in cfg:
         want = bool(cfg[f"is_{tag}_empty"])
         empty = F.size(nonempty) == 0
-        parts.append(
-            emit_checks(
-                single,
+        legs.append(
+            check_leg(
                 f"metatags-is_{tag}_empty",
                 valid=empty == F.lit(want),
                 value=value,
+                when=single,
             )
         )
-    if f"has_{tag}_changed" in cfg:
+    changed = f"has_{tag}_changed" in cfg
+    duplicates = f"has_{tag}_duplicates" in cfg
+    if not (changed or duplicates):
+        return df, legs
+
+    # Both read each URL's single-tag snapshots in date order: one window
+    # gives a snapshot's predecessor and whether a later one exists.
+    # Multi-tag rows fall into partitions of their own and emit neither.
+    name = {c: f"__{c}_{tag}" for c in ("multi", "v", "prev", "latest", "g")}
+    v, prev, latest, group = (F.col(name[c]) for c in ("v", "prev", "latest", "g"))
+    by_url = Window.partitionBy("urlset", "__u", name["multi"]).orderBy("date")
+    df = (
+        df.withColumn(name["multi"], multi)
+        .withColumn(name["v"], value)
+        .withColumn(name["prev"], F.lag(v).over(by_url))
+        .withColumn(name["latest"], F.lead(F.lit(True)).over(by_url).isNull())
+    )
+    if changed:
         want = bool(cfg[f"has_{tag}_changed"])
-        w = Window.partitionBy("urlset", assemble_url(F.col("url"))).orderBy(
-            F.asc("date")
-        )
-        with_prev = single.withColumn("__v", value).withColumn(
-            "__prev", F.lag("__v").over(w)
-        )
-        latest = (
-            with_prev.withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy("urlset", assemble_url(F.col("url"))).orderBy(
-                        F.desc("date")
-                    )
-                ),
-            )
-            .filter((F.col("__rn") == 1) & F.col("__prev").isNotNull())
-        )
-        changed = F.col("__v") != F.col("__prev")
-        parts.append(
-            emit_checks(
-                latest,
+        legs.append(
+            check_leg(
                 f"metatags-has_{tag}_changed",
-                valid=changed == F.lit(want),
-                value=F.col("__v"),
-                diff=F.col("__prev"),
+                valid=(v != prev) == F.lit(want),
+                value=v,
+                diff=prev,
+                when=single & latest & prev.isNotNull(),
             )
         )
-    if f"has_{tag}_duplicates" in cfg:
+    if duplicates:
         want = bool(cfg[f"has_{tag}_duplicates"])
-        latest = (
-            single.withColumn("__v", value)
-            .withColumn("__u", assemble_url(F.col("url")))
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy("urlset", "__u").orderBy(F.desc("date"))
-                ),
-            )
-            .filter((F.col("__rn") == 1) & (F.col("__v") != ""))
+        # each URL's newest non-empty value, grouped by value per urlset
+        newest = single & latest & (v != "")
+        df = df.withColumn(
+            name["g"],
+            F.sort_array(
+                F.collect_list("__u").over(Window.partitionBy("urlset", v, newest))
+            ),
         )
-        groups = (
-            latest.groupBy("urlset", "__v")
-            .agg(F.sort_array(F.collect_list(F.struct("__u", "url"))).alias("__g"))
-        )
-        exploded = groups.select(
-            "urlset",
-            "__v",
-            F.col("__g"),
-            F.explode("__g").alias("__e"),
-        ).select(
-            "urlset",
-            "__v",
-            F.col("__e.url").alias("url"),
-            F.col("__e.__u").alias("__u"),
-            F.array_join(
-                F.transform(
-                    F.filter("__g", lambda s: s.getField("__u") != F.col("__u")),
-                    lambda s: s.getField("__u"),
-                ),
-                ", ",
-            ).alias("__others"),
-        )
-        dup = F.col("__others") != ""
-        parts.append(
-            emit_checks(
-                exploded,
+        others = F.array_join(F.filter(group, lambda u: u != F.col("__u")), ", ")
+        dup = others != ""
+        legs.append(
+            check_leg(
                 f"metatags-has_{tag}_duplicates",
                 valid=dup == F.lit(want),
-                value=F.col("__v"),
-                diff=F.col("__others"),
+                value=v,
+                diff=others,
                 error=F.when(dup, F.lit(f"{tag} duplicates in url-set detected"))
                 .otherwise(F.lit("")),
+                when=newest,
             )
         )
-    return parts
+    return df, legs
 
 
 def _canonical_checks(
-    extracted: DataFrame, config: dict, probes: DataFrame | None
-) -> list[DataFrame]:
+    df: DataFrame, config: dict, probes: DataFrame | None
+) -> tuple[DataFrame, list[Column]]:
     """The full canonical family (reference metatags.py:688-807).
 
     get_canonical_href (:688-698) iterates every <link rel=canonical> and
@@ -184,34 +157,36 @@ def _canonical_checks(
       produced OUTSIDE the lazy DAG (live connector or FixtureConnector in
       tests; side-effecting HTTP never hides inside a transformation).
       valid = (status == 200) == assert; error when a href probes non-200.
+      A document emits one row per probe of its href, and one with no
+      status when its href was not probed.
     """
     canonical_cfg = config["canonical"]
     if canonical_cfg is True:  # legacy single-check grammar
         canonical_cfg = {"canonical_is_self_referencing": True}
-    own = assemble_url(F.col("url"))
-    exists = F.size("__canonicals") > 0
-    href = F.when(exists, F.element_at("__canonicals", -1)).otherwise(F.lit(""))
-    extracted = extracted.withColumn("__href", href)
-    parts: list[DataFrame] = []
+    canonicals = F.col("__f.canonicals")
+    exists = F.size(canonicals) > 0
+    df = df.withColumn(
+        "__href", F.when(exists, F.element_at(canonicals, -1)).otherwise(F.lit(""))
+    )
+    href = F.col("__href")
+    legs: list[Column] = []
     if "has_canonical" in canonical_cfg:
         want = bool(canonical_cfg["has_canonical"])
-        parts.append(
-            emit_checks(
-                extracted,
+        legs.append(
+            check_leg(
                 "metatags-has_canonical",
                 valid=exists & F.lit(want),
-                value=F.col("__href"),
+                value=href,
                 error=F.when(~exists, F.lit("no canonical")).otherwise(F.lit("")),
             )
         )
     if "canonical_is_self_referencing" in canonical_cfg:
         want = bool(canonical_cfg["canonical_is_self_referencing"])
-        parts.append(
-            emit_checks(
-                extracted,
+        legs.append(
+            check_leg(
                 "metatags-canonical_is_self_referencing",
-                valid=exists & (F.col("__href") == own) & F.lit(want),
-                value=F.col("__href"),
+                valid=exists & (href == F.col("__u")) & F.lit(want),
+                value=href,
                 error=F.when(~exists, F.lit("canonical missing")).otherwise(
                     F.lit("")
                 ),
@@ -224,42 +199,45 @@ def _canonical_checks(
                 "probes=(href, status_code) from the connector harness"
             )
         want = bool(canonical_cfg["canonical_href_200"])
-        probed = extracted.join(
-            probes.select(
-                F.col("href").alias("__href"),
-                F.col("status_code").alias("__status"),
-            ),
-            "__href",
-            "left",
+        probed = probes.groupBy(F.col("href").alias("__href")).agg(
+            F.collect_list(F.struct(F.col("status_code").alias("s"))).alias(
+                "__probes"
+            )
         )
-        ok200 = exists & (F.col("__status") == 200)
-        parts.append(
-            emit_checks(
-                probed,
+        df = df.join(probed, "__href", "left")
+
+        def href_200(status: Column) -> Column:
+            ok200 = exists & (status == 200)
+            return check_leg(
                 "metatags-canonical_href_200",
                 valid=ok200 == F.lit(want),
-                value=F.col("__href"),
+                value=href,
                 error=F.when(
-                    exists & ~F.coalesce(F.col("__status") == 200, F.lit(False)),
+                    exists & ~F.coalesce(status == 200, F.lit(False)),
                     F.lit("href in canonical not valid"),
                 ).otherwise(F.lit("")),
             )
+
+        legs.append(
+            F.when(F.col("__probes").isNull(), href_200(F.lit(None))).otherwise(
+                F.flatten(F.transform("__probes", lambda p: href_200(p["s"])))
+            )
         )
-    return parts
+    return df, legs
 
 
 @register("metatags")
 def evaluate(docs: DataFrame, config: dict, probes: DataFrame | None = None) -> DataFrame:
-    extracted = docs.withColumn("__titles", extract_titles(F.col("body"))).withColumn(
-        "__descriptions", extract_descriptions(F.col("body"))
-    ).withColumn("__canonicals", extract_canonicals(F.col("body")))
-
-    parts: list[DataFrame] = []
-    parts += _tag_checks(extracted, "title", "__titles", config)
-    parts += _tag_checks(extracted, "description", "__descriptions", config)
-
+    df = docs.withColumn("__f", html_facts(F.col("body"))).withColumn(
+        "__u", assemble_url(F.col("url"))
+    )
+    legs: list[Column] = []
+    for tag, field in (("title", "titles"), ("description", "descriptions")):
+        df, tag_legs = _tag_checks(df, tag, F.col(f"__f.{field}"), config)
+        legs += tag_legs
     if "canonical" in config:
-        parts += _canonical_checks(extracted, config, probes)
-    if not parts:
+        df, canonical_legs = _canonical_checks(df, config, probes)
+        legs += canonical_legs
+    if not legs:
         raise ValueError("metatags: no checks configured")
-    return union_checks(parts)
+    return emit_check_legs(df, legs)

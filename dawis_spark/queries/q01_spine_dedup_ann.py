@@ -3111,12 +3111,16 @@ def incremental_rollup_2ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy over (rollup ∪ batch partials) — grain-sized, independent of
     history length. Sums run on DECIMAL so any batch split produces
     bit-identical results (double summation order would drift)."""
+    import os
     import shutil
+    from urllib.parse import urlparse
 
     from dawis_spark.catalog import Warehouse
     from dawis_spark.operators.rollup import update_rollup
 
-    root = "/root/repo/spark-warehouse/incr_rollup_demo"
+    # the session's warehouse directory, given as a path or a file: URI
+    warehouse_dir = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    root = os.path.join(warehouse_dir, "incr_rollup_demo")
     shutil.rmtree(root, ignore_errors=True)  # idempotent re-runs
     wh = Warehouse(spark, root)
     events = spark.table("events").select(

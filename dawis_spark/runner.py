@@ -5,19 +5,28 @@ Reference: celery beat -> run_runner -> importlib module lookup ->
 CustomClass(configuration, key, connection).run() (dawis.py:26-70,
 modules/runner.py:10-25). Here an external scheduler (cron/Airflow) calls
 ``run_operation``: config lookup -> staging read -> processed-log filter ->
-module evaluate -> checks append -> processed-log mark. One lazy plan per
-module run; the only actions are the two appends.
+module evaluate -> checks append -> processed-log mark.
+
+An operation evaluates its unprocessed slice once: the slice is persisted
+for the run (an empty one ends the run with no write) and read by one
+checks append over every urlset and by the processed-log mark; the
+append reports its own row count through an ``Observation``. Staging is
+read with its known schema, so no job infers one. The persist is
+released before the run returns.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from dawis_spark.catalog import Warehouse
 from dawis_spark.config import Configuration
 from dawis_spark.modules import get_module
+from dawis_spark.modules._common import union_checks
+from dawis_spark.schemas import HTML_DOC_SCHEMA, ROBOTSTXT_DOC_SCHEMA
 from dawis_spark.streaming.processed import ProcessedLog
 
 # staging table per module family (the reference's per-module Mongo
@@ -29,6 +38,12 @@ STAGING_TABLES = {
     "robotstxt": "staging_robotstxt",
     "pagespeed": "staging_pagespeed",
 }
+# the staging tables whose layout schemas.py declares; others are inferred
+STAGING_SCHEMAS = {
+    "staging_html": HTML_DOC_SCHEMA,
+    "staging_robotstxt": ROBOTSTXT_DOC_SCHEMA,
+}
+DOC_KEY = ["urlset", "url", "date"]
 
 
 def run_operation(
@@ -42,25 +57,31 @@ def run_operation(
     """Run one operation module over every configured urlset; returns the
     number of check rows appended."""
     module_cfg = configuration.operations[module_name]
-    staging = warehouse.read(STAGING_TABLES[module_name])
+    table = STAGING_TABLES[module_name]
+    docs = warehouse.read(table, STAGING_SCHEMAS.get(table))
     log = ProcessedLog(spark, warehouse.root, module_name)
     if incremental:
-        staging = log.unprocessed(staging, ["urlset", "url", "date"])
-
+        docs = log.unprocessed(docs, DOC_KEY)
     evaluate = get_module(module_name)
-    total = 0
-    for urlset, settings in module_cfg.settings.items():
-        docs = staging.filter(staging.urlset == urlset)
-        checks: DataFrame = evaluate(docs, settings)
-        checks = checks.cache()
-        n = checks.count()
-        if n:
+    docs = docs.persist()
+    try:
+        if docs.isEmpty():
+            return 0
+        parts = [
+            evaluate(docs.filter(docs.urlset == urlset), settings)
+            for urlset, settings in module_cfg.settings.items()
+        ]
+        rows = 0
+        if parts:
+            appended = Observation()
+            checks = union_checks(parts).observe(appended, F.count(F.lit(1)).alias("n"))
             warehouse.write(checks, checks_table)
-        total += n
-        checks.unpersist()
-    if incremental:
-        log.mark(staging, ["urlset", "url", "date"])
-    return total
+            rows = appended.get["n"]
+        if incremental:
+            log.mark(docs, DOC_KEY)
+        return rows
+    finally:
+        docs.unpersist()
 
 
 def _cron_field(spec: str, value: int, lo: int, hi: int) -> bool:

@@ -20,8 +20,9 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from dawis_spark.schemas import ALERT_SCHEMA  # noqa: F401  (queue row shape)
+from dawis_spark.schemas import ALERT_SCHEMA
 
 
 class AlertQueue:
@@ -49,7 +50,8 @@ class AlertQueue:
         """Unconsumed alerts for the given groups (the INTENDED queue.py
         semantics: group IN groups)."""
         if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], ALERT_SCHEMA.add("seq", "long"))
+            seq = T.StructField("seq", T.LongType())
+            return self.spark.createDataFrame([], T.StructType([*ALERT_SCHEMA, seq]))
         df = self.spark.read.parquet(self.path)
         return df.filter(
             (F.col("seq") > self._offset()) & F.col("group").isin(list(groups))

@@ -190,20 +190,28 @@ def alerts_to_queue(
     JSON of every other alert column, the context the Dispatcher
     templates render. Returns the foreachBatch ``DataStreamWriter``:
     callers attach checkpoint/trigger and ``start()``; delivery
-    inherits the queue's at-least-once commit-after-send contract."""
+    inherits the queue's at-least-once commit-after-send contract.
+
+    The sink persists each micro-batch for its two actions (the empty
+    check and the append), so the stateful fold under it runs once per
+    batch, and releases it before returning."""
     text = F.concat(*(F.lit(p) if isinstance(p, str) else p for p in message))
     data = [c for c in alert_stream.columns if c != "crossed_ms"]
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        queue.add(
-            batch_df.select(
-                F.timestamp_millis(F.col("crossed_ms")).alias("date"),
-                F.lit(group).alias("group"),
-                text.alias("message"),
-                F.to_json(F.struct(*data)).alias("data"),
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            queue.add(
+                batch_df.select(
+                    F.timestamp_millis(F.col("crossed_ms")).alias("date"),
+                    F.lit(group).alias("group"),
+                    text.alias("message"),
+                    F.to_json(F.struct(*data)).alias("data"),
+                )
             )
-        )
+        finally:
+            batch_df.unpersist()
 
     return alert_stream.writeStream.foreachBatch(sink)

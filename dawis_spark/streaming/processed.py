@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class ProcessedLog:
@@ -25,18 +26,25 @@ class ProcessedLog:
         self.path = os.path.join(root, f"processed_{op}")
 
     def unprocessed(self, staging: DataFrame, key_cols: list[str]) -> DataFrame:
-        """Staging rows not yet seen by this op (left-anti vs the log)."""
+        """Staging rows not yet seen by this op (left-anti vs the log). The
+        log is read with the schema ``mark`` writes: the staging key
+        fields plus ``processed_at``."""
         if not os.path.exists(self.path):
             return staging
-        log = self.spark.read.parquet(self.path).select(*key_cols).distinct()
+        schema = T.StructType(
+            [staging.schema[c] for c in key_cols]
+            + [T.StructField("processed_at", T.TimestampType())]
+        )
+        log = self.spark.read.schema(schema).parquet(self.path).select(*key_cols)
         return staging.join(F.broadcast(log), key_cols, "left_anti")
 
     def mark(self, processed: DataFrame, key_cols: list[str]) -> None:
         """Append the batch's keys to the log (the reference's flag-update,
-        as an append)."""
+        as an append). A key staged twice is logged twice; the anti-join
+        reads a repeated key like a single one, so neither side pays a
+        shuffle to deduplicate."""
         (
             processed.select(*key_cols)
-            .distinct()
             .withColumn("processed_at", F.current_timestamp())
             .write.mode("append")
             .parquet(self.path)
