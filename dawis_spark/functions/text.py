@@ -136,6 +136,17 @@ def minhash_element(hashes_expr: str, a: int, b: int, dialect: str) -> str:
     )
 
 
+def minhash_sig(hashes_expr: str, n_perms: int, dialect: str) -> str:
+    """The ``n_perms``-element MinHash signature array of a hash set:
+    one ``minhash_element`` per ``minhash_coeffs`` permutation."""
+    elems = ", ".join(
+        minhash_element(hashes_expr, a, b, dialect) for a, b in minhash_coeffs(n_perms)
+    )
+    if dialect == "spark":
+        return f"array({elems})"
+    return f"[{elems}]"
+
+
 def jaccard(a_expr: str, b_expr: str, dialect: str) -> str:
     """|A ∩ B| / |A ∪ B| over distinct-hash arrays, as DOUBLE.
 

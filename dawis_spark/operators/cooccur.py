@@ -12,8 +12,8 @@ operators/profile.py — no ln/pow anywhere).
 Scale shape: the basket relation shuffles once on user_id; pair
 generation is a within-partition self-join per user whose output is
 sum-of-basket-size-squared — the classic blowup. The guard is the same
-size-based routing the near-dup family uses (operators/dedup.py's
-max_block_rows): baskets larger than ``max_basket`` are DROPPED before
+size-based routing the near-dup family uses (operators/pairs.py's
+capped_blocks): baskets larger than ``max_basket`` are DROPPED before
 pairing (a power user who touched everything carries no similarity
 signal and quadratic cost — standard practice in production co-occurrence
 jobs). The cap is part of the operator's definition, so the oracle

@@ -13,6 +13,10 @@ Scale design:
     (Broder 1997; Leskovec/Rajaraman/Ullman ch.3). Only candidate PAIRS pay
     the exact-Jaccard verification.
   - SimHash: one explode + groupBy(doc) with map-side partial aggregation.
+
+The pair operators' candidate self-joins, verification joins and
+capped-block router are operators/pairs.py; this module supplies the
+shingle-hash relation and the candidate generators.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import text as TXT
+from dawis_spark.operators.pairs import capped_blocks, self_pairs, verify
 
 
 def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -68,6 +73,18 @@ def _shingle_hashes_col(text_col: str, shingle_k: int):
 
     udf = F.pandas_udf(_batch, T.ArrayType(T.LongType())).asNondeterministic()
     return udf(text_col)
+
+
+def shingle_relation(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int
+) -> DataFrame:
+    """(id, sh): each document's distinct word-``shingle_k`` hashes, spread
+    across the workers first. A document shorter than ``shingle_k`` words
+    has an empty ``sh``; callers that need a non-empty set filter
+    ``size(sh) > 0`` themselves."""
+    return ensure_parallelism(df).select(
+        F.col(id_col), _shingle_hashes_col(text_col, shingle_k).alias("sh")
+    )
 
 
 def exact_duplicate_groups(
@@ -169,16 +186,10 @@ def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, n_perms: int = 8, shingle_k: int = 3
 ) -> DataFrame:
     """(id, sig array<bigint>) MinHash signatures — map-side only."""
-    elems = [
-        TXT.minhash_element("__sh", a, b, "spark")
-        for a, b in TXT.minhash_coeffs(n_perms)
-    ]
-    sig = "array(" + ", ".join(elems) + ")"
-    df = ensure_parallelism(df)
     return (
-        df.select(F.col(id_col), _shingle_hashes_col(text_col, shingle_k).alias("__sh"))
-        .filter(F.size("__sh") > 0)
-        .select(F.col(id_col), F.expr(sig).alias("sig"))
+        shingle_relation(df, id_col, text_col, shingle_k)
+        .filter(F.size("sh") > 0)
+        .select(F.col(id_col), F.expr(TXT.minhash_sig("sh", n_perms, "spark")).alias("sig"))
     )
 
 
@@ -215,15 +226,8 @@ def lsh_candidate_pairs(
     exploded = sig_df.select(
         *keys, F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
     ).select(*keys, id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    left = exploded.select(
-        *keys, F.col("band"), F.col("key"), F.col(id_col).alias("id_a")
-    )
-    right = exploded.select(
-        *keys, F.col("band"), F.col("key"), F.col(id_col).alias("id_b")
-    )
     return (
-        left.join(right, [*keys, "band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        self_pairs(exploded, [*keys, "band", "key"], id_col)
         .select(*keys, "id_a", "id_b")
         .distinct()
     )
@@ -248,36 +252,15 @@ def minhash_near_duplicates(
     # spills to disk if it outgrows memory — far cheaper than re-hashing
     # the corpus per consumer (plan-level exchange reuse does not fire
     # across these differently-projected consumers).
-    hashes = (
-        ensure_parallelism(df)
-        .select(F.col(id_col), _shingle_hashes_col(text_col, shingle_k).alias("sh"))
-        .persist()
-    )
-    elems = [
-        TXT.minhash_element("sh", a, b, "spark")
-        for a, b in TXT.minhash_coeffs(n_perms)
-    ]
+    hashes = shingle_relation(df, id_col, text_col, shingle_k).persist()
     sigs = hashes.filter(F.size("sh") > 0).select(
-        F.col(id_col), F.expr("array(" + ", ".join(elems) + ")").alias("sig")
+        F.col(id_col), F.expr(TXT.minhash_sig("sh", n_perms, "spark")).alias("sig")
     )
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
-    a = hashes.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = hashes.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     jac = TXT.jaccard("sh_a", "sh_b", "spark")
-    # Verification joins are SHUFFLE_HASH on the pair ids: the hash-array
-    # relation is 1-2 orders smaller than the corpus but still corpus-sized,
-    # so it must never broadcast (a broadcast has to fit in every executor's
-    # memory — guaranteed OOM at 100 TB). Shuffling it by id partitions the
-    # build side; candidate pairs (tiny rows) shuffle alongside. shuffle_hash
-    # skips the sort a merge join would pay on the wide array rows.
     return (
-        cands.join(a.hint("shuffle_hash"), "id_a")
-        .join(b.hint("shuffle_hash"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.expr(jac), 6).alias("jaccard"),
-        )
+        verify(cands, hashes, id_col, ["sh"])
+        .select("id_a", "id_b", F.round(F.expr(jac), 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -343,77 +326,46 @@ def ngram_jaccard_pairs(
     # Persisted: consumed by both verify sides (and the hot-block signature
     # relation when a cap is set) — (id, hash array) is 1-2 orders smaller
     # than the documents and far cheaper to cache than to re-hash per
-    # consumer (cf. minhash_near_duplicates).
+    # consumer.
     hashes = (
-        ensure_parallelism(df)
-        .select(F.col(id_col), _shingle_hashes_col(text_col, shingle_k).alias("sh"))
+        shingle_relation(df, id_col, text_col, shingle_k)
         .filter(F.size("sh") > 0)
         .persist()
     )
+    rows_per_band = n_perms // bands
+
+    def hot_pairs(big: DataFrame) -> DataFrame:
+        # Persisted (r15): both sides of the banded bucket self-join read
+        # this relation, and the two join legs do NOT end in canonically-
+        # identical exchanges (measured: zero ReusedExchange in the plan) —
+        # without the persist the n_perms-element MinHash fold ran once per
+        # side. Hot-block rows only, (g, id, sig[n_perms]) — the signature-
+        # relation budget the family already pays. The same persist inside
+        # lsh_candidate_pairs itself measured NEUTRAL for the minhash/oph
+        # callers (their fold is cheaper relative to the cache-read cost of
+        # the 4x-wider exploded band relation), so the fix stays local.
+        big_sigs = (
+            big.join(hashes, id_col)  # hashes is already empty-shingle-filtered
+            .select(
+                "g", F.col(id_col), F.expr(TXT.minhash_sig("sh", n_perms, "spark")).alias("sig")
+            )
+            .persist()
+        )
+        return lsh_candidate_pairs(big_sigs, id_col, bands, rows_per_band, extra_keys=("g",))
+
     # Pair generation may still propose pairs with an empty-shingle member;
     # the verify inner join against the FILTERED hash relation drops them —
     # identically on the exact and LSH routes.
     ids = df.select(F.col(group_col).alias("g"), F.col(id_col))
-    a = hashes.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = hashes.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    pairs = capped_blocks(ids, id_col, max_block_rows, hot_pairs)
     jac = TXT.jaccard("sh_a", "sh_b", "spark")
-
-    def all_pairs(ids_df: DataFrame) -> DataFrame:
-        return (
-            ids_df.select("g", F.col(id_col).alias("id_a"))
-            .join(ids_df.select("g", F.col(id_col).alias("id_b")), "g")
-            .filter(F.col("id_a") < F.col("id_b"))
-        )
-
-    def verify(pairs: DataFrame) -> DataFrame:
-        # Shuffle-hash on pair ids — the hash relation is corpus-sized and
-        # must never broadcast (see minhash_near_duplicates).
-        return (
-            pairs.join(a.hint("shuffle_hash"), "id_a")
-            .join(b.hint("shuffle_hash"), "id_b")
-            .select(
-                F.col("g").alias(group_col),
-                "id_a",
-                "id_b",
-                F.round(F.expr(jac), 6).alias("jaccard"),
-            )
-        )
-
-    if max_block_rows is None:
-        return verify(all_pairs(ids))
-
-    sizes = ids.groupBy("g").agg(F.count(F.lit(1)).alias("__bn"))
-    # persisted: the size-tagged id relation routes BOTH the small-block
-    # and hot-block branches — (g, id, count) rows only
-    tagged = ids.join(sizes, "g").persist()
-    small = tagged.filter(F.col("__bn") <= max_block_rows).select("g", id_col)
-    big = tagged.filter(F.col("__bn") > max_block_rows).select("g", id_col)
-    exact = verify(all_pairs(small)).withColumn("pair_method", F.lit("exact"))
-    rows_per_band = n_perms // bands
-    elems = [
-        TXT.minhash_element("sh", p, q, "spark") for p, q in TXT.minhash_coeffs(n_perms)
-    ]
-    # Persisted (r15): both sides of the banded bucket self-join read
-    # this relation, and the two join legs do NOT end in canonically-
-    # identical exchanges (measured: zero ReusedExchange in the plan) —
-    # without the persist the n_perms-element MinHash fold ran once per
-    # side. Hot-block rows only, (g, id, sig[n_perms]) — the signature-
-    # relation budget the family already pays. The same persist inside
-    # lsh_candidate_pairs itself measured NEUTRAL for the minhash/oph
-    # callers (their fold is cheaper relative to the cache-read cost of
-    # the 4x-wider exploded band relation), so the fix stays local.
-    big_sigs = (
-        big.join(hashes, id_col)  # hashes is already empty-shingle-filtered
-        .select(
-            "g", F.col(id_col), F.expr("array(" + ", ".join(elems) + ")").alias("sig")
-        )
-        .persist()
+    return verify(pairs, hashes, id_col, ["sh"]).select(
+        F.col("g").alias(group_col),
+        "id_a",
+        "id_b",
+        F.round(F.expr(jac), 6).alias("jaccard"),
+        *pairs.columns[3:],  # pair_method, when capped
     )
-    lsh_pairs = lsh_candidate_pairs(
-        big_sigs, id_col, bands, rows_per_band, extra_keys=("g",)
-    )
-    approx = verify(lsh_pairs).withColumn("pair_method", F.lit("lsh"))
-    return exact.unionByName(approx)
 
 
 def connected_components(
@@ -563,15 +515,14 @@ def prefix_filter_pairs(
 
     Scale shape: one df-count aggregation (vocab-sized), one shuffle
     join tokens⋈df (vocab keys), candidate generation shuffles only
-    PREFIX postings, and verification joins hash arrays by pair id via
-    shuffle-hash (never broadcast — corpus-sized). Completeness is
-    exact; tested by equivalence against the all-pairs verify.
+    PREFIX postings, and verification joins hash arrays by pair id
+    (operators/pairs.verify). Completeness is exact; tested by
+    equivalence against the all-pairs verify.
 
     Output: (id_a, id_b, jaccard) with jaccard ≥ t, ids ordered.
     """
     hashes = (
-        ensure_parallelism(df)
-        .select(F.col(id_col), _shingle_hashes_col(text_col, shingle_k).alias("sh"))
+        shingle_relation(df, id_col, text_col, shingle_k)
         .filter(F.size("sh") > 0)
         .persist()
     )
@@ -645,12 +596,9 @@ def prefix_filter_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    a = hashes.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = hashes.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     jac = TXT.jaccard("sh_a", "sh_b", "spark")
     return (
-        cand.join(a.hint("shuffle_hash"), "id_a")
-        .join(b.hint("shuffle_hash"), "id_b")
+        verify(cand, hashes, id_col, ["sh"])
         .select("id_a", "id_b", F.round(F.expr(jac), 6).alias("jaccard"))
         .filter(F.col("jaccard") >= t_num / t_den)
     )
@@ -804,8 +752,7 @@ def containment_pairs(
     # promises for exchanges. (explode of an empty/null array yields no
     # rows, so the oracle's len(sh) > 0 gate is implicit.)
     sh = (
-        ensure_parallelism(df)
-        .select(F.col(id_col), _shingle_hashes_col(text_col, shingle_k).alias("sh"))
+        shingle_relation(df, id_col, text_col, shingle_k)
         .select(F.col(id_col), F.explode("sh").alias("h"))
         .persist()
     )

@@ -23,7 +23,7 @@ Design — why this is NOT textbook HNSW, and why that is the point:
   graph connects each node to its ``m`` nearest neighbors WITHIN its
   quantizer cell (symmetrized), so the kNN build is a self-join keyed
   on cid — each cell an independent bounded block, the same
-  block-routing discipline as embedding_near_dup_pairs. At 100 TB each
+  block-routing discipline as operators/pairs.capped_blocks. At 100 TB each
   cell's subgraph builds in parallel from its own partition; cross-cell
   reachability comes from probing several cells, not from cross-cell
   edges. (Production HNSW shards the same way: per-shard graphs +

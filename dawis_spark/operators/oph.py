@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import text as TXT
+from dawis_spark.operators.dedup import lsh_candidate_pairs, shingle_relation
+from dawis_spark.operators.pairs import verify
 
 MOD = TXT.MOD
 # borrow offset: any constant coprime-ish spread; collisions between a
@@ -82,13 +84,10 @@ def oph_signatures(
 ) -> DataFrame:
     """(id, sig array<bigint>) OPH signatures — map-side only, one hash
     pass over the shingles (vs K passes for classic MinHash)."""
-    from dawis_spark.operators.dedup import _shingle_hashes_col, ensure_parallelism
-
-    df = ensure_parallelism(df)
     return (
-        df.select(F.col(id_col), _shingle_hashes_col(text_col, shingle_k).alias("__sh"))
-        .filter(F.size("__sh") > 0)
-        .select(F.col(id_col), F.expr(oph_signature("__sh", k_bins, "spark")).alias("sig"))
+        shingle_relation(df, id_col, text_col, shingle_k)
+        .filter(F.size("sh") > 0)
+        .select(F.col(id_col), F.expr(oph_signature("sh", k_bins, "spark")).alias("sig"))
     )
 
 
@@ -109,16 +108,9 @@ def oph_near_duplicates(
     estimator diagnostic.
 
     Scale: identical plan shape to the classic pipeline (band-bucket
-    self-join is the only shuffle; verification joins are shuffle_hash on
-    pair ids, never broadcast of a corpus-sized side) — only the map-side
-    signature cost drops K-fold.
+    self-join is the only shuffle; verification is operators/pairs.verify)
+    — only the map-side signature cost drops K-fold.
     """
-    from dawis_spark.operators.dedup import (
-        _shingle_hashes_col,
-        ensure_parallelism,
-        lsh_candidate_pairs,
-    )
-
     rows_per_band = k_bins // bands
     # hash array and signature ride ONE PERSISTED relation: the two
     # band-join legs and both verification sides all consume `sigs`, so
@@ -130,8 +122,7 @@ def oph_near_duplicates(
     # subset of the size>0 ids by construction, so filtering the join
     # side too changes nothing)
     sigs = (
-        ensure_parallelism(df)
-        .select(F.col(id_col), _shingle_hashes_col(text_col, shingle_k).alias("sh"))
+        shingle_relation(df, id_col, text_col, shingle_k)
         .filter(F.size("sh") > 0)
         .select(
             F.col(id_col), "sh",
@@ -140,24 +131,13 @@ def oph_near_duplicates(
         .persist()
     )
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
-    a = sigs.select(
-        F.col(id_col).alias("id_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("sig").alias("sig_a"),
-    )
-    b = sigs.select(
-        F.col(id_col).alias("id_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("sig").alias("sig_b"),
-    )
     jac = TXT.jaccard("sh_a", "sh_b", "spark")
     slots_eq = (
         "aggregate(zip_with(sig_a, sig_b, (x, y) -> case when x = y then 1 else 0 end), "
         "cast(0 as bigint), (acc, v) -> acc + v)"
     )
     return (
-        cands.join(a.hint("shuffle_hash"), "id_a")
-        .join(b.hint("shuffle_hash"), "id_b")
+        verify(cands, sigs, id_col, ["sh", "sig"])
         .select(
             "id_a",
             "id_b",

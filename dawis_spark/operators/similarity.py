@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import vectors as V
+from dawis_spark.operators.pairs import capped_blocks, self_pairs, verify
 
 
 def _cosine_col() -> F.Column:
@@ -197,10 +198,6 @@ def embedding_near_dup_pairs(
     share the block AND a sign-pattern bucket) instead of all-pairs; with
     a cap set the output gains a ``pair_method`` ('exact' | 'lsh') flag.
     """
-    from pyspark.sql import functions as F
-
-    from dawis_spark.functions import vectors as V
-
     nsq = V.norm_sq("vec", "spark")
     # persisted: the normed relation feeds both verify sides, the block
     # sizing, and the hot-block bucket hash — up to 7 end-to-end
@@ -213,71 +210,38 @@ def embedding_near_dup_pairs(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
     ).withColumn("nrm", F.sqrt(F.expr(nsq))).persist()
-    a = v.select(
-        F.col("id").alias("id_a"), F.col("vec").alias("a_vec"), F.col("nrm").alias("a_nrm")
-    )
-    b = v.select(
-        F.col("id").alias("id_b"), F.col("vec").alias("b_vec"), F.col("nrm").alias("b_nrm")
-    )
-    cos = F.round(
-        F.expr(V.dot("a_vec", "b_vec", "spark")) / (F.col("a_nrm") * F.col("b_nrm")), 6
-    )
-    ids = v.select("g", "id")
-
-    def all_pairs(ids_df: DataFrame) -> DataFrame:
-        return (
-            ids_df.select("g", F.col("id").alias("id_a"))
-            .join(ids_df.select("g", F.col("id").alias("id_b")), "g")
-            .filter(F.col("id_a") < F.col("id_b"))
-        )
-
-    def verify(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.join(a.hint("shuffle_hash"), "id_a")
-            .join(b.hint("shuffle_hash"), "id_b")
-            .select(
-                F.col("g").alias(block_col),
-                "id_a",
-                "id_b",
-                cos.alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-
-    if max_block_rows is None:
-        return verify(all_pairs(ids))
-
-    sizes = ids.groupBy("g").agg(F.count(F.lit(1)).alias("__bn"))
-    # persisted: the size-tagged id relation routes BOTH the small-block
-    # all-pairs legs (id_a and id_b sides) AND the hot-block bucket path
-    # — four end-to-end evaluations of the sizing aggregate without it
-    # (same treatment as dedup.py's block router). Bare (g, id, count)
-    # rows — id-relation-scale, no vectors.
-    tagged = ids.join(sizes, "g").persist()
-    small = tagged.filter(F.col("__bn") <= max_block_rows).select("g", "id")
-    big = tagged.filter(F.col("__bn") > max_block_rows).select("g", "id")
-    exact = verify(all_pairs(small)).withColumn("pair_method", F.lit("exact"))
-    # Hot blocks: sign-LSH bucket within the block (map-side hash on both
-    # sides; pairing only within (block, bucket) keeps the quadratic capped).
-    # persisted: both sides of the within-bucket pair join read it — the
-    # n_planes x dim sign-projection fold would otherwise run twice per
-    # hot-block row. Bare (g, bucket, id) rows.
     bucket = lsh_bucket_expr(n_planes, dim, "spark")
-    big_b = (
-        big.join(v.select("id", "vec"), "id")
-        .withColumn("bucket", F.expr(bucket))
-        .select("g", "bucket", "id")
-        .persist()
+
+    def hot_pairs(big: DataFrame) -> DataFrame:
+        # Hot blocks: sign-LSH bucket within the block (map-side hash on
+        # both sides; pairing only within (block, bucket) keeps the
+        # quadratic capped). persisted: both sides of the within-bucket
+        # pair join read it — the n_planes x dim sign-projection fold
+        # would otherwise run twice per hot-block row. Bare (g, bucket,
+        # id) rows.
+        bucketed = (
+            big.join(v.select("id", "vec"), "id")
+            .withColumn("bucket", F.expr(bucket))
+            .select("g", "bucket", "id")
+            .persist()
+        )
+        return self_pairs(bucketed, ["g", "bucket"], "id").select("g", "id_a", "id_b").distinct()
+
+    pairs = capped_blocks(v.select("g", "id"), "id", max_block_rows, hot_pairs)
+    cos = F.round(
+        F.expr(V.dot("vec_a", "vec_b", "spark")) / (F.col("nrm_a") * F.col("nrm_b")), 6
     )
-    lsh_pairs = (
-        big_b.select("g", "bucket", F.col("id").alias("id_a"))
-        .join(big_b.select("g", "bucket", F.col("id").alias("id_b")), ["g", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("g", "id_a", "id_b")
-        .distinct()
+    return (
+        verify(pairs, v, "id", ["vec", "nrm"])
+        .select(
+            F.col("g").alias(block_col),
+            "id_a",
+            "id_b",
+            cos.alias("cosine"),
+            *pairs.columns[3:],  # pair_method, when capped
+        )
+        .filter(F.col("cosine") >= threshold)
     )
-    approx = verify(lsh_pairs).withColumn("pair_method", F.lit("lsh"))
-    return exact.unionByName(approx)
 
 
 # ivf_ann_topk embeds the centroid set as SQL literals; each double costs

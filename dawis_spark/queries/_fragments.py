@@ -193,6 +193,23 @@ def trade_edges(spark: SparkSession) -> DataFrame:
     ).select("e.src", "e.dst")
 
 
+def trade_seeds_cte(nation: int) -> str:
+    """The ``seeds`` CTE: one nation's customers as trade-graph nodes."""
+    return f"""seeds AS (
+  SELECT c_custkey * 2 AS node FROM customer WHERE c_nationkey = {nation}
+)"""
+
+
+def trade_seeds(spark: SparkSession, nation: int) -> DataFrame:
+    """One nation's customers as trade-graph nodes: (node).
+    SQL twin: ``trade_seeds_cte``."""
+    return (
+        spark.table("customer")
+        .filter(F.col("c_nationkey") == nation)
+        .select((F.col("c_custkey") * 2).alias("node"))
+    )
+
+
 # ---------------------------------------------------------------------------
 # BM25 leg (oracle side; the Spark side is operators/corpus.bm25_scores)
 # ---------------------------------------------------------------------------

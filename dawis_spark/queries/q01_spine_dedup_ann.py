@@ -603,6 +603,21 @@ from dawis_spark.operators import textstats as _TS
 
 _N_PERMS, _BANDS, _SHINGLE_K = 8, 4, 3
 _ROWS_PER_BAND = _N_PERMS // _BANDS
+# Oracle twin of operators/dedup.lsh_candidate_pairs: the band key of
+# band ``b`` of a ``sig`` list, and, over a ``sigs (doc_id, sig)`` CTE,
+# the banded rows and the distinct candidate pairs they propose.
+_BAND_KEY = " || ':' || ".join(
+    f"CAST(sig[b * {_ROWS_PER_BAND} + {r + 1}] AS VARCHAR)"
+    for r in range(_ROWS_PER_BAND)
+)
+_LSH_CANDS_CTES = f"""bands AS (
+  SELECT doc_id, t.b AS band, {_BAND_KEY} AS key
+  FROM sigs, range(0, {_BANDS}) t(b)
+),
+cands AS (
+  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
+  FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
+)"""
 
 
 def _norm_text(dialect: str) -> str:
@@ -663,32 +678,30 @@ def minhash_signatures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+def _doc_near_dups(spark: SparkSession) -> DataFrame:
+    """The documents' MinHash-LSH near-duplicate pairs at Jaccard >= 0.2:
+    (id_a, id_b, jaccard). SQL twin: ``_lsh_pairs_oracle(0.2)``."""
+    from dawis_spark.operators.dedup import minhash_near_duplicates
+
+    return minhash_near_duplicates(
+        spark.table("documents"),
+        "doc_id",
+        "text",
+        n_perms=_N_PERMS,
+        bands=_BANDS,
+        threshold=0.2,
+        shingle_k=_SHINGLE_K,
+    )
+
+
 def _lsh_pairs_oracle(threshold: float) -> str:
     sh = _TXT.shingle_hashes("text", _SHINGLE_K, "duck")
-    sig = (
-        "["
-        + ", ".join(
-            _TXT.minhash_element("sh", a, b, "duck")
-            for a, b in _TXT.minhash_coeffs(_N_PERMS)
-        )
-        + "]"
-    )
-    band_key = " || ':' || ".join(
-        f"CAST(sig[b * {_ROWS_PER_BAND} + {r + 1}] AS VARCHAR)"
-        for r in range(_ROWS_PER_BAND)
-    )
+    sig = _TXT.minhash_sig("sh", _N_PERMS, "duck")
     jac = _TXT.jaccard("a.sh", "b.sh", "duck")
     return f"""
 WITH hashes AS (SELECT doc_id, {sh} AS sh FROM documents),
 sigs AS (SELECT doc_id, {sig} AS sig FROM hashes WHERE len(sh) > 0),
-bands AS (
-  SELECT doc_id, t.b AS band, {band_key} AS key
-  FROM sigs, range(0, {_BANDS}) t(b)
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-)
+{_LSH_CANDS_CTES}
 SELECT id_a, id_b, ROUND({jac}, 6) AS jaccard
 FROM cands JOIN hashes a ON a.doc_id = id_a JOIN hashes b ON b.doc_id = id_b
 WHERE ROUND({jac}, 6) >= {threshold}
@@ -704,17 +717,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the ONLY shuffle is the band-bucket self-join on (band, key);
     exact Jaccard runs on candidate pairs, not all pairs. AQE splits
     skewed buckets (boilerplate-heavy corpora)."""
-    from dawis_spark.operators.dedup import minhash_near_duplicates
-
-    return minhash_near_duplicates(
-        spark.table("documents"),
-        "doc_id",
-        "text",
-        n_perms=_N_PERMS,
-        bands=_BANDS,
-        threshold=0.2,
-        shingle_k=_SHINGLE_K,
-    ).orderBy("id_a", "id_b")
+    return _doc_near_dups(spark).orderBy("id_a", "id_b")
 
 
 def _ngram_topk_oracle(cap: int = 100) -> str:
@@ -724,18 +727,7 @@ def _ngram_topk_oracle(cap: int = 100) -> str:
     matches at ANY scale factor, not just where every block stays small
     (sf0.1 has 250-row blocks that route through LSH)."""
     sh = _TXT.shingle_hashes("text", _SHINGLE_K, "duck")
-    sig = (
-        "["
-        + ", ".join(
-            _TXT.minhash_element("sh", a, b, "duck")
-            for a, b in _TXT.minhash_coeffs(_N_PERMS)
-        )
-        + "]"
-    )
-    band_key = " || ':' || ".join(
-        f"CAST(sig[b * {_ROWS_PER_BAND} + {r + 1}] AS VARCHAR)"
-        for r in range(_ROWS_PER_BAND)
-    )
+    sig = _TXT.minhash_sig("sh", _N_PERMS, "duck")
     jac = _TXT.jaccard("a.sh", "b.sh", "duck")
     return f"""
 WITH h0 AS (SELECT source, doc_id, {sh} AS sh FROM documents),
@@ -746,7 +738,7 @@ bsigs AS (
   FROM h JOIN sizes s ON s.source = h.source AND s.bn > {cap}
 ),
 bbands AS (
-  SELECT source, doc_id, t.b AS band, {band_key} AS key
+  SELECT source, doc_id, t.b AS band, {_BAND_KEY} AS key
   FROM bsigs, range(0, {_BANDS}) t(b)
 ),
 pairs AS (
@@ -2399,22 +2391,11 @@ def duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters are near-cliques so rounds ~ diameter ~ 3. The oracle walks
     the same graph with a recursive CTE (operators/dedup.py
     connected_components)."""
-    from dawis_spark.operators.dedup import (
-        connected_components,
-        minhash_near_duplicates,
-    )
+    from dawis_spark.operators.dedup import connected_components
 
     # persisted: connected_components reads the pair relation twice
     # (both edge directions) — one evaluation of the LSH pipeline, not two
-    pairs = minhash_near_duplicates(
-        spark.table("documents"),
-        "doc_id",
-        "text",
-        n_perms=_N_PERMS,
-        bands=_BANDS,
-        threshold=0.2,
-        shingle_k=_SHINGLE_K,
-    ).persist()
+    pairs = _doc_near_dups(spark).persist()
     return (
         connected_components(pairs)
         .select(F.col("id").alias("doc_id"), "cluster_id")
@@ -2442,21 +2423,9 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: on top of the cluster pass, one id-keyed left join against a
     cluster relation orders smaller than the corpus (AQE broadcasts it
     when tiny) and a map-side survivor filter."""
-    from dawis_spark.operators.dedup import (
-        connected_components,
-        keep_one_per_cluster,
-        minhash_near_duplicates,
-    )
+    from dawis_spark.operators.dedup import connected_components, keep_one_per_cluster
 
-    pairs = minhash_near_duplicates(
-        spark.table("documents"),
-        "doc_id",
-        "text",
-        n_perms=_N_PERMS,
-        bands=_BANDS,
-        threshold=0.2,
-        shingle_k=_SHINGLE_K,
-    ).persist()
+    pairs = _doc_near_dups(spark).persist()
     clusters = connected_components(pairs)
     return keep_one_per_cluster(
         spark.table("documents"), clusters, "doc_id"

@@ -21,11 +21,14 @@ from dawis_spark.queries._fragments import (
     trade_edges,
     trade_lines,
     trade_nodes,
+    trade_seeds,
+    trade_seeds_cte,
 )
 from dawis_spark.queries._registry import query
 from dawis_spark.queries.q01_spine_dedup_ann import (
     _BANDS,
     _BM25_TERMS,
+    _LSH_CANDS_CTES,
     _N_PERMS,
     _ROWS_PER_BAND,
     _SHINGLE_K,
@@ -2297,10 +2300,6 @@ def _oph_pairs_oracle(threshold: float) -> str:
 
     sh = _TXT.shingle_hashes("text", _SHINGLE_K, "duck")
     sig = oph_signature("sh", _N_PERMS, "duck")
-    band_key = " || ':' || ".join(
-        f"CAST(sig[b * {_ROWS_PER_BAND} + {r + 1}] AS VARCHAR)"
-        for r in range(_ROWS_PER_BAND)
-    )
     jac = _TXT.jaccard("a.sh", "b.sh", "duck")
     slots = (
         f"list_sum(list_transform(range(1, {_N_PERMS + 1}), "
@@ -2309,14 +2308,7 @@ def _oph_pairs_oracle(threshold: float) -> str:
     return f"""
 WITH hashes AS (SELECT doc_id, {sh} AS sh FROM documents),
 sigs AS (SELECT doc_id, {sig} AS sig FROM hashes WHERE len(sh) > 0),
-bands AS (
-  SELECT doc_id, t.b AS band, {band_key} AS key
-  FROM sigs, range(0, {_BANDS}) t(b)
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM bands x JOIN bands y ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-)
+{_LSH_CANDS_CTES}
 SELECT id_a, id_b, ROUND({jac}, 6) AS jaccard,
        CAST({slots} AS BIGINT) AS slots_eq,
        ROUND(CAST({slots} AS DOUBLE) / {_N_PERMS}, 6) AS oph_est
@@ -2359,14 +2351,7 @@ _LSH_CURVE_ANCHOR_CAP = 500  # fixed 20-anchor eval at EVERY scale factor
 
 def _lsh_curve_oracle() -> str:
     sh = _TXT.shingle_hashes("text", _SHINGLE_K, "duck")
-    sig = (
-        "["
-        + ", ".join(
-            _TXT.minhash_element("sh", a, b, "duck")
-            for a, b in _TXT.minhash_coeffs(_N_PERMS)
-        )
-        + "]"
-    )
+    sig = _TXT.minhash_sig("sh", _N_PERMS, "duck")
     band_hit = " OR ".join(
         "("
         + " AND ".join(
@@ -2410,23 +2395,18 @@ def lsh_detection_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: anchors broadcast against one corpus scan — linear, the
     ann_recall_* eval pattern, never an all-pairs join."""
-    from dawis_spark.operators.dedup import _shingle_hashes_col, ensure_parallelism
+    from dawis_spark.operators.dedup import shingle_relation
 
-    docs = ensure_parallelism(spark.table("documents"))
-    h = docs.select(
-        "doc_id", _shingle_hashes_col("text", _SHINGLE_K).alias("sh")
-    ).filter(F.size("sh") > 0)
-    elems = [
-        _TXT.minhash_element("sh", a, b, "spark")
-        for a, b in _TXT.minhash_coeffs(_N_PERMS)
-    ]
+    h = shingle_relation(spark.table("documents"), "doc_id", "text", _SHINGLE_K).filter(
+        F.size("sh") > 0
+    )
     # persisted: the anchor (broadcast build) and candidate sides are
     # both full corpus passes through the shingle-hash Arrow UDF + the
     # 8-permutation MinHash fold — the repo's priciest per-row pipeline
     # ran twice without it. Signature-relation budget (same as the
     # minhash family's persisted postings).
     hs = h.select(
-        "doc_id", "sh", F.expr("array(" + ", ".join(elems) + ")").alias("sig")
+        "doc_id", "sh", F.expr(_TXT.minhash_sig("sh", _N_PERMS, "spark")).alias("sig")
     ).persist()
     anchors = hs.filter(
         (F.col("doc_id") % _LSH_CURVE_ANCHOR_MOD == 0)
@@ -2878,9 +2858,7 @@ def _ppr_oracle(iterations: int, top_n: int, seed_nation: int) -> str:
 
     return f"""
 WITH {TRADE_EDGES_CTES},
-seeds AS (
-  SELECT c_custkey * 2 AS node FROM customer WHERE c_nationkey = {seed_nation}
-),
+{trade_seeds_cte(seed_nation)},
 {ppr_oracle_ctes('edges', 'seeds', iterations)}
 SELECT node, rank_scaled,
        round(CAST(rank_scaled AS DOUBLE) / 1e12, 6) AS rank
@@ -2911,11 +2889,7 @@ def personalized_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dawis_spark.operators.graph import personalized_pagerank
 
     edges = trade_edges(spark).persist()
-    seeds = (
-        spark.table("customer")
-        .filter(F.col("c_nationkey") == _PPR_SEED_NATION)
-        .select((F.col("c_custkey") * 2).alias("node"))
-    )
+    seeds = trade_seeds(spark, _PPR_SEED_NATION)
     return (
         personalized_pagerank(edges, seeds, iterations=3)
         .filter(F.col("rank_scaled") > 0)
@@ -3430,9 +3404,7 @@ def _bfs_oracle(max_hops: int, seed_nation: int) -> str:
 
     return f"""
 WITH {TRADE_EDGES_CTES},
-seeds AS (
-  SELECT c_custkey * 2 AS node FROM customer WHERE c_nationkey = {seed_nation}
-),
+{trade_seeds_cte(seed_nation)},
 {bfs_oracle_ctes('edges', 'seeds', max_hops)}
 SELECT hops, CAST(COUNT(*) AS BIGINT) AS n_nodes
 FROM bfs GROUP BY hops ORDER BY hops
@@ -3454,11 +3426,7 @@ def bfs_hop_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dawis_spark.operators.graph import bfs_hops
 
     edges = trade_edges(spark).persist()
-    seeds = (
-        spark.table("customer")
-        .filter(F.col("c_nationkey") == _PPR_SEED_NATION)
-        .select((F.col("c_custkey") * 2).alias("node"))
-    )
+    seeds = trade_seeds(spark, _PPR_SEED_NATION)
     return (
         bfs_hops(edges, seeds, max_hops=3)
         .groupBy("hops")
@@ -4183,9 +4151,7 @@ edges AS (
   UNION ALL
   SELECT s AS src, c AS dst, w FROM rel
 ),
-seeds AS (
-  SELECT c_custkey * 2 AS node FROM customer WHERE c_nationkey = {seed_nation}
-),
+{trade_seeds_cte(seed_nation)},
 {bellman_ford_oracle_ctes('edges', 'seeds', iterations)}
 SELECT node, dist FROM bf
 WHERE node % 2 = 1
@@ -4224,11 +4190,7 @@ def bellman_ford_fastest_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(rel.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w"))
         .persist()
     )
-    seeds = (
-        spark.table("customer")
-        .filter(F.col("c_nationkey") == _PPR_SEED_NATION)
-        .select((F.col("c_custkey") * 2).alias("node"))
-    )
+    seeds = trade_seeds(spark, _PPR_SEED_NATION)
     return (
         bellman_ford(edges, seeds, iterations=3)
         .filter(F.col("node") % 2 == 1)

@@ -15,12 +15,10 @@ from dawis_spark.queries._fragments import (
 )
 from dawis_spark.queries._registry import query
 from dawis_spark.queries.q01_spine_dedup_ann import (
-    _BANDS,
     _LINED,
-    _N_PERMS,
-    _SHINGLE_K,
     _TXT,
     _VEC,
+    _doc_near_dups,
     _lsh_pairs_oracle,
 )
 from dawis_spark.queries.q02_corpus_quality_classifiers import (
@@ -1201,20 +1199,10 @@ def split_leakage_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluate map-side from the id hash (zero extra exchange — the join
     back to splits keys on doc_id)."""
     from dawis_spark.operators.corpus import hash_split
-    from dawis_spark.operators.dedup import minhash_near_duplicates
 
-    docs = spark.table("documents")
-    pairs = minhash_near_duplicates(
-        docs,
-        "doc_id",
-        "text",
-        n_perms=_N_PERMS,
-        bands=_BANDS,
-        threshold=0.2,
-        shingle_k=_SHINGLE_K,
-    )
+    pairs = _doc_near_dups(spark)
     sp = hash_split(
-        docs.select("doc_id"), "doc_id", {"train": 0.90, "val": 0.05, "test": 0.05}
+        spark.table("documents").select("doc_id"), "doc_id", {"train": 0.90, "val": 0.05, "test": 0.05}
     )
     sa = sp.select(F.col("doc_id").alias("id_a"), F.col("split").alias("split_a"))
     sb = sp.select(F.col("doc_id").alias("id_b"), F.col("split").alias("split_b"))

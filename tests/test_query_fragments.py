@@ -16,7 +16,7 @@ _SF = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")  # the smallest t
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in ("orders", "lineitem", "events"):
+    for t in ("orders", "lineitem", "events", "customer"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{_SF}/{t}.parquet')"
         )
@@ -69,6 +69,15 @@ def test_trade_edges_equal_their_ctes(tables, duck):
     assert got == want
     # symmetric: every customer->supplier edge has its reverse
     assert sorted((d, s) for s, d in got) == got
+
+
+def test_trade_seeds_equal_their_cte(tables, duck):
+    got = _rows(fr.trade_seeds(tables, 3))
+    want = sorted(
+        duck.execute(f"WITH {fr.trade_seeds_cte(3)} SELECT node FROM seeds").fetchall()
+    )
+    assert len(want) > 0
+    assert got == want
 
 
 _EXACT = [(0, 1), (0, 2), (1, 3), (1, 4)]
