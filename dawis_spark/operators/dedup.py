@@ -344,11 +344,10 @@ def ngram_jaccard_pairs(
         # lsh_candidate_pairs itself measured NEUTRAL for the minhash/oph
         # callers (their fold is cheaper relative to the cache-read cost of
         # the 4x-wider exploded band relation), so the fix stays local.
+        sig = F.expr(TXT.minhash_sig("sh", n_perms, "spark")).alias("sig")
         big_sigs = (
             big.join(hashes, id_col)  # hashes is already empty-shingle-filtered
-            .select(
-                "g", F.col(id_col), F.expr(TXT.minhash_sig("sh", n_perms, "spark")).alias("sig")
-            )
+            .select("g", F.col(id_col), sig)
             .persist()
         )
         return lsh_candidate_pairs(big_sigs, id_col, bands, rows_per_band, extra_keys=("g",))

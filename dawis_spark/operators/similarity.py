@@ -225,7 +225,11 @@ def embedding_near_dup_pairs(
             .select("g", "bucket", "id")
             .persist()
         )
-        return self_pairs(bucketed, ["g", "bucket"], "id").select("g", "id_a", "id_b").distinct()
+        return (
+            self_pairs(bucketed, ["g", "bucket"], "id")
+            .select("g", "id_a", "id_b")
+            .distinct()
+        )
 
     pairs = capped_blocks(v.select("g", "id"), "id", max_block_rows, hot_pairs)
     cos = F.round(

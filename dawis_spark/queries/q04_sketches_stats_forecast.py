@@ -1200,9 +1200,10 @@ def split_leakage_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to splits keys on doc_id)."""
     from dawis_spark.operators.corpus import hash_split
 
+    docs = spark.table("documents")
     pairs = _doc_near_dups(spark)
     sp = hash_split(
-        spark.table("documents").select("doc_id"), "doc_id", {"train": 0.90, "val": 0.05, "test": 0.05}
+        docs.select("doc_id"), "doc_id", {"train": 0.90, "val": 0.05, "test": 0.05}
     )
     sa = sp.select(F.col("doc_id").alias("id_a"), F.col("split").alias("split_a"))
     sb = sp.select(F.col("doc_id").alias("id_b"), F.col("split").alias("split_b"))
