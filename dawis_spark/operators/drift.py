@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dawis_spark.functions.folds import left_sum
+
 # log10(1 + 1/d) for d = 1..9, rounded to 9 digits — literals, not
 # computed at query time (ln/log are not cross-engine bit-stable).
 BENFORD_P = {
@@ -190,12 +192,11 @@ def psi_from_counts(ref_counts: list[int], cur_counts: list[int]) -> float:
 
     n_ref = sum(ref_counts)
     n_cur = sum(cur_counts)
-    acc = 0.0
-    for r, c in zip(ref_counts, cur_counts):
-        p = max(r / n_ref, 1e-6)
-        q = max(c / n_cur, 1e-6)
-        acc += (q - p) * math.log(q / p)
-    return acc
+    pq = [
+        (max(r / n_ref, 1e-6), max(c / n_cur, 1e-6))
+        for r, c in zip(ref_counts, cur_counts)
+    ]
+    return left_sum((q - p) * math.log(q / p) for p, q in pq)
 
 
 def bin_index(x: float, lo: float, hi: float, n_bins: int) -> int:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import text as TXT
+from dawis_spark.functions.folds import ordered_sum
 from dawis_spark.operators.textstats import STOPWORDS
 
 # separators: the tiny public per-language stopword inventory (en) plus
@@ -96,10 +97,7 @@ def rake_keyphrases(
                 " ",
             ).alias("phrase"),
             F.count(F.lit(1)).cast("bigint").alias("n_words"),
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(pos, wscore))), "
-                "cast(0.0 as double), (acc, e) -> acc + e.wscore)"
-            ).alias("pscore"),
+            F.expr(ordered_sum("wscore", "pos")).alias("pscore"),
         )
     )
     return (

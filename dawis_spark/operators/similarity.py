@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import vectors as V
+from dawis_spark.functions.folds import left_sum
 from dawis_spark.operators.pairs import capped_blocks, self_pairs, verify
 
 
@@ -873,10 +874,7 @@ def pq_encode(corpus, id_col: str, vec_col: str, books) -> "DataFrame":
 
 
 def _py_norm_sq(cv: list[float]) -> float:
-    s = 0.0
-    for x in cv:
-        s += x * x
-    return s
+    return left_sum(x * x for x in cv)
 
 
 def pq_topk(
@@ -1057,10 +1055,7 @@ def _cent_literals(cent_rows):
 
 
 def _py_dot(a, b) -> float:
-    s = 0.0
-    for x, y in zip(a, b):
-        s += x * y
-    return s
+    return left_sum(x * y for x, y in zip(a, b))
 
 
 def ivfpq_residual_ann_topk(

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dawis_spark.functions.folds import ordered_sum
+
 
 def value_cum_walk(
     per_v: DataFrame,
@@ -217,10 +219,7 @@ def chi_square_independence(
         (
             F.countDistinct("c").cast("bigint") - 1
         ).alias("__cm1"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(r, c, term))), "
-            "cast(0.0 as double), (acc, e) -> acc + e.term)"
-        ).alias("chi2_raw"),
+        F.expr(ordered_sum("term", "r", "c")).alias("chi2_raw"),
     )
     return folded.select(
         "n_cells",
@@ -424,21 +423,12 @@ def ljung_box(
     terms = _acf_terms(series, ord_col, value_col, max_lag)
     folded = terms.agg(
         F.max("n").alias("n"),
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("lag"),
-                    (
-                        F.col("rho")
-                        * F.col("rho")
-                        / (F.col("n") - F.col("lag")).cast("double")
-                    ).alias("term"),
-                )
-            )
-        ).alias("ts"),
+        F.expr(
+            ordered_sum("rho * rho / CAST(n - lag AS DOUBLE)", "lag")
+        ).alias("s"),
     )
-    q_stat = F.col("n").cast("double") * (F.col("n") + 2).cast("double") * F.aggregate(
-        "ts", F.lit(0.0), lambda acc, t: acc + t["term"]
+    q_stat = (
+        F.col("n").cast("double") * (F.col("n") + 2).cast("double") * F.col("s")
     )
     return folded.select(
         F.col("n").cast("bigint").alias("n"),
@@ -678,10 +668,7 @@ def anova_oneway(
         F.sum("n_g").alias("n_i"),
         F.sum("s_g").alias("s_i"),
         F.sum("q_g").alias("q_i"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(g, t_g))), "
-            "cast(0.0 as double), (acc, e) -> acc + e.t_g)"
-        ).alias("sum_tg"),
+        F.expr(ordered_sum("t_g", "g")).alias("sum_tg"),
     )
     doubles = folded.selectExpr(
         "k_i",
@@ -744,14 +731,8 @@ def categorical_association(
         F.count(F.lit(1)).cast("bigint").alias("n_cells"),
         (F.countDistinct("r").cast("bigint") - 1).alias("rm1"),
         (F.countDistinct("c").cast("bigint") - 1).alias("cm1"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(r, c, chi_term))), "
-            "cast(0.0 as double), (acc, e) -> acc + e.chi_term)"
-        ).alias("chi2_raw"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(r, c, mi_term))), "
-            "cast(0.0 as double), (acc, e) -> acc + e.mi_term)"
-        ).alias("mi_raw"),
+        F.expr(ordered_sum("chi_term", "r", "c")).alias("chi2_raw"),
+        F.expr(ordered_sum("mi_term", "r", "c")).alias("mi_raw"),
     )
 
     def _entropy(key: str, marg: str) -> DataFrame:
@@ -764,10 +745,7 @@ def categorical_association(
             ).alias("h_term"),
         )
         return t.agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(g, h_term))), "
-                "cast(0.0 as double), (acc, e) -> acc + e.h_term)"
-            ).alias(f"h_{key}")
+            F.expr(ordered_sum("h_term", "g")).alias(f"h_{key}")
         )
 
     combined = (
@@ -838,10 +816,7 @@ def kruskal_wallis(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     )
     folded = terms.agg(
         F.count(F.lit(1)).cast("bigint").alias("k_i"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(g, t_g))), "
-            "cast(0.0 as double), (acc, e) -> acc + e.t_g)"
-        ).alias("sum_t"),
+        F.expr(ordered_sum("t_g", "g")).alias("sum_t"),
     )
     doubles = folded.crossJoin(F.broadcast(ties)).selectExpr(
         "k_i",
@@ -1027,10 +1002,7 @@ def g_test_independence(df: DataFrame, row_col: str, col_col: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_cells"),
         (F.countDistinct("r").cast("bigint") - 1).alias("__rm1"),
         (F.countDistinct("c").cast("bigint") - 1).alias("__cm1"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(r, c, g_term))), "
-            "cast(0.0 as double), (acc, e) -> acc + e.g_term)"
-        ).alias("g_raw"),
+        F.expr(ordered_sum("g_term", "r", "c")).alias("g_raw"),
     )
     return folded.select(
         "n_cells",
@@ -1431,10 +1403,7 @@ def hellinger_tvd(
     agg = terms.groupBy("n_a_i", "n_b_i").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_occ"),
         F.sum("tvd_num").alias("tvd_s"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(b, bc_term))),"
-            " cast(0.0 as double), (a, e) -> a + e.bc_term)"
-        ).alias("bc_s"),
+        F.expr(ordered_sum("bc_term", "b")).alias("bc_s"),
     )
     return agg.selectExpr(
         "CAST(n_a_i AS BIGINT) AS n_a",

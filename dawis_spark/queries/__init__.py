@@ -10,6 +10,9 @@ Conventions (driver contract, __spark_entry__.py):
   - every computed column is aliased identically in Spark and oracle SQL;
   - float aggregates are rounded to a fixed precision on BOTH sides so the
     value-hash is insensitive to summation-order ulp differences;
+  - an exact float sum is ``folds.ordered_sum`` in Spark and
+    ``folds.left_sum`` on the driver; the oracle keeps its own
+    ``list_reduce(… ORDER BY …)``;
   - date-ish outputs stay TIMESTAMP (never DATE) so pandas dtypes agree;
   - each query registers the testdata views itself (idempotent);
   - a relation several queries build is defined once in ``_fragments.py``

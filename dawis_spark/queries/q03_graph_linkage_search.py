@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dawis_spark.functions.folds import ordered_sum
 from dawis_spark.queries._fragments import (
     DAILY_REV_ORDERS_CTE,
     DAILY_TYPE_CENTS_SQL,
@@ -4495,8 +4496,7 @@ def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         dcg_row = ranked.join(grades, "doc_id").agg(
             F.coalesce(
                 F.expr(
-                    "aggregate(array_sort(collect_list(struct(rank, grade))), "
-                    f"cast(0.0 as double), (a, e) -> a + e.grade * element_at(array({w_arr}), e.rank))"
+                    ordered_sum(f"grade * element_at(array({w_arr}), rank)", "rank")
                 ),
                 F.lit(0.0),
             ).alias("dcg")

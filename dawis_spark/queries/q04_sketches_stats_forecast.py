@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dawis_spark.functions.folds import left_sum, ordered_sum
 from dawis_spark.queries._fragments import (
     DAILY_REV_ORDERS_CTE,
     DAILY_TYPE_CENTS_SQL,
@@ -1663,28 +1664,22 @@ def fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
             ws.append(r9(a / (a + b)))
         return ws
 
-    def fold(terms):
-        acc = 0.0
-        for t in terms:
-            acc += t
-        return acc
-
     for _ in range(_FS_EM_ITERS):
         ws = e_step()
-        W = fold(float(n) * w for (_, _, _, n), w in zip(pats, ws))
-        L = fold(float(n) * (1.0 - w) for (_, _, _, n), w in zip(pats, ws))
+        W = left_sum(float(n) * w for (_, _, _, n), w in zip(pats, ws))
+        L = left_sum(float(n) * (1.0 - w) for (_, _, _, n), w in zip(pats, ws))
         new_m, new_u = {}, {}
         for i, f in enumerate(_FS_FIELDS):
             gsel = [pt[i] for pt in pats]
             new_m[f] = r9(
-                fold(
+                left_sum(
                     float(n) * w if g else 0.0
                     for (_, _, _, n), w, g in zip(pats, ws, gsel)
                 )
                 / W
             )
             new_u[f] = r9(
-                fold(
+                left_sum(
                     float(n) * (1.0 - w) if g else 0.0
                     for (_, _, _, n), w, g in zip(pats, ws, gsel)
                 )
@@ -3596,7 +3591,7 @@ ORDER BY component
 @query("pca_top_component", oracle=_pca_oracle())
 def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal component of the embedding covariance by 12
-    relational power iterations: per-dimension loading + the dominant
+    power iterations: per-dimension loading + the dominant
     eigenvalue. The spectral profile an embedding pipeline checks
     before trusting cosine geometry (anisotropy = one direction
     hogging variance degrades every ANN family upstream), and the
@@ -3606,11 +3601,14 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     components quantize to ints (x * 1e6, the nearest_centroid
     discipline) so the 64x64 covariance comes from EXACT integer
     moments paying one double cast per entry; every matvec and norm in
-    the 12 unrolled iterations is an ORDERED FOLD (by j within row,
-    by i across rows), so both engines accumulate in the same order
-    and the loadings agree bit-for-bit regardless of convergence
-    state. Sign is fixed by the max-|loading| component (ties by
-    smallest index).
+    the 12 iterations is a left fold from 0.0 (``folds.left_sum``, by j
+    within row, by i across rows), the order of the oracle's unrolled
+    ``list_reduce`` CTEs. Python floats are IEEE doubles and
+    ``math.sqrt`` is correctly rounded, so the driver and the oracle
+    accumulate the same values and the loadings agree bit-for-bit
+    regardless of convergence state. Sign is fixed by the max-|loading|
+    component (ties by smallest index). The 6-digit rounding stays a
+    Spark projection (HALF_UP; Python's ``round`` is half-even).
 
     Scale: the Gram pass is a mapInPandas integer accumulator — each
     Arrow batch contributes one exact int64 Q^T Q (values fit: q <=
@@ -3620,9 +3618,13 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python rounding can diverge from the oracle's). The earlier
     explode-to-pairs formulation was 64x the scan volume — measured 7x
     for 10x data at sf1; the accumulator's linear part is just the
-    batch matmul. Iterations run on 64-row relations with 64-row
-    persisted half-steps (the graph-family pattern); nothing downstream
-    of the first aggregate sees data volume."""
+    batch matmul. The 4,096-cell covariance is dimension-bounded: it is
+    collected once and the iterations run on the driver (MLlib's
+    computePrincipalComponents shape: Gramian distributed, solve
+    local); nothing downstream of the first aggregate sees data
+    volume."""
+    import math
+
     import pandas as pd
 
     emb = spark.table("embeddings")
@@ -3674,45 +3676,27 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             "j",
         )
         .selectExpr("i", "j", f"{_PCA_C} AS c")
-        # 4,096-row matrix referenced by all 12 iterations: localCheckpoint
-        # truncates the Gram lineage out of every per-iteration plan (the
-        # dedup.py:458 discipline — without it the doubly-referenced
-        # half-steps compound the LOGICAL plan ~3x per iteration).
-        .localCheckpoint(eager=False)
     )
-    v = moms.select("i", F.lit(0.125).alias("v"))
-    nr = None
+    # the Gram is a full dim x dim square, so every column j is a row i
+    rows: dict = {}
+    for r in mat.collect():
+        rows.setdefault(r["i"], []).append((r["j"], r["c"]))
+    v = {i: 0.125 for i in rows}
+    nr = 0.0
     for _ in range(_PCA_ITERS):
-        w = (
-            mat.join(v.select(F.col("i").alias("j"), "v"), "j")
-            .select("i", (F.col("c") * F.col("v")).alias("cv"), "j")
-            .groupBy("i")
-            .agg(
-                F.expr(
-                    "aggregate(array_sort(collect_list(struct(j, cv))), "
-                    "cast(0.0 as double), (a, e) -> a + e.cv)"
-                ).alias("w")
-            )
-            # 64 rows; reused by the norm AND the next v — truncate here
-            .localCheckpoint(eager=False)
-        )
-        nr = w.select("i", (F.col("w") * F.col("w")).alias("ww")).agg(
-            F.expr(
-                "sqrt(aggregate(array_sort(collect_list(struct(i, ww))), "
-                "cast(0.0 as double), (a, e) -> a + e.ww))"
-            ).alias("nr")
-        )
-        v = w.crossJoin(F.broadcast(nr)).select(
-            "i", (F.col("w") / F.col("nr")).alias("v")
-        )
-    ref = (
-        v.orderBy(F.abs(F.col("v")).desc(), F.col("i").asc())
-        .limit(1)
-        .selectExpr("CASE WHEN v < 0 THEN -1.0 ELSE 1.0 END AS sgn")
-    )
+        w = {
+            i: left_sum(c * v[j] for j, c in sorted(row))
+            for i, row in rows.items()
+        }
+        nr = math.sqrt(left_sum(x * x for _, x in sorted(w.items())))
+        v = {i: x / nr for i, x in w.items()}
+    ref = min(v.items(), key=lambda iv: (-abs(iv[1]), iv[0]), default=(0, 0.0))
+    sgn = -1.0 if ref[1] < 0 else 1.0
     return (
-        v.crossJoin(F.broadcast(ref))
-        .crossJoin(F.broadcast(nr))
+        spark.createDataFrame(
+            [(i, x, sgn, nr) for i, x in v.items()],
+            "i int, v double, sgn double, nr double",
+        )
         .select(
             F.col("i").cast("int").alias("component"),
             F.round(F.col("v") * F.col("sgn"), 6).alias("loading"),
@@ -4164,14 +4148,8 @@ def eb_shrunk_urgent_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     prior = rates.agg(
         F.count(F.lit(1)).cast("double").alias("k"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(n_name, p_i))), "
-            "cast(0.0 as double), (a, e) -> a + e.p_i)"
-        ).alias("sum_p"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(n_name, p_i * p_i as pp))), "
-            "cast(0.0 as double), (a, e) -> a + e.pp)"
-        ).alias("sum_p2"),
+        F.expr(ordered_sum("p_i", "n_name")).alias("sum_p"),
+        F.expr(ordered_sum("p_i * p_i", "n_name")).alias("sum_p2"),
     )
     return (
         rates.crossJoin(F.broadcast(prior))

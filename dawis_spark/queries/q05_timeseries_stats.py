@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dawis_spark.functions.folds import left_sum, ordered_sum
 from dawis_spark.queries._fragments import (
     DAILY_REV_ORDERS_CTE,
     DAILY_TYPE_CENTS_SQL,
@@ -881,16 +882,12 @@ def heaps_law_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("cum_tokens").cast("double")).alias("lx"),
         F.log(F.col("cum_vocab").cast("double")).alias("ly"),
     )
-    fold = (
-        "aggregate(array_sort(collect_list(struct(b, {v} as vv))), "
-        "cast(0.0 as double), (a, e) -> a + e.vv)"
-    )
     fit = pts.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.expr(fold.format(v="lx")).alias("sx"),
-        F.expr(fold.format(v="ly")).alias("sy"),
-        F.expr(fold.format(v="lx * lx")).alias("sxx"),
-        F.expr(fold.format(v="lx * ly")).alias("sxy"),
+        F.expr(ordered_sum("lx", "b")).alias("sx"),
+        F.expr(ordered_sum("ly", "b")).alias("sy"),
+        F.expr(ordered_sum("lx * lx", "b")).alias("sxx"),
+        F.expr(ordered_sum("lx * ly", "b")).alias("sxy"),
     )
     return (
         pts.crossJoin(F.broadcast(fit))
@@ -1380,21 +1377,24 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     per-iteration renormalization.
 
     Exactness: transition probabilities are one identical double
-    division of exact counts; every matvec and the normalizer are
-    ORDERED FOLDS (by from-state within target, by state across), so
-    both engines walk the same float sequence — the PCA power-iteration
-    discipline applied to a |types| x |types| stochastic matrix.
+    division of exact counts, made in Spark; every matvec and the
+    normalizer are left folds from 0.0 (``folds.left_sum``, by
+    from-state within target, by state across), the order of the
+    oracle's unrolled ``list_reduce`` CTEs, so the driver and the
+    oracle walk the same float sequence — the PCA power-iteration
+    discipline applied to a |types| x |types| stochastic matrix. The
+    6-digit rounding stays a Spark projection (HALF_UP).
 
     Scale: the per-user sequence window and the (from, to) count
     aggregate are the only row-scale stages (same shape as
     event_transitions; the whale guard applies upstream when key mass
-    demands it); iterations run on state-count-sized relations with
-    localCheckpoint half-steps."""
+    demands it). The |types|^2 transition matrix is collected once and
+    the iterations run on the driver."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = spark.table("events").select(
-        "event_type", F.lead("event_type").over(w).alias("nxt")
+        "event_type", F.lead("event_type").over(by_user).alias("nxt")
     )
     cnt = (
         seq.filter(F.col("nxt").isNotNull())
@@ -1402,46 +1402,35 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
     rowt = cnt.groupBy("f").agg(F.sum("c").cast("bigint").alias("rt"))
-    pm = (
-        cnt.join(F.broadcast(rowt), "f")
-        .select(
-            "f",
-            "t",
-            (F.col("c").cast("double") / F.col("rt").cast("double")).alias("p"),
-        )
-        .localCheckpoint(eager=False)
+    pm = cnt.join(F.broadcast(rowt), "f").select(
+        "f",
+        "t",
+        (F.col("c").cast("double") / F.col("rt").cast("double")).alias("p"),
     )
-    states = pm.select(F.col("f").alias("s")).distinct()
-    k = states.agg(F.count(F.lit(1)).cast("double").alias("kk"))
-    v = states.crossJoin(F.broadcast(k)).select(
-        "s", (F.lit(1.0) / F.col("kk")).alias("v")
-    )
+    rows = pm.collect()
+    into: dict = {}
+    for r in rows:
+        into.setdefault(r["t"], []).append((r["f"], r["p"]))
+    states = {r["f"] for r in rows}
+    v = {s: 1.0 / float(len(states)) for s in states}
+    # the oracle's inner joins: a from-state missing from v contributes
+    # nothing, and the next v holds only the targets reached
     for _ in range(_MSTAT_ITERS):
-        w_df = (
-            pm.join(v.select(F.col("s").alias("f"), "v"), "f")
-            .select(F.col("t").alias("s"), "f", (F.col("p") * F.col("v")).alias("pv"))
-            .groupBy("s")
-            .agg(
-                F.expr(
-                    "aggregate(array_sort(collect_list(struct(f, pv))), "
-                    "cast(0.0 as double), (a, e) -> a + e.pv)"
-                ).alias("w")
-            )
-            .localCheckpoint(eager=False)
+        w = {}
+        for t, col in into.items():
+            terms = sorted((f, p) for f, p in col if f in v)
+            if terms:
+                w[t] = left_sum(p * v[f] for f, p in terms)
+        z = left_sum(x for _, x in sorted(w.items()))
+        v = {s: x / z for s, x in w.items()}
+    return (
+        spark.createDataFrame(list(v.items()), "s string, v double")
+        .select(
+            F.col("s").alias("event_type"),
+            F.round("v", 6).alias("stationary_prob"),
         )
-        z = w_df.agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(s, w as ww))), "
-                "cast(0.0 as double), (a, e) -> a + e.ww)"
-            ).alias("z")
-        )
-        v = w_df.crossJoin(F.broadcast(z)).select(
-            "s", (F.col("w") / F.col("z")).alias("v")
-        )
-    return v.select(
-        F.col("s").alias("event_type"),
-        F.round("v", 6).alias("stationary_prob"),
-    ).orderBy("event_type")
+        .orderBy("event_type")
+    )
 
 
 # Delete-one-group jackknife over (g, r_i doubles): SE from the
@@ -1530,14 +1519,8 @@ def jackknife_urgent_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("double").alias("g"),
         F.max("nn").alias("nn"),
         F.max("kk").alias("kk"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(n_name, r_i))), "
-            "cast(0.0 as double), (a, e) -> a + e.r_i)"
-        ).alias("sr"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(n_name, r_i * r_i as rr))), "
-            "cast(0.0 as double), (a, e) -> a + e.rr)"
-        ).alias("sr2"),
+        F.expr(ordered_sum("r_i", "n_name")).alias("sr"),
+        F.expr(ordered_sum("r_i * r_i", "n_name")).alias("sr2"),
     )
     return folds.selectExpr(
         "CAST(g AS INT) AS n_groups",
@@ -1691,10 +1674,7 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b", "c_ref", "c_cur", f"{_PSI_TERM} AS term"
     )
     total = terms.agg(
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(b, term))), "
-            "cast(0.0 as double), (a, e) -> a + e.term)"
-        ).alias("psi_total")
+        F.expr(ordered_sum("term", "b")).alias("psi_total")
     )
     return (
         terms.crossJoin(F.broadcast(total))
@@ -1974,10 +1954,7 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("v", "frm", F.col("tgt2").alias("tgt"))
         .agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(tgt, p))), "
-                "cast(0.0 as double), (a, e) -> a + e.p)"
-            ).alias("p")
+            F.expr(ordered_sum("p", "tgt")).alias("p")
         )
     )
     # Absorption iterations run DRIVER-SIDE on the collected matrix —
@@ -1995,23 +1972,21 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(_MRE_ITERS):
         new_pv = {}
         for (v, s), edges in by_vs.items():
-            acc = 0.0
-            for tgt, p in sorted(edges):
-                x = (
+            new_pv[(v, s)] = left_sum(
+                p
+                * (
                     1.0
                     if tgt == "CONV"
                     else 0.0 if tgt == "DROP" else pv.get((v, tgt), 0.0)
                 )
-                acc += p * x
-            new_pv[(v, s)] = acc
+                for tgt, p in sorted(edges)
+            )
         pv = new_pv
     base_cvr = pv[("base", "START")]
     res = []
     for c in _MRE_CHANNELS:
         res.append((c, 1.0 - pv[(c, "START")] / base_cvr))
-    sre = 0.0
-    for c, re_c in sorted(res):
-        sre += re_c
+    sre = left_sum(re_c for _, re_c in sorted(res))
     out = [
         (c, round(base_cvr, 6), round(re_c, 6), round(re_c / sre, 6))
         for c, re_c in sorted(res)
@@ -2241,10 +2216,7 @@ def ece_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = gaps.agg(
         F.max("n").alias("n_docs"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(b, wgap))), "
-            "cast(0.0 as double), (a, e) -> a + e.wgap)"
-        ).alias("ece"),
+        F.expr(ordered_sum("wgap", "b")).alias("ece"),
         F.max("gap").alias("mce"),
     )
     brier = scored.agg(
@@ -2355,10 +2327,7 @@ def platt_recalibrated_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return gaps.agg(
             F.max("n").alias("n_docs"),
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(b, wgap))), "
-                "cast(0.0 as double), (a, e) -> a + e.wgap)"
-            ).alias("ece"),
+            F.expr(ordered_sum("wgap", "b")).alias("ece"),
         )
 
     before = ece_of("p_raw").selectExpr("n_docs", "ece AS ece_b")
@@ -3153,10 +3122,9 @@ def hurst_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("rs").isNotNull())
     per_w = rs.groupBy("w").agg(
         F.count("rs").cast("bigint").alias("n_blocks"),
-        F.expr(
-            "round(aggregate(array_sort(collect_list(struct(block, rs))), "
-            "cast(0.0 as double), (a, e) -> a + e.rs) / count(rs), 6)"
-        ).alias("rs_mean"),
+        F.expr(f"round({ordered_sum('rs', 'block')} / count(rs), 6)").alias(
+            "rs_mean"
+        ),
     )
     pts = per_w.selectExpr(
         "w", "n_blocks", "rs_mean",
@@ -3164,22 +3132,10 @@ def hurst_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fit = pts.agg(
         F.expr("cast(count(*) as double)").alias("np"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(w, lx))), "
-            "cast(0.0 as double), (a, e) -> a + e.lx)"
-        ).alias("sx"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(w, ly))), "
-            "cast(0.0 as double), (a, e) -> a + e.ly)"
-        ).alias("sy"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(w, lx * ly as v))), "
-            "cast(0.0 as double), (a, e) -> a + e.v)"
-        ).alias("sxy"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(w, lx * lx as v))), "
-            "cast(0.0 as double), (a, e) -> a + e.v)"
-        ).alias("sxx2"),
+        F.expr(ordered_sum("lx", "w")).alias("sx"),
+        F.expr(ordered_sum("ly", "w")).alias("sy"),
+        F.expr(ordered_sum("lx * ly", "w")).alias("sxy"),
+        F.expr(ordered_sum("lx * lx", "w")).alias("sxx2"),
     )
     return (
         pts.crossJoin(F.broadcast(fit))
@@ -3677,10 +3633,7 @@ def hosmer_lemeshow_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hl = terms.agg(
         (F.count(F.lit(1)).cast("bigint") - 2).alias("dof"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(b, t))), "
-            "cast(0.0 as double), (a, e) -> a + e.t)"
-        ).alias("hl_raw"),
+        F.expr(ordered_sum("t", "b")).alias("hl_raw"),
     )
     return (
         terms.crossJoin(F.broadcast(hl))
@@ -3903,18 +3856,12 @@ def mutual_info_feature_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("feature")
         .agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(y, h_t))), "
-                "cast(0.0 as double), (a, e) -> a + e.h_t)"
-            ).alias("h_y")
+            F.expr(ordered_sum("h_t", "y")).alias("h_y")
         )
     )
     mi = terms.groupBy("feature").agg(
         F.countDistinct("level").cast("bigint").alias("n_levels"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(level, y, mi_t))), "
-            "cast(0.0 as double), (a, e) -> a + e.mi_t)"
-        ).alias("mi_raw"),
+        F.expr(ordered_sum("mi_t", "level", "y")).alias("mi_raw"),
     )
     return (
         mi.join(hy, "feature")

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dawis_spark.functions.folds import ordered_sum
 from dawis_spark.queries._fragments import (
     DAILY_REV_ORDERS_CTE,
     bm25_ctes,
@@ -208,11 +209,7 @@ def search_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         apn = walk.agg(
             F.coalesce(
-                F.expr(
-                    "aggregate(array_sort(collect_list("
-                    "struct(rank, CAST(cumrel AS DOUBLE) / rank AS p))), "
-                    "cast(0.0 as double), (a, e) -> a + e.p)"
-                ),
+                F.expr(ordered_sum("CAST(cumrel AS DOUBLE) / rank", "rank")),
                 F.lit(0.0),
             ).alias("ap_num")
         )
@@ -228,9 +225,7 @@ def search_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = out.persist()
     m = out.agg(
         F.expr(
-            f"ROUND(aggregate(array_sort(collect_list("
-            f"struct(query_id, ap_at_{_IR_K} AS ap))), "
-            f"cast(0.0 as double), (a, e) -> a + e.ap) / COUNT(*), 6)"
+            f"ROUND({ordered_sum(f'ap_at_{_IR_K}', 'query_id')} / COUNT(*), 6)"
         ).alias(f"map_at_{_IR_K}")
     )
     return out.crossJoin(F.broadcast(m)).orderBy("query_id")
@@ -282,10 +277,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", "n_docs", "CAST(n_docs AS DOUBLE) / n AS p_raw"
     )
     z = p.agg(
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(source, sqrt(p_raw) AS s))), "
-            "cast(0.0 as double), (a, e) -> a + e.s)"
-        ).alias("denom")
+        F.expr(ordered_sum("sqrt(p_raw)", "source")).alias("denom")
     )
     return (
         p.crossJoin(F.broadcast(z))
@@ -2195,10 +2187,7 @@ def propensity_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ok.crossJoin(F.broadcast(tot))
         .selectExpr("s", f"ROUND({_STRAT_ATE_TERM}, 4) AS wterm")
         .agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(s, wterm))),"
-                " cast(0.0 as double), (a, e) -> a + e.wterm)"
-            ).alias("ate_raw")
+            F.expr(ordered_sum("wterm", "s")).alias("ate_raw")
         )
         .selectExpr("ROUND(ate_raw, 4) AS ate_stratified")
     )
@@ -4856,14 +4845,8 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
     )
     folded = terms.groupBy("n", "k").agg(
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(b, rel_t))), "
-            "cast(0.0 as double), (a, e) -> a + e.rel_t)"
-        ).alias("rel"),
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(b, res_t))), "
-            "cast(0.0 as double), (a, e) -> a + e.res_t)"
-        ).alias("res"),
+        F.expr(ordered_sum("rel_t", "b")).alias("rel"),
+        F.expr(ordered_sum("res_t", "b")).alias("res"),
     )
     brier = scored.agg(
         F.avg((F.col("p") - F.col("y")) * (F.col("p") - F.col("y"))).alias("bs")

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dawis_spark.functions.folds import ordered_sum
 from dawis_spark.plans.bounded import register_bounded
 from dawis_spark.queries._fragments import DAILY_REV_ORDERS_CTE
 from dawis_spark.queries._registry import query
@@ -1025,10 +1026,9 @@ def aa_calibration_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" AS DOUBLE) / {_AA_K}, 6)"
         ).alias("fpr"),
         F.expr("ROUND(MAX(abs(z)), 6)").alias("max_abs_z"),
-        F.expr(
-            "ROUND(aggregate(array_sort(collect_list(struct(s, abs(z) AS az))),"
-            f" CAST(0.0 AS DOUBLE), (a, e) -> a + e.az) / {_AA_K}, 6)"
-        ).alias("mean_abs_z"),
+        F.expr(f"ROUND({ordered_sum('abs(z)', 's')} / {_AA_K}, 6)").alias(
+            "mean_abs_z"
+        ),
     )
 
 
@@ -1241,10 +1241,7 @@ def region_trade_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AS contribution",
     )
     q = contrib.agg(
-        F.expr(
-            "aggregate(array_sort(collect_list(struct(r_name, contribution))),"
-            " CAST(0.0 AS DOUBLE), (a, e) -> a + e.contribution)"
-        ).alias("q_mod")
+        F.expr(ordered_sum("contribution", "r_name")).alias("q_mod")
     )
     return (
         contrib.crossJoin(F.broadcast(q))
