@@ -1079,8 +1079,6 @@ def test_fingerprint_detects_single_cell_change(spark):
 
 
 def test_iqr_fences_flag_known_outlier(spark):
-    from dawis_spark import queries as q
-
     # tight cluster + one far point: exactly one outlier above the fence
     rows = [(i, "2024-01-01 00:00:01", 1, "t", v) for i, v in enumerate(
         [10.0, 10.1, 10.2, 10.3, 10.4, 10.5, 10.6, 10.7, 99.0]
@@ -1088,7 +1086,6 @@ def test_iqr_fences_flag_known_outlier(spark):
     df = spark.createDataFrame(
         rows, "event_id bigint, ts string, user_id bigint, event_type string, value double"
     ).withColumn("ts", F.to_timestamp("ts"))
-    df.createOrReplaceTempView("events")
     from pyspark.sql import functions as FF
     v = df.select("event_type", FF.round(FF.col("value") * 100, 0).cast("bigint").alias("c"))
     q1, q3 = v.selectExpr("percentile(c, 0.25) q1", "percentile(c, 0.75) q3").collect()[0]
