@@ -3692,9 +3692,14 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = {i: x / nr for i, x in w.items()}
     ref = min(v.items(), key=lambda iv: (-abs(iv[1]), iv[0]), default=(0, 0.0))
     sgn = -1.0 if ref[1] < 0 else 1.0
+    # a pandas frame crosses through Arrow as one partition; a row list
+    # is parallelized into one task per core, seconds per run at
+    # local[32]
     return (
         spark.createDataFrame(
-            [(i, x, sgn, nr) for i, x in v.items()],
+            pd.DataFrame(
+                {"i": list(v), "v": list(v.values()), "sgn": sgn, "nr": nr}
+            ),
             "i int, v double, sgn double, nr double",
         )
         .select(

@@ -1390,6 +1390,7 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     event_transitions; the whale guard applies upstream when key mass
     demands it). The |types|^2 transition matrix is collected once and
     the iterations run on the driver."""
+    import pandas as pd
     from pyspark.sql import Window
 
     by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1423,8 +1424,12 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
                 w[t] = left_sum(p * v[f] for f, p in terms)
         z = left_sum(x for _, x in sorted(w.items()))
         v = {s: x / z for s, x in w.items()}
+    # a pandas frame goes through Arrow into one partition (see
+    # pca_top_component)
     return (
-        spark.createDataFrame(list(v.items()), "s string, v double")
+        spark.createDataFrame(
+            pd.DataFrame(list(v.items()), columns=["s", "v"]), "s string, v double"
+        )
         .select(
             F.col("s").alias("event_type"),
             F.round("v", 6).alias("stationary_prob"),
