@@ -119,7 +119,7 @@ PICKS = {
     "session_gap_curve": "ONE user window prices all thresholds; map-side CASE fanout",
     "split_leakage_neardups": "banded LSH pair plan + map-side split labels; doc_id joins only",
     "hll_union_events": "two 64-key register builds; merge is a 64-key max; one-row algebra",
-    "pca_top_component": "mapInPandas int Gram partials -> 4,161-group agg; 64-row iteration relations",
+    "pca_top_component": "mapInPandas int Gram partials -> 4,161-group agg; 4,096 cells collected once",
     "naive_bayes_cv_folds": "one tokenization; fold models by count subtraction; doc-partitioned argmax",
     "isotonic_urgency_by_value": "bin-bounded minimax joins; no sequential PAV state",
     "runs_test_daily_revenue": "day-bounded median + lag window; one-row runs statistics",
