@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import dawis_spark
-from dawis_spark.catalog import DEFAULT_SF_DIR
+from dawis_spark.catalog import DEFAULT_SF_DIR, register_testdata
 from dawis_spark.functions.folds import left_sum, ordered_sum
 
 SF_DIR = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
@@ -47,7 +47,6 @@ def test_fold_text_lives_only_in_folds_module():
 
 def _build_jobs(spark, name, iters):
     from dawis_spark import queries as q
-    from dawis_spark.catalog import register_testdata
 
     register_testdata(spark, SF_DIR)  # its reads are not the build's
     sc = spark.sparkContext
