@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import text as TXT
+from dawis_spark.functions import vectors as V
 from dawis_spark.operators.classifier import _buckets_expr, _ROUNDS
 
 MOD = TXT.MOD
@@ -155,9 +156,7 @@ def dsir_scores(
     plan is the classifier's (zero shuffle, zero UDF). Resampling is the
     caller's ORDER BY. ``features`` optionally supplies a precomputed
     (id, __feats) relation (see ``doc_features``)."""
-    lam_lit = (
-        "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in lam) + ")"
-    )
+    lam_lit = V.double_array(lam)
     if features is None:
         features = doc_features(raw, [id_col], text_col, m)
     return (

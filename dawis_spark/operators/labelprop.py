@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import vectors as V
+from dawis_spark.operators.similarity import _py_norm_sq
 
 # Tier split (the `_ivf_assign` discipline): small seeds inline as a SQL
 # literal; beyond NUMPY_TIER_LITERALS doubles the bit-identical Arrow
@@ -81,25 +82,8 @@ def _seed_literals(
 
     sid = "array(" + ", ".join(str(s) for s, _, _ in seed_rows) + ")"
     lbl = "array(" + ", ".join(str(l) for _, l, _ in seed_rows) + ")"
-    vecs = (
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in v) + ")"
-            for _, _, v in seed_rows
-        )
-        + ")"
-    )
-    def _norm(v: list[float]) -> float:
-        s = 0.0
-        for x in v:
-            s = s + float(x) * float(x)
-        return math.sqrt(s)
-
-    norms = (
-        "array("
-        + ", ".join(f"cast({_norm(v)!r} as double)" for _, _, v in seed_rows)
-        + ")"
-    )
+    vecs = V.double_array(v for _, _, v in seed_rows)
+    norms = V.double_array(math.sqrt(_py_norm_sq(v)) for _, _, v in seed_rows)
     return sid, lbl, vecs, norms
 
 
@@ -182,19 +166,7 @@ def _knn_label_propagation_numpy(
     lbls = np.array([l for _, l, _ in seed_rows], dtype=np.int64)
     S = np.array([v for _, _, v in seed_rows], dtype=np.float64)  # (m, dim)
     assert np.all(np.diff(sids) > 0), "collect_seed orders by id"
-
-    def _seq_norm_sq(mat):
-        acc = np.zeros(mat.shape[0])
-        for d in range(mat.shape[1]):
-            acc = acc + mat[:, d] * mat[:, d]
-        return acc
-
-    snorm = np.sqrt(_seq_norm_sq(S))
-
-    def _half_up(x, digits):
-        p = 10.0**digits
-        return np.sign(x) * np.floor(np.abs(x) * p + 0.5) / p
-
+    snorm = np.sqrt(V.np_norm_sq(S))
     in_schema = targets.select(F.col(id_col)).schema
     out_schema = T.StructType(
         [
@@ -216,11 +188,8 @@ def _knn_label_propagation_numpy(
                 [np.asarray(v, dtype=np.float64) for v in pdf["vec"]]
             )  # (n, dim)
             n = len(pdf)
-            acc = np.zeros((n, S.shape[0]))
-            for d in range(S.shape[1]):  # dim-sequential fold, rows vectorized
-                acc = acc + X[:, d, None] * S[None, :, d]
-            tn = np.sqrt(_seq_norm_sq(X))
-            cos6 = _half_up(acc / (tn[:, None] * snorm[None, :]), 6)
+            tn = np.sqrt(V.np_norm_sq(X))
+            cos6 = V.np_round6(V.np_dot(X, S) / (tn[:, None] * snorm[None, :]))
             micro = (np.sign(cos6) * np.floor(np.abs(cos6) * 1e6 + 0.5)).astype(
                 np.int64
             )

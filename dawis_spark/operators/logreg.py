@@ -43,12 +43,6 @@ def _half_up6(x: float) -> float:
     return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
 
 
-def _w_literal(w: list[float]) -> str:
-    return (
-        "array(" + ", ".join(f"cast({x!r} as double)" for x in w) + ")"
-    )
-
-
 def _xs_expr(vec_col: str) -> str:
     """Feature array: vector dims cast to double + bias feature 1.0."""
     return (
@@ -61,7 +55,7 @@ def margin_expr(vec_col: str, w: list[float]) -> str:
     """round-6 margin of the example against literal weights (the
     last weight is the bias)."""
     xs = _xs_expr(vec_col)
-    return f"round({V.dot(xs, _w_literal(w), 'spark')}, 6)"
+    return f"round({V.dot(xs, V.double_array(w), 'spark')}, 6)"
 
 
 def _np_half_up6(a):
@@ -120,10 +114,7 @@ def _train_numpy(X, y, iterations: int, lr: float) -> list[float]:
     n, d1 = X.shape
     w = [0.0] * d1
     for _ in range(iterations):
-        margin = np.zeros(n, dtype=np.float64)
-        for d in range(d1):
-            margin += X[:, d] * w[d]
-        margin = _np_half_up6(margin)
+        margin = _np_half_up6(V.np_dot(X, np.array([w]))[:, 0])
         r = _np_half_up6(1.0 / (1.0 + np.exp(-margin)) - y)
         g = [int(_np_half_up_int64((r * X[:, d]) * 1000000.0).sum()) for d in range(d1)]
         w = [_half_up6(w[j] - lr * (g[j] / 1e6) / n) for j in range(d1)]

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import vectors as V
-from dawis_spark.operators.similarity import _ivf_assign, train_kmeans
+from dawis_spark.operators.similarity import _ivf_assign, top_k, train_kmeans
 
 
 def _cos6(a: str, b: str) -> F.Column:
@@ -240,13 +240,9 @@ def nsw_ann_topk(
             .persist()
         )
         frontier = scored.select("query_id", "node_id")
-    final_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.filter(F.col("query_id") != F.col("node_id"))
-        .select("query_id", F.col("node_id").alias("neighbor_id"), "cosine")
-        .withColumn("rank", F.row_number().over(final_w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return top_k(
+        scored.filter(F.col("query_id") != F.col("node_id")).select(
+            "query_id", F.col("node_id").alias("neighbor_id"), "cosine"
+        ),
+        k,
     )

@@ -20,7 +20,7 @@ planes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dawis_spark.functions import vectors as V
@@ -30,6 +30,28 @@ from dawis_spark.operators.pairs import capped_blocks, self_pairs, verify
 
 def _cosine_col() -> F.Column:
     return F.round(F.expr(V.cosine("q_vec", "c_vec", "spark")), 6)
+
+
+def top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (query_id, neighbor_id, cosine) rows per query,
+    ranked by cosine descending then neighbor_id: the top-k tail every
+    nearest-neighbour index ends in. A NULL cosine ranks last."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
+def top_k_sql(rel: str, k: int) -> str:
+    """DuckDB text of ``top_k`` over the relation ``rel``, ordered by
+    query_id and rank."""
+    return f"""SELECT query_id, neighbor_id, cosine, rank FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
+  FROM {rel}
+) WHERE rank <= {k}
+ORDER BY query_id, rank"""
 
 
 def brute_force_topk(
@@ -44,8 +66,6 @@ def brute_force_topk(
     Output: (query_id, neighbor_id, cosine) with deterministic tie-break
     on neighbor_id after 6-digit rounding.
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
@@ -58,14 +78,7 @@ def brute_force_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", _cosine_col().alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(scored, k)
 
 
 def projection_plane_expr(
@@ -138,8 +151,6 @@ def lsh_ann_topk(
     cost — still map-side + one equi-join; only the (small) QUERY side
     fans out, the corpus keeps one bucket per row.
     """
-    from pyspark.sql import Window
-
     bucket = lsh_bucket_expr(n_planes, dim, "spark")
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -167,12 +178,7 @@ def lsh_ann_topk(
         # the same partitioning — ONE exchange instead of the
         # distinct-then-window pair (r15, guide §2.4)
         scored = scored.repartition("query_id").dropDuplicates()
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(scored, k)
 
 
 def embedding_near_dup_pairs(
@@ -255,13 +261,6 @@ def embedding_near_dup_pairs(
 MAX_CENTROID_LITERALS = 100_000
 
 
-def _half_up_round6(x):
-    """Vectorized HALF_UP round to 6 digits — matches Spark SQL round()."""
-    import numpy as np
-
-    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
-
-
 def _ivf_assign_numpy(
     df,
     id_col: str,
@@ -290,14 +289,7 @@ def _ivf_assign_numpy(
 
     cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
     cents = np.array([v for _, v in cent_rows], dtype=np.float64)  # (C, dim)
-
-    def _seq_norm_sq(mat):
-        acc = np.zeros(mat.shape[0])
-        for d in range(mat.shape[1]):
-            acc = acc + mat[:, d] * mat[:, d]
-        return acc
-
-    cent_norm = np.sqrt(_seq_norm_sq(cents))
+    cent_norm = np.sqrt(V.np_norm_sq(cents))
     in_schema = df.schema
     out_schema = T.StructType(
         [
@@ -313,14 +305,9 @@ def _ivf_assign_numpy(
             if len(pdf) == 0:
                 continue
             mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_alias]])
-            # left-to-right fold over dimensions, same order as the SQL
-            # aggregate() — bit-identical doubles pre-rounding
-            acc = np.zeros((len(pdf), cents.shape[0]))
-            for d in range(cents.shape[1]):
-                acc = acc + mat[:, d, None] * cents[None, :, d]
-            denom = np.sqrt(_seq_norm_sq(mat))[:, None] * cent_norm[None, :]
+            denom = np.sqrt(V.np_norm_sq(mat))[:, None] * cent_norm[None, :]
             safe = np.where(denom == 0.0, 1.0, denom)
-            aff = np.where(denom == 0.0, -2.0, _half_up_round6(acc / safe))
+            aff = np.where(denom == 0.0, -2.0, V.np_round6(V.np_dot(mat, cents) / safe))
             if top_n == 1:
                 pick = np.argmax(aff, axis=1)  # first max == lowest index
                 yield pd.DataFrame(
@@ -371,10 +358,6 @@ def _ivf_assign(
     quantizer, e.g. 4096 x 1024) exceed what codegen literals tolerate and
     automatically take the bit-identical numpy map-side path
     (``_ivf_assign_numpy``) — same output, same no-shuffle plan shape."""
-    from pyspark.sql import functions as F
-
-    from dawis_spark.functions import vectors as V
-
     # use_numpy=True is the corpus-side default the call sites opt into:
     # the literal-SQL path evaluates the per-centroid cosine as interpreted
     # higher-order lambdas (never codegen), ~4x slower per pass than the
@@ -388,16 +371,7 @@ def _ivf_assign(
         return _ivf_assign_numpy(
             df, id_col, vec_col, cent_rows, id_alias, vec_alias, top_n
         )
-    cids = [c for c, _ in cent_rows]
-    cent_lit = (
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in vec) + ")"
-            for _, vec in cent_rows
-        )
-        + ")"
-    )
-    cid_lit = "array(" + ", ".join(str(c) for c in cids) + ")"
+    cent_lit, cid_lit = _cent_literals(cent_rows)
     n_cent = len(cent_rows)
     aff = (
         f"transform({cent_lit}, c -> coalesce("
@@ -471,11 +445,6 @@ def ivf_ann_topk(
     only exchanges in the whole plan carry (query_id, neighbor_id, cosine)
     triples, never embeddings. Cost ~ n_probe/C of brute force.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from dawis_spark.functions import vectors as V
-
     if centroids is None:
         centroids = train_kmeans(corpus, id_col, vec_col, k=n_centroids, iterations=1)
     cent_rows = sorted((int(c), list(v)) for c, v in centroids)
@@ -494,9 +463,10 @@ def ivf_ann_topk(
         )
     )
     queries_b = _ivf_assign(queries, id_col, vec_col, cent_rows, "query_id", "q_vec", n_probe)
-    # cosine_null: degenerate (zero-norm) members yield NULL scores, which
-    # the rounded select keeps as NULL rows dropped by the rank filter —
-    # never an ANSI DIVIDE_BY_ZERO mid-query.
+    # cosine_null: degenerate (zero-norm) members yield NULL scores —
+    # never an ANSI DIVIDE_BY_ZERO mid-query. The NULL rows rank last
+    # (DESC puts NULLs last), so they are kept when a query has fewer
+    # than k scored candidates.
     pair_cos = V.cosine_null("q_vec", "c_vec", "spark")
     scored = (
         F.broadcast(queries_b)
@@ -513,12 +483,7 @@ def ivf_ann_topk(
         .repartition("query_id")
         .dropDuplicates()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(scored, k)
 
 
 def kmeans_assign(
@@ -543,30 +508,6 @@ def kmeans_assign(
 TRAIN_SAMPLE_LIMIT = 1 << 18  # 262144 vectors, the FAISS-guidance ballpark
 
 
-def _np_seq_dot(X, c):
-    """Row-wise dot(X[i], c) accumulated dim-sequentially (left-to-right),
-    vectorized across rows — bit-identical per row to the SQL
-    ``aggregate(zip_with(...))`` fold functions/vectors.dot renders."""
-    import numpy as np
-
-    acc = np.zeros(X.shape[0], dtype=np.float64)
-    for d in range(X.shape[1]):
-        acc += X[:, d] * c[d]
-    return acc
-
-
-def _np_seq_l2sq(X, c):
-    """Row-wise squared L2 to ``c``, dim-sequential fold (matches
-    functions/vectors.l2_sq bit-for-bit per row)."""
-    import numpy as np
-
-    acc = np.zeros(X.shape[0], dtype=np.float64)
-    for d in range(X.shape[1]):
-        diff = X[:, d] - c[d]
-        acc += diff * diff
-    return acc
-
-
 def _collect_train_sample(corpus, id_col: str, vec_col: str, limit: int):
     """(n, dim) float64 sample matrix: the ``limit`` lowest-id vectors.
     Deterministic (id-ordered prefix) so the DuckDB oracle can replay
@@ -579,7 +520,6 @@ def _collect_train_sample(corpus, id_col: str, vec_col: str, limit: int):
     (~256 vectors per centroid) rarely needs more than tens of
     thousands."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     rows = (
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
@@ -625,33 +565,19 @@ def train_kmeans(
     if X is None:
         return []  # empty corpus -> no quantizer (callers emit empty)
     k_eff = min(k, X.shape[0])
-    C = _half_up_round6(X[:k_eff].copy())
-    xnorm = np.sqrt(_np_seq_dot_self(X))
+    C = V.np_round6(X[:k_eff].copy())
+    xnorm = np.sqrt(V.np_norm_sq(X))
     for _ in range(iterations):
-        cos = np.empty((X.shape[0], C.shape[0]), dtype=np.float64)
-        for cid in range(C.shape[0]):
-            cnorm = np.sqrt(_np_seq_dot_self(C[cid : cid + 1]))[0]
-            denom = xnorm * cnorm
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos[:, cid] = _np_seq_dot(X, C[cid]) / denom
-        cos = _half_up_round6(cos)
+        denom = xnorm[:, None] * np.sqrt(V.np_norm_sq(C))[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = V.np_round6(V.np_dot(X, C) / denom)
         cos[~np.isfinite(cos)] = -2.0  # zero-norm -> NULL -> coalesce(-2.0)
         asg = np.argmax(cos, axis=1)  # first max == lowest cid tie-break
         for cid in range(C.shape[0]):
             members = X[asg == cid]
             if len(members):
-                C[cid] = _half_up_round6(members.mean(axis=0))
+                C[cid] = V.np_round6(members.mean(axis=0))
     return [(cid, [float(x) for x in C[cid]]) for cid in range(C.shape[0])]
-
-
-def _np_seq_dot_self(X):
-    """Row-wise squared norm with the same dim-sequential fold."""
-    import numpy as np
-
-    acc = np.zeros(X.shape[0], dtype=np.float64)
-    for d in range(X.shape[1]):
-        acc += X[:, d] * X[:, d]
-    return acc
 
 
 # ---------------------------------------------------------------------------
@@ -670,14 +596,7 @@ def _pq_slice(vec: str, m: int, ds: int) -> str:
 def _pq_cb_literal(book: list[tuple[int, list[float]]]) -> str:
     """array<array<double>> literal for one subspace's codebook, index
     j+1 == code j (codes are dense 0..Ks-1 by construction)."""
-    return (
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in cv) + ")"
-            for _, cv in sorted(book)
-        )
-        + ")"
-    )
+    return V.double_array(cv for _, cv in sorted(book))
 
 
 def _pq_assign_exprs(vec: str, books, ds: int) -> list[str]:
@@ -685,8 +604,6 @@ def _pq_assign_exprs(vec: str, books, ds: int) -> list[str]:
     L2^2 against the literal sub-codebook, first-position (lowest code)
     tie-break — bit-reproducible in any engine (same rationale as the
     IVF argmax)."""
-    from dawis_spark.functions import vectors as V
-
     out = []
     for m, book in enumerate(books):
         cb = _pq_cb_literal(book)
@@ -732,22 +649,19 @@ def pq_train(
     ds = dim // n_subspaces
     nc = min(n_codes, X.shape[0])
     books_np = [
-        _half_up_round6(X[:nc, m * ds : (m + 1) * ds].copy())
+        V.np_round6(X[:nc, m * ds : (m + 1) * ds].copy())
         for m in range(n_subspaces)
     ]
     for _ in range(iterations):
         for m in range(n_subspaces):
             sl = X[:, m * ds : (m + 1) * ds]
             cb = books_np[m]
-            d2 = np.empty((sl.shape[0], cb.shape[0]), dtype=np.float64)
-            for j in range(cb.shape[0]):
-                d2[:, j] = _np_seq_l2sq(sl, cb[j])
-            d2 = _half_up_round6(d2)
-            asg = np.argmin(d2, axis=1)  # first min == lowest code tie-break
+            # first min == lowest code tie-break
+            asg = np.argmin(V.np_round6(V.np_l2_sq(sl, cb)), axis=1)
             for j in range(cb.shape[0]):
                 members = sl[asg == j]
                 if len(members):
-                    cb[j] = _half_up_round6(members.mean(axis=0))
+                    cb[j] = V.np_round6(members.mean(axis=0))
     return [
         [(j, [float(x) for x in cb[j]]) for j in range(cb.shape[0])]
         for cb in books_np
@@ -763,17 +677,8 @@ def _pq_code_exprs(books) -> tuple[str, str]:
     cross terms are exactly zero."""
     ds = len(books[0][0][1])
     codes = "array(" + ", ".join(_pq_assign_exprs("vec", books, ds)) + ")"
-    normtab = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                f"cast({_py_norm_sq(cv)!r} as double)" for _, cv in sorted(book)
-            )
-            + ")"
-            for book in books
-        )
-        + ")"
+    normtab = V.double_array(
+        [_py_norm_sq(cv) for _, cv in sorted(book)] for book in books
     )
     n_sub = len(books)
     xsq = (
@@ -824,11 +729,7 @@ def _pq_codes_col(vec_col: str, books, cent_rows=None, cid_col: str | None = Non
         out = np.empty((mat.shape[0], n_sub), dtype=np.int32)
         for m, cb in enumerate(cbs):
             sl = mat[:, m * ds : (m + 1) * ds]
-            acc = np.zeros((mat.shape[0], cb.shape[0]))
-            for d in range(ds):
-                diff = sl[:, d, None] - cb[None, :, d]
-                acc = acc + diff * diff
-            out[:, m] = np.argmin(_half_up_round6(acc), axis=1)
+            out[:, m] = np.argmin(V.np_round6(V.np_l2_sq(sl, cb)), axis=1)
         return out
 
     if cmat is None:
@@ -863,8 +764,6 @@ def pq_encode(corpus, id_col: str, vec_col: str, books) -> "DataFrame":
     evaluator, xsq a literal-table lookup fold over the codes); at scale
     this is the write path that shrinks an embedding table ~dim*4/M
     fold."""
-    from pyspark.sql import functions as F
-
     _, xsq = _pq_code_exprs(books)
     return (
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
@@ -896,11 +795,6 @@ def pq_topk(
     (query_id, neighbor_id, cosine) triples, and per-pair work is M
     array lookups + adds inside codegen. No shuffle of the corpus at
     any point."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from dawis_spark.functions import vectors as V
-
     if books is None:
         books = pq_train(corpus, id_col, vec_col)
     enc = pq_encode(corpus, id_col, vec_col, books).select(
@@ -922,20 +816,13 @@ def pq_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(scored, k)
 
 
 def _pq_query_exprs(books) -> tuple[str, str]:
     """(lut_sql, qnorm_sql) over a column named ``vec``: the per-query ADC
     lookup tables (<query-slice, sub-centroid> inner products against the
     literal codebooks) and the query norm."""
-    from dawis_spark.functions import vectors as V
-
     ds = len(books[0][0][1])
     luts = ", ".join(
         f"transform({_pq_cb_literal(book)}, c -> "
@@ -990,9 +877,6 @@ def ivfpq_ann_topk(
     force. Training is EAGER at call time (k-means jobs over the corpus,
     FAISS's train-offline shape); pass ``centroids=`` to reuse a cached
     quantizer and stay lazy."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     if books is None:
         books = pq_train(corpus, id_col, vec_col)
     if centroids is None:
@@ -1032,26 +916,12 @@ def ivfpq_ann_topk(
         .repartition("query_id")
         .dropDuplicates()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(scored, k)
 
 
 def _cent_literals(cent_rows):
-    cids = [c for c, _ in cent_rows]
-    cent_lit = (
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in vec) + ")"
-            for _, vec in cent_rows
-        )
-        + ")"
-    )
-    cid_lit = "array(" + ", ".join(str(c) for c in cids) + ")"
-    return cent_lit, cid_lit
+    cid_lit = "array(" + ", ".join(str(c) for c, _ in cent_rows) + ")"
+    return V.double_array(vec for _, vec in cent_rows), cid_lit
 
 
 def _py_dot(a, b) -> float:
@@ -1093,11 +963,6 @@ def ivfpq_residual_ann_topk(
     and determinism as ivfpq_ann_topk) — eager at call time; pass
     ``centroids=`` to reuse a cached quantizer.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from dawis_spark.functions import vectors as V
-
     if centroids is None:
         centroids = train_kmeans(corpus, id_col, vec_col, k=n_centroids, iterations=1)
     cent_rows = sorted((int(c), list(v)) for c, v in centroids)
@@ -1124,29 +989,17 @@ def ivfpq_residual_ann_topk(
 
     # per-(bucket, subspace, code): 2<c_m, r_mj> + |r_mj|^2 ; per bucket:
     # |c|^2 — python folds mirror the engines' left-to-right aggregates
-    resq_lit = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                "array("
-                + ", ".join(
-                    f"cast({2.0 * _py_dot(cvec[m * ds:(m + 1) * ds], cv) + _py_norm_sq(cv)!r} as double)"
-                    for _, cv in sorted(book)
-                )
-                + ")"
-                for m, book in enumerate(books)
-            )
-            + ")"
-            for _, cvec in cent_rows
-        )
-        + ")"
+    resq_lit = V.double_array(
+        [
+            [
+                2.0 * _py_dot(cvec[m * ds:(m + 1) * ds], cv) + _py_norm_sq(cv)
+                for _, cv in sorted(book)
+            ]
+            for m, book in enumerate(books)
+        ]
+        for _, cvec in cent_rows
     )
-    cnorm_lit = (
-        "array("
-        + ", ".join(f"cast({_py_norm_sq(cvec)!r} as double)" for _, cvec in cent_rows)
-        + ")"
-    )
+    cnorm_lit = V.double_array(_py_norm_sq(cvec) for _, cvec in cent_rows)
     xsq = (
         f"element_at({cnorm_lit}, {posci}) + "
         f"aggregate(sequence(0, {n_subspaces - 1}), cast(0 as double), "
@@ -1186,12 +1039,7 @@ def ivfpq_residual_ann_topk(
         .repartition("query_id")
         .dropDuplicates()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(scored, k)
 
 
 def semantic_dedup(
@@ -1355,8 +1203,6 @@ def sq8_topk(
     from its levels inside the scan, cosine against the raw broadcast
     queries, window top-k. Output (query_id, neighbor_id, cosine, rank)
     — same contract as brute_force_topk so recall self-evals compose."""
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
@@ -1377,12 +1223,7 @@ def sq8_topk(
             F.round(F.expr(V.cosine("q_vec", "c_vec", "spark")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(scored, k)
 
 
 def sq8_oracle_ctes(table: str, id_col: str, vec_col: str, dim: int) -> str:
@@ -1428,8 +1269,6 @@ def refine_exact(
     or zero extra scans when the corpus is cached/bucketed by id.
     Output: (query_id, neighbor_id, cosine, rank), exact scores.
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
@@ -1442,14 +1281,7 @@ def refine_exact(
         .join(F.broadcast(q), "query_id")
         .select("query_id", "neighbor_id", _cosine_col().alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(rer, k)
 
 
 def ivfpq_refine_topk(
@@ -1560,21 +1392,12 @@ def cluster_balanced_coreset(
     assigned = _ivf_assign(
         corpus, id_col, vec_col, cents, "vec_id", "vec", 1, use_numpy=True
     )
-    cent_lit = (
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"cast({float(x)!r} as double)" for x in vec) + ")"
-            for _, vec in sorted(cents)
-        )
-        + ")"
-    )
+    cent_lit = V.double_array(vec for _, vec in sorted(cents))
     own = f"element_at({cent_lit}, cast(cid as int) + 1)"
     aff = (
         f"coalesce(round({V.cosine_null('vec', own, 'spark')}, 6), "
         f"cast(-2.0 as double))"
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("cell").orderBy(F.desc("centrality"), F.asc("vec_id"))
     return (
         assigned.withColumn("centrality", F.expr(aff))

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dawis_spark.operators.similarity import TRAIN_SAMPLE_LIMIT
+from dawis_spark.operators.similarity import TRAIN_SAMPLE_LIMIT, top_k_sql
 from dawis_spark.plans.sql_runner import run_query
 from dawis_spark.queries._fragments import (
     ann_recall_sql,
@@ -825,11 +825,7 @@ scored AS (
   SELECT query_id, neighbor_id, ROUND({cos}, 6) AS cosine
   FROM q, c WHERE query_id != neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 
@@ -864,11 +860,7 @@ scored AS (
   SELECT query_id, neighbor_id, ROUND({cos}, 6) AS cosine
   FROM q JOIN c USING (bucket) WHERE query_id != neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 
@@ -910,11 +902,7 @@ scored AS (
   SELECT DISTINCT query_id, neighbor_id, ROUND({cos}, 6) AS cosine
   FROM q JOIN c USING (bucket) WHERE query_id != neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 
@@ -1350,11 +1338,7 @@ scored AS (
   FROM q_b JOIN corpus_b USING (cid)
   WHERE query_id != neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 
@@ -3718,11 +3702,7 @@ scored AS (
   JOIN recon r ON r.vec_id = ip.neighbor_id
   WHERE ip.query_id != ip.neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 
@@ -3816,11 +3796,7 @@ scored AS (
   JOIN qn USING (query_id)
   JOIN recon r ON r.vec_id = ip.neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 
@@ -3968,11 +3944,7 @@ scored AS (
   JOIN qn ON qn.query_id = ip.query_id
   JOIN recon r ON r.vec_id = ip.neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dawis_spark.catalog import register_testdata
+from dawis_spark.operators.similarity import top_k_sql
 from dawis_spark.queries._fragments import (
     TRADE_EDGES_CTES,
     ann_recall_sql,
@@ -216,11 +217,7 @@ scored AS (
   SELECT query_id, neighbor_id, ROUND({cos}, 6) AS cosine
   FROM q, c WHERE query_id != neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 
@@ -290,11 +287,7 @@ scored AS (
   FROM q_b JOIN corpus_b USING (cid)
   WHERE query_id != neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 
@@ -1387,7 +1380,11 @@ def ppmi_top_axis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one positional pair shuffle (corpus-linear, x2 window
     constant) collapsing to a <= 48x48 cell relation; the iteration
     runs on a BOUNDED COLLECT of those cells (<= 2304 rows — the
-    grid_dbscan documented-bound class) in exact Python ints."""
+    grid_dbscan documented-bound class) in exact Python ints; the
+    loadings round in a Spark projection over a pandas frame (see
+    pca_top_component)."""
+    import pandas as pd
+
     toks = _TXT.tokens("text", "spark")
     tok = (
         spark.table("documents")
@@ -1456,13 +1453,18 @@ def ppmi_top_axis(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((v.get(i, 0), tok_of[i]) for i in idx),
         key=lambda t: (-t[0], t[1]),
     )[:16]
-    rows = [
-        (rank, token, round(val / _PPMI_SCALE, 6))
-        for rank, (val, token) in enumerate(ranked, start=1)
-    ]
-    return spark.createDataFrame(
-        rows, "rank int, token string, loading double"
-    ).orderBy("rank")
+    pdf = pd.DataFrame(
+        {
+            "rank": range(1, len(ranked) + 1),
+            "token": [token for _, token in ranked],
+            "loading": [val / _PPMI_SCALE for val, _ in ranked],
+        }
+    )
+    return (
+        spark.createDataFrame(pdf, "rank int, token string, loading double")
+        .withColumn("loading", F.round("loading", 6))
+        .orderBy("rank")
+    )
 
 
 def _pagerank_oracle(iterations: int, top_n: int) -> str:
@@ -1525,11 +1527,7 @@ scored AS (
   SELECT query_id, neighbor_id, ROUND({cos}, 6) AS cosine
   FROM q, sq8_recon WHERE query_id != neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("scored", k)}
 """
 
 
@@ -1743,11 +1741,7 @@ rer AS (
   JOIN ev q ON q.vec_id = c.query_id
   JOIN ev n ON n.vec_id = c.neighbor_id
 )
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM rer
-) WHERE rank <= {k}
-ORDER BY query_id, rank
+{top_k_sql("rer", k)}
 """
 
 

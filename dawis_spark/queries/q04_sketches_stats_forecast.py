@@ -1628,10 +1628,14 @@ def fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND(x, 9) HALF_UP; products are fixed left-associated; M-step
     sums are ORDERED FOLDS over the (name, type, price)-sorted pattern
     list — float accumulation order is part of the definition, so the
-    DuckDB replay (unrolled per-iteration CTEs) is bit-identical.
+    DuckDB replay (unrolled per-iteration CTEs) is bit-identical. The
+    posteriors' final ROUND(x, 9) is a Spark projection over a pandas
+    frame (see pca_top_component).
     Output: per-pattern posterior match probability under the learned
     parameters + the learned (p, m_f, u_f) on every row."""
     import math
+
+    import pandas as pd
 
     pat_rows = (
         _fs_pairs_df(spark)
@@ -1661,11 +1665,11 @@ def fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
             b = 1.0 - p
             for f in _FS_FIELDS:
                 b = b * (u[f] if g[f] else 1.0 - u[f])
-            ws.append(r9(a / (a + b)))
+            ws.append(a / (a + b))
         return ws
 
     for _ in range(_FS_EM_ITERS):
-        ws = e_step()
+        ws = [r9(w) for w in e_step()]
         W = left_sum(float(n) * w for (_, _, _, n), w in zip(pats, ws))
         L = left_sum(float(n) * (1.0 - w) for (_, _, _, n), w in zip(pats, ws))
         new_m, new_u = {}, {}
@@ -1686,31 +1690,25 @@ def fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / L
             )
         p, m, u = r9(W / (W + L)), new_m, new_u
-    posterior = e_step()
-    rows = [
-        (
-            gn,
-            gt,
-            gp,
-            n,
-            w,
-            p,
-            m["name"],
-            m["type"],
-            m["price"],
-            u["name"],
-            u["type"],
-            u["price"],
+    pdf = pd.DataFrame(
+        pats, columns=["name_agree", "type_agree", "price_agree", "n_pairs"]
+    ).assign(
+        posterior=e_step(),
+        p_match=p,
+        **{f"m_{f}": m[f] for f in _FS_FIELDS},
+        **{f"u_{f}": u[f] for f in _FS_FIELDS},
+    )
+    return (
+        spark.createDataFrame(
+            pdf,
+            "name_agree boolean, type_agree boolean, price_agree boolean, "
+            "n_pairs bigint, posterior double, p_match double, "
+            "m_name double, m_type double, m_price double, "
+            "u_name double, u_type double, u_price double",
         )
-        for (gn, gt, gp, n), w in zip(pats, posterior)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "name_agree boolean, type_agree boolean, price_agree boolean, "
-        "n_pairs bigint, posterior double, p_match double, "
-        "m_name double, m_type double, m_price double, "
-        "u_name double, u_type double, u_price double",
-    ).orderBy("name_agree", "type_agree", "price_agree")
+        .withColumn("posterior", F.round("posterior", 9))
+        .orderBy("name_agree", "type_agree", "price_agree")
+    )
 
 
 def _cs_oracle(top_n: int, d: int, w: int) -> str:

@@ -956,7 +956,7 @@ def kmeans_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side k-fan-out against literal centroids, collapsed
     by vec_id then by cid — exchanges carry (point, 2 doubles) and the
     k-row result."""
-    from dawis_spark.operators.similarity import train_kmeans
+    from dawis_spark.operators.similarity import _cent_literals, train_kmeans
 
     emb = spark.table("embeddings")
     cents = train_kmeans(emb, "vec_id", "embedding", k=8, iterations=1)
@@ -971,15 +971,7 @@ def kmeans_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array_position takes the FIRST max (ties -> lowest cid, the old
     # window order); b = 1 - max over the other cids (1-x is monotone,
     # so min-distance == max-cosine).
-    cent_lit = (
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"cast({x!r} as double)" for x in vec) + ")"
-            for _, vec in cent_rows
-        )
-        + ")"
-    )
-    cid_lit = "array(" + ", ".join(str(c) for c, _ in cent_rows) + ")"
+    cent_lit, cid_lit = _cent_literals(cent_rows)
     k_c = len(cent_rows)
     cos = _VEC.cosine_null("vec", "c", "spark")
     affs = f"transform({cent_lit}, c -> coalesce(round({cos}, 6), cast(-2.0 as double)))"
@@ -1894,7 +1886,9 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the per-user sequence window and the (frm, tgt) count
     aggregate are the only row-scale stages; everything after is
-    (variants x states)-bounded."""
+    (variants x states)-bounded. The 6-digit rounding is a Spark
+    projection (HALF_UP) over a pandas frame (see pca_top_component)."""
+    import pandas as pd
     from pyspark.sql import Window
 
     e = spark.table("events")
@@ -1991,16 +1985,23 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = []
     for c in _MRE_CHANNELS:
         res.append((c, 1.0 - pv[(c, "START")] / base_cvr))
-    sre = left_sum(re_c for _, re_c in sorted(res))
-    out = [
-        (c, round(base_cvr, 6), round(re_c, 6), round(re_c / sre, 6))
-        for c, re_c in sorted(res)
-    ]
-    return spark.createDataFrame(
-        out,
-        "channel string, base_cvr double, removal_effect double,"
-        " attribution_share double",
-    ).orderBy("channel")
+    res.sort()
+    sre = left_sum(re_c for _, re_c in res)
+    pdf = pd.DataFrame(res, columns=["channel", "re"]).assign(
+        base_cvr=base_cvr, sre=sre
+    )
+    return (
+        spark.createDataFrame(
+            pdf, "channel string, re double, base_cvr double, sre double"
+        )
+        .select(
+            "channel",
+            F.round("base_cvr", 6).alias("base_cvr"),
+            F.round("re", 6).alias("removal_effect"),
+            F.round(F.col("re") / F.col("sre"), 6).alias("attribution_share"),
+        )
+        .orderBy("channel")
+    )
 
 
 _CONF_YHAT = "(b0 + b1 * CAST(x1 AS DOUBLE) + b2 * CAST(x2 AS DOUBLE))"

@@ -77,3 +77,31 @@ def test_build_jobs_do_not_grow_with_iterations(spark, monkeypatch, name, module
         monkeypatch.setattr(mod, const, n)
         counts[n] = _build_jobs(spark, name, n)
     assert counts[1] == counts[iters], counts
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "pca_top_component",
+        "markov_stationary_distribution",
+        "fellegi_sunter_em",
+        "markov_removal_attribution",
+        "ppmi_top_axis",
+    ],
+)
+def test_driver_results_round_in_a_spark_projection(spark, name):
+    """A driver loop's result enters Spark unrounded and rounds in a
+    Spark projection (HALF_UP, as the oracle's ROUND), not in Python
+    before ``createDataFrame``. The analyzed plan is read: the optimizer
+    folds a projection over a local relation into the relation, which
+    evaluates the same Spark ``round``."""
+    from dawis_spark import queries as q
+
+    register_testdata(spark, SF_DIR)
+    plan = q.QUERIES[name](spark, SF_DIR)._jdf.queryExecution().analyzed()
+    projects = [
+        line
+        for line in plan.toString().splitlines()
+        if line.lstrip(" :+-").startswith("Project [")
+    ]
+    assert any("round(" in line for line in projects), plan.toString()
