@@ -1,11 +1,13 @@
-"""Dump full `.explain("formatted")` for named queries into plans/<round>/.
+"""Dump full `.explain("formatted")` for named queries into a directory.
 
 Usage:
-    python tools/plan_dump.py r17 before name1 name2 ...
-    python tools/plan_dump.py r17 after  name1 name2 ...
+    python tools/plan_dump.py /tmp/plans before name1 name2 ...
+    python tools/plan_dump.py /tmp/plans after  name1 name2 ...
 
-Writes plans/<round>/<name>_<tag>.txt, so a plan claim can be checked
-against the before and after files. Reads the tables under
+Writes <dir>/<name>_<tag>.txt (the directory is created), so a plan claim
+can be checked against the before and after files. Run the parent's copy
+of this tool for "before" and the change's for "after", both into a
+scratch directory outside the repository. Reads the tables under
 ``MINI_SF_DIR`` (default: the catalog's default scale-factor directory).
 
 Each dump goes through ``normalize_plan``, so two dumps of one unchanged
@@ -40,8 +42,8 @@ def normalize_plan(text: str) -> str:
 
 def main() -> None:
     if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
-        sys.exit("usage: plan_dump.py <round> <before|after> <name>...")
-    round_, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+        sys.exit("usage: plan_dump.py <dir> <before|after> <name>...")
+    outdir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     from dawis_spark import queries as q
     from dawis_spark.catalog import DEFAULT_SF_DIR, register_testdata
     from dawis_spark.session import get_spark
@@ -49,7 +51,6 @@ def main() -> None:
     sf_dir = os.environ.get("MINI_SF_DIR", DEFAULT_SF_DIR)
     spark = get_spark("dawis-plan-dump")
     register_testdata(spark, sf_dir)
-    outdir = os.path.join(REPO, "plans", round_)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = q.QUERIES[name](spark, sf_dir)
