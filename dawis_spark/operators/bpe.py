@@ -41,6 +41,7 @@ pair_count) — the artifact a tokenizer ships."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -135,8 +136,10 @@ def bpe_train(
         cached.append(words)
     for df in cached:
         df.unpersist()
+    # a pandas frame enters through Arrow as a local relation
     return spark.createDataFrame(
-        merge_rows, "step int, left string, right string, pair_count bigint"
+        pd.DataFrame(merge_rows, columns=["step", "left", "right", "pair_count"]),
+        "step int, left string, right string, pair_count bigint",
     )
 
 

@@ -36,6 +36,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dawis_spark.functions.folds import left_sum
+from dawis_spark.operators.stats import (
+    total_lit,
+    two_sample_counts,
+    two_sample_tagged,
+    value_cum_walk,
+)
 
 # log10(1 + 1/d) for d = 1..9, rounded to 9 digits — literals, not
 # computed at query time (ln/log are not cross-engine bit-stable).
@@ -59,36 +65,16 @@ def ks_two_sample(
     statistic between the ``side_a`` and ``side_b`` populations of
     ``value_cents`` (an integer-snapped measure column) and the lowest
     value where the sup is attained."""
-    tagged = df.select(
-        F.col(value_cents).alias("v"),
-        F.when(F.col(side_col) == side_a, 1).otherwise(0).alias("ia"),
-        F.when(F.col(side_col) == side_b, 1).otherwise(0).alias("ib"),
-    ).filter((F.col("ia") == 1) | (F.col("ib") == 1))
-    # per_v feeds BOTH the walk and the totals agg: persist it so the
-    # tagged groupBy lineage is evaluated once (the walk's internal
-    # bucketed persist caches its own crossJoined relation, not this
-    # input) — same discipline as range_partitioned_ranks; the harness
-    # clearCache between queries reclaims it
-    per_v = tagged.groupBy("v").agg(
-        F.sum("ia").cast("bigint").alias("na_v"),
-        F.sum("ib").cast("bigint").alias("nb_v"),
-    ).persist()
-    from dawis_spark.operators.stats import value_cum_walk
-
-    tot = per_v.agg(
-        F.sum("na_v").cast("bigint").alias("n_a"),
-        F.sum("nb_v").cast("bigint").alias("n_b"),
+    per_v = two_sample_counts(
+        two_sample_tagged(df, value_cents, side_col, side_a, side_b)
     )
-    cum = (
-        value_cum_walk(per_v, "v", ["na_v", "nb_v"])
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "v",
-            F.col("cum_na_v").alias("ca"),
-            F.col("cum_nb_v").alias("cb"),
-            "n_a",
-            "n_b",
-        )
+    walked, n, (n_a, n_b) = value_cum_walk(per_v, "v", ["na_v", "nb_v"])
+    cum = walked.select(
+        "v",
+        F.col("cum_na_v").alias("ca"),
+        F.col("cum_nb_v").alias("cb"),
+        total_lit(n_a, n).alias("n_a"),
+        total_lit(n_b, n).alias("n_b"),
     )
     scored = cum.select(
         "v",

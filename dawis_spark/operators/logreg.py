@@ -194,7 +194,7 @@ def auc_accuracy(
     Midranks WITHOUT the data-sized partition-less row_number window the
     r10 formulation used: per-distinct-score counts (one hash
     aggregate), then a running count over the score order from
-    range_partitioned_ranks(sum_of) — for a score s with cnt_less rows
+    range_partitioned_ranks(sum_cols) — for a score s with cnt_less rows
     strictly below and cnt tied rows, min+max rank = 2*cnt_less + cnt +
     1, so the positive-class rank-sum needs only the (s, cnt, pos)
     relation, never per-row ranks. Exchanges carry distinct scores with
@@ -210,8 +210,8 @@ def auc_accuracy(
         F.sum("y").cast("bigint").alias("pos"),
     )
     ranked = range_partitioned_ranks(
-        per_s, "s", [], out_col="__r", sum_col="cum_cnt", sum_of="cnt"
-    )
+        per_s, "s", [], out_col="__r", sum_cols=[("cum_cnt", "cnt")]
+    )[0]
     # mr2 = min_rank + max_rank of the tie group; rank-sum over the
     # positive class = sum(pos * mr2) / 2 (kept doubled: integers)
     rs = ranked.select(

@@ -46,6 +46,7 @@ beyond the id→vector hydration joins.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -130,8 +131,12 @@ def nsw_entry_points(assigned: DataFrame, cent_rows) -> DataFrame:
     from pyspark.sql import Window
 
     spark = assigned.sparkSession
+    # a pandas frame enters through Arrow as a local relation
     cents = spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in cent_rows],
+        pd.DataFrame(
+            [(int(c), [float(x) for x in v]) for c, v in cent_rows],
+            columns=["cid", "cvec"],
+        ),
         "cid int, cvec array<double>",
     )
     w = Window.partitionBy("cid").orderBy(F.desc("aff"), F.asc("id"))

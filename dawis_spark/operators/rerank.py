@@ -25,6 +25,7 @@ replays all k steps as unrolled CTEs (queries._mmr_oracle).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -156,6 +157,9 @@ def mmr_rerank(
         (int(r[0]), int(r[1]), int(r[2]), int(r[3])) for r in pairs.collect()
     ]  # bounded: n_queries * n_pool^2 / 2
     sel = mmr_select(pool_rows, pair_rows, k, lam10)
+    # a pandas frame enters through Arrow as a local relation; a row list
+    # is a Python RDD, one task per core on every execution
     return spark.createDataFrame(
-        sel, "query_id bigint, rank int, did bigint, mmr_score_scaled bigint"
+        pd.DataFrame(sel, columns=["query_id", "rank", "did", "mmr_score_scaled"]),
+        "query_id bigint, rank int, did bigint, mmr_score_scaled bigint",
     )

@@ -812,11 +812,8 @@ def range_partitioned_ranks(
     desc: bool = False,
     n_buckets: int = 1024,
     out_col: str = "__rank",
-    n_col: str | None = None,
-    sum_col: str | None = None,
-    sum_of: str | None = None,
     sum_cols: list[tuple[str, str]] | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, int, list[int]]:
     """Exact global dense row-numbering WITHOUT a single-partition sort.
 
     ``row_number() OVER (ORDER BY value, ties)`` moves the whole relation
@@ -850,23 +847,23 @@ def range_partitioned_ranks(
     split (standing adjudication, same as rank_quantiles_select).
 
     ``desc=True`` ranks by ``value_col`` descending (tie columns stay
-    ascending, matching ``ORDER BY v DESC, ties``). ``n_col`` optionally
-    emits the group total alongside (ntile needs it). ``sum_col``
-    optionally emits the running cumulative sum of ``value_col`` in rank
-    order (inclusive of the current row — ``SUM(v) OVER (ORDER BY ...
-    ROWS UNBOUNDED PRECEDING)``), computed the same two-level way:
-    per-bucket totals prefix-summed in the offsets relation + a
-    partitioned within-bucket running sum. ``sum_of`` names a DIFFERENT
-    column to accumulate (default: ``value_col`` itself) — e.g. a
-    per-distinct-value count relation ranked by value with a running
-    count (the midrank/CDF shape). The summed column must be
-    integer-typed (the prefix sums are exact bigint — the cents-integer
-    discipline every cumulative query here uses). ``sum_cols`` is the
-    many-at-once form: a list of ``(out_col, src_col)`` pairs, each an
-    independent running cumulative sum over the SAME rank order, all
-    carried through the one bucket-count exchange (the EDF drift panel
-    needs two — cum_a and cum_b — per walk; two calls would pay the
-    bucket machinery twice).
+    ascending, matching ``ORDER BY v DESC, ties``). ``sum_cols`` is a
+    list of ``(out_col, src_col)`` pairs, each emitting the running
+    cumulative sum of ``src_col`` in rank order (inclusive of the
+    current row — ``SUM(src) OVER (ORDER BY ... ROWS UNBOUNDED
+    PRECEDING)``), computed the same two-level way: per-bucket totals
+    prefix-summed on the driver + a partitioned within-bucket running
+    sum. All pairs ride the one bucket-count collect (the EDF drift
+    panel needs two — cum_a and cum_b — per walk). A summed column must
+    be integer-typed (the prefix sums are exact bigint — the
+    cents-integer discipline every cumulative query here uses).
+
+    Returns ``(ranked, n, totals)``: the ranked relation, the input's
+    row count and each summed column's grand total (in ``sum_cols``
+    order) — plain ints the walk collects on the driver anyway, so a
+    caller that needs a total inlines it as a bigint literal instead of
+    aggregating the input a second time (and broadcast-joining the
+    1-row result back). On empty input ``n`` is 0 and every total 0.
 
     Buckets are EQUI-DEPTH (round 14): boundaries are the
     ``percentile_approx`` quantiles of ``value_col`` at i/n_buckets,
@@ -894,8 +891,9 @@ def range_partitioned_ranks(
     NULLS FIRST) and the last bucket for descending (DESC = NULLS LAST).
     This falls out of the search itself: a NULL value never satisfies a
     boundary comparison, so its ascending boundary count is 0 (bucket 0
-    ascending, n_buckets-1 after the descending flip). With ``sum_col``,
-    NULL values contribute 0 to the running sum (as SUM ignores NULLs).
+    ascending, n_buckets-1 after the descending flip). A NULL summed
+    value contributes 0 to the running sum and the total (as SUM
+    ignores NULLs).
     """
     from pyspark.sql import Window
 
@@ -933,16 +931,19 @@ def range_partitioned_ranks(
     bnd_vals = list(stats_row["__bnd"]) if (
         n_bnd > 0 and stats_row["__bnd"] is not None
     ) else None
-    # ``bucketed`` feeds BOTH the bucket-count relation and the final
-    # rank join; without materialization each reference re-evaluates the
+    # ``bucketed`` feeds BOTH the bucket-count collect and the ranked
+    # output; without materialization each reference re-evaluates the
     # full input lineage — and CHAINED calls (rfm's three ntile passes)
     # multiply that re-evaluation per pass (measured 11x on rfm at
-    # sf0.1). Honest footprint note: this persist is INPUT-ROW-scale
-    # (not node-bounded like the graph iterations) and lives until the
-    # caller's action completes and the cache is cleared — bench.py and
-    # the correctness harness call spark.catalog.clearCache() between
-    # queries for exactly this reason; long-lived sessions chaining many
-    # ranked relations should do the same.
+    # sf0.1). The walk's own input is read twice (the stats collect and
+    # this persist) and is not persisted here: persisting it in place
+    # of the callers' inputs measured slower on cold_build. Honest
+    # footprint note: this persist is INPUT-ROW-scale (not node-bounded
+    # like the graph iterations) and lives until the caller's action
+    # completes and the cache is cleared — bench.py and the correctness
+    # harness call spark.catalog.clearCache() between queries for
+    # exactly this reason; long-lived sessions chaining many ranked
+    # relations should do the same.
     joined_stats = df
     if n_bnd > 0 and bnd_vals is not None:
         # __bs = |{boundaries <= v}| via unrolled binary search over the
@@ -975,9 +976,7 @@ def range_partitioned_ranks(
         .drop("__bs")
         .persist()
     )
-    pairs: list[tuple[str, str]] = list(sum_cols) if sum_cols else []
-    if sum_col is not None:
-        pairs.append((sum_col, sum_of if sum_of is not None else value_col))
+    pairs = list(sum_cols or [])
     baggs = [F.count(F.lit(1)).alias("__bc")]
     for i, (_, src) in enumerate(pairs):
         baggs.append(
@@ -1015,13 +1014,8 @@ def range_partitioned_ranks(
         F.asc(c) for c in tie_cols
     ]
     w_in = Window.partitionBy("__b").orderBy(*order)
-    keep = [c for c in df.columns]
-    if n_col is not None:
-        # the driver-collected row count, inlined (the old plan carried a
-        # per-row __n column from the stats crossJoin)
-        keep.append(F.lit(n_total).cast("bigint").alias(n_col))
     out = [
-        *keep,
+        *df.columns,
         (F.col("__off") + F.col("__rnb")).cast("bigint").alias(out_col),
     ]
     joined = (
@@ -1048,7 +1042,7 @@ def range_partitioned_ranks(
         out.append(
             (F.col(f"__soff{i}") + F.col(f"__rsb{i}")).cast("bigint").alias(out_name)
         )
-    return joined.select(*out)
+    return joined.select(*out), n_total, cums
 
 
 def exact_ntile(
@@ -1071,24 +1065,17 @@ def exact_ntile(
 
     Bit-identical to the window ntile for every (n, k) — including
     n < k, where base = 0 makes the first branch cover all rows."""
-    ranked = range_partitioned_ranks(
-        df,
-        value_col,
-        tie_cols,
-        desc=desc,
-        n_buckets=n_buckets,
-        out_col="__r",
-        n_col="__nn",
+    ranked, n, _ = range_partitioned_ranks(
+        df, value_col, tie_cols, desc=desc, n_buckets=n_buckets, out_col="__r"
     )
+    nn = f"CAST({n} AS BIGINT)"
     tile = (
-        f"case when __r <= (__nn % {k}) * (__nn div {k} + 1) "
-        f"then (__r - 1) div (__nn div {k} + 1) + 1 "
-        f"else (__nn % {k}) + (__r - (__nn % {k}) * (__nn div {k} + 1) - 1) "
-        f"div (__nn div {k}) + 1 end"
+        f"case when __r <= ({nn} % {k}) * ({nn} div {k} + 1) "
+        f"then (__r - 1) div ({nn} div {k} + 1) + 1 "
+        f"else ({nn} % {k}) + (__r - ({nn} % {k}) * ({nn} div {k} + 1) - 1) "
+        f"div ({nn} div {k}) + 1 end"
     )
-    return ranked.withColumn(out_col, F.expr(tile).cast("int")).drop(
-        "__r", "__nn"
-    )
+    return ranked.withColumn(out_col, F.expr(tile).cast("int")).drop("__r")
 
 
 # --- Probability-proportional-to-size (PPS) sampling + Horvitz-Thompson --

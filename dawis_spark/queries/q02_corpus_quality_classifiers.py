@@ -3511,9 +3511,13 @@ def logreg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline makes the numpy trajectory bit-equal to the distributed
     full-batch path on the same rows, which is what lets DuckDB replay
     all 3 rounds (vt CTE = the same id-ordered prefix)."""
+    import pandas as pd
+
     w = _trained_logreg_w(spark, sf_dir)
+    # a pandas frame enters through Arrow as a local relation; a row list
+    # is a Python RDD, one task per core on every execution
     return spark.createDataFrame(
-        [(j, wj) for j, wj in enumerate(w)], "dim int, weight double"
+        pd.DataFrame({"dim": range(len(w)), "weight": w}), "dim int, weight double"
     ).orderBy("dim")
 
 

@@ -728,11 +728,12 @@ def pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     80% of the total — the crossing test is INTEGER (cum*5 >= t*4), so
     no float boundary ambiguity exists. One customer-keyed aggregate,
     then rank AND running revenue from ``range_partitioned_ranks``
-    (sum_col) — bucket-count/bucket-sum prefix arrays + per-bucket
+    (sum_cols) — bucket-count/bucket-sum prefix arrays + per-bucket
     windows, so the customer-cardinality relation is never sorted on a
     single task (the r10-verdict partition-less-window fix; ranks and
     cumulative sums are bit-identical to the global window's by
-    construction)."""
+    construction). The customer count and revenue total are the walk's
+    own driver-collected totals."""
     from dawis_spark.operators.sketches import range_partitioned_ranks
 
     rev = (
@@ -744,26 +745,17 @@ def pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("r_cents")
         )
     )
-    tot = rev.agg(
-        F.sum("r_cents").alias("t"),
-        F.count(F.lit(1)).cast("bigint").alias("n_cust"),
+    # r14: no log_scale flag needed — equi-depth boundaries absorb the
+    # heavy-tailed revenue domain by construction (the r11 zipf
+    # rehearsal's 2.2x whale collapse can't recur under quantile buckets)
+    ranked, n, (revenue,) = range_partitioned_ranks(
+        rev, "r_cents", ["o_custkey"], desc=True, out_col="rk",
+        sum_cols=[("cum", "r_cents")],
     )
-    ranked = range_partitioned_ranks(
-        rev,
-        "r_cents",
-        ["o_custkey"],
-        desc=True,
-        out_col="rk",
-        sum_col="cum",
-        # r14: no log_scale flag needed — equi-depth boundaries absorb
-        # the heavy-tailed revenue domain by construction (the r11 zipf
-        # rehearsal's 2.2x whale collapse can't recur under quantile
-        # buckets)
-    )
-    crossed = ranked.crossJoin(F.broadcast(tot)).filter(
-        F.col("cum") * 5 >= F.col("t") * 4
-    )
-    return crossed.groupBy("n_cust", "t").agg(
+    n_cust, t = F.lit(n).cast("bigint"), _stats.total_lit(revenue, n)
+    crossed = ranked.filter(F.col("cum") * 5 >= t * 4)
+    # grouped by the constant totals, so empty input stays zero rows
+    return crossed.groupBy(n_cust.alias("n_cust"), t.alias("t")).agg(
         F.min("rk").cast("bigint").alias("top_customers"),
         F.round(F.min("rk") / F.col("n_cust"), 6).alias("customer_share"),
         F.round(F.min("cum") / F.col("t"), 6).alias("revenue_share"),
@@ -1032,7 +1024,7 @@ def sorted_neighborhood_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__sk",
         ["__rev", "t"],
         out_col="rk",
-    ).drop("__sk", "__rev")
+    )[0].drop("__sk", "__rev")
     probe = ranked.select(
         F.explode(F.sequence(F.lit(1), F.lit(5))).alias("o"),
         F.col("t").alias("text_a"),
@@ -1367,7 +1359,7 @@ def gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r14: equi-depth boundaries make the former log_scale opt-in
         # (heavy-tailed revenue) the default behavior
         rev, "x", ["o_custkey"], out_col="r"
-    ).select("x", "r")
+    )[0].select("x", "r")
     m = rk.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -2251,6 +2243,7 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "depth walk + rank over the two bounded ranking pools",
         n_windows=2,
     )
+    import pandas as pd
     from pyspark.sql import Window
 
     from dawis_spark.operators.corpus import bm25_scores
@@ -2275,7 +2268,8 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest("sparse_rank", "dense_rank").alias("first_depth")
     )
     w_rows = spark.createDataFrame(
-        [(d, w) for d, w in enumerate(_RBO_W, start=1)], "depth int, wt double"
+        pd.DataFrame({"depth": range(1, len(_RBO_W) + 1), "wt": _RBO_W}),
+        "depth int, wt double",
     )
     ov = (
         F.broadcast(w_rows)

@@ -1153,22 +1153,21 @@ def median_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    nn = vals.agg(F.sum("c").cast("bigint").alias("n"))
-    ranks = nn.selectExpr(
+    walk, n_v, (n,) = _stats.value_cum_walk(vals, "v", ["c"])
+    nn = _stats.total_lit(n, n_v)
+    ranks = spark.range(1).select(nn.alias("n")).selectExpr(
         f"stack(3, 'lo', {_MCI_LO}, 'median', {_MCI_MED}, 'hi', {_MCI_HI})"
         " AS (which, r)"
     )
-    cum = _stats.value_cum_walk(vals, "v", ["c"]).select(
-        "v", F.col("cum_c").alias("cum")
-    )
+    cum = walk.select("v", F.col("cum_c").alias("cum"))
     sel = (
         F.broadcast(ranks)
         .join(cum, F.col("cum") >= F.col("r"))
         .groupBy("which", "r")
         .agg(F.min("v").alias("val"))
     )
-    return sel.crossJoin(F.broadcast(nn)).agg(
-        F.max("n").alias("n_orders"),
+    return sel.agg(
+        nn.alias("n_orders"),
         F.max(F.when(F.col("which") == "median", F.col("val"))).alias(
             "median_cents"
         ),
@@ -3708,7 +3707,7 @@ def ks_statistic_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-bucketed prefix sums (r13 — no partition-less window, the
     same rewrite as the EDF drift family) and ends in TakeOrdered(1)."""
     from dawis_spark.operators.logreg import margin_expr
-    from dawis_spark.operators.stats import value_cum_walk
+    from dawis_spark.operators.stats import total_lit, value_cum_walk
 
     emb = spark.table("embeddings")
     w = _trained_logreg_w(spark, sf_dir)
@@ -3721,16 +3720,14 @@ def ks_statistic_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("y").cast("bigint").alias("k_p"),
         )
     )
-    tot = per_p.agg(
-        F.sum("n_p").cast("bigint").alias("nn"),
-        F.sum("k_p").cast("bigint").alias("pp"),
-    )
-    walk = value_cum_walk(per_p, "p", ["k_p", "n_p"], desc=True).select(
+    walk, n_v, (pp, nn) = value_cum_walk(per_p, "p", ["k_p", "n_p"], desc=True)
+    scored = walk.select(
         "p",
         F.col("cum_k_p").alias("cum_k"),
         F.col("cum_n_p").alias("cum_n"),
-    )
-    scored = walk.crossJoin(F.broadcast(tot)).selectExpr(
+        total_lit(nn, n_v).alias("nn"),
+        total_lit(pp, n_v).alias("pp"),
+    ).selectExpr(
         "p",
         "CAST(cum_k AS DOUBLE) / pp"
         " - CAST(cum_n - cum_k AS DOUBLE) / (nn - pp) AS diff",

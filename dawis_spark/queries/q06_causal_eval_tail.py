@@ -834,6 +834,8 @@ def grid_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     fellegi_sunter/markov_removal class: constant-size model state,
     never data-sized) followed by driver union-find; noise cells
     simply never enter the core relation."""
+    import pandas as pd
+
     binx = _DB_BIN.format(ax="x", v="x", g=_DB_G, divop="div")
     biny = _DB_BIN.format(ax="y", v="y", g=_DB_G, divop="div")
     pts = spark.table("embeddings").selectExpr(
@@ -893,10 +895,12 @@ def grid_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(rcx * _DB_G + rcy), len(ns), int(sum(ns)))
         for (rcx, rcy), ns in comp.items()
     ]
+    # a pandas frame enters through Arrow as a local relation (see
+    # logreg_weights)
     return spark.createDataFrame(
-        rows or [(None, None, None)],
+        pd.DataFrame(rows, columns=["cluster", "n_cells", "n_points"]),
         "cluster bigint, n_cells bigint, n_points bigint",
-    ).filter(F.col("cluster").isNotNull()).orderBy("cluster")
+    ).orderBy("cluster")
 
 
 @query("embedding_norm_profile", oracle=_NORM_PROFILE_ORACLE)
@@ -3078,6 +3082,8 @@ def ucb1_replay_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     carrying the K-arm state as columns."""
     import math
 
+    import pandas as pd
+
     k = _UCB_K
     daily = (
         spark.table("events")
@@ -3127,8 +3133,12 @@ def ucb1_replay_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             cb[j] += rs[j]
         best = max(cb)
         rows.append((t, d, arms[ch - 1], rw, cum, best, best - cum))
+    cols = [
+        "step", "day", "chosen_arm", "reward_micro", "cum_reward_micro",
+        "best_fixed_micro", "regret_micro",
+    ]
     return spark.createDataFrame(
-        rows,
+        pd.DataFrame(rows, columns=cols),
         "step bigint, day timestamp, chosen_arm string, reward_micro bigint,"
         " cum_reward_micro bigint, best_fixed_micro bigint, regret_micro bigint",
     ).orderBy("step")

@@ -141,8 +141,8 @@ def jonckheere_terpstra_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     and value_cum_walk's two-level prefix sum (equi-depth buckets, no
     partition-less window, whale-proof by default — SCALE.md r14); the
     pair arithmetic is a closed 10-term expression per distinct value;
-    everything after is three 1-row aggregates."""
-    from dawis_spark.operators.stats import value_cum_walk
+    everything after is one 1-row aggregate over the walk."""
+    from dawis_spark.operators.stats import total_lit, value_cum_walk
 
     src = spark.table("orders").selectExpr(
         f"{_CENTS} AS v", "o_orderpriority AS g"
@@ -155,31 +155,27 @@ def jonckheere_terpstra_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, g in enumerate(_JT_GROUPS)
         ]
     )
-    per_v = per_v.persist()
-    walk = value_cum_walk(per_v, "v", [f"c{i}" for i in range(1, _JT_K + 1)])
-    jt = walk.agg(
-        F.expr(f"SUM({_JT2_TERMS.format(big='DECIMAL(38,0)')})").alias("jt2")
+    walk, n_v, sizes = value_cum_walk(
+        per_v, "v", [f"c{i}" for i in range(1, _JT_K + 1)]
     )
+    # ONE aggregate over the walk: the doubled JT sum, the tie-group
+    # moments (the walk carries c1..c5 through) and the group sizes
+    # n1..n5, which are the walk's totals (NULL on empty input)
     t = " + ".join(f"c{i}" for i in range(1, _JT_K + 1))
-    ties = per_v.selectExpr(f"({t}) AS t").agg(
-        F.expr("SUM(CAST(t AS DECIMAL(38,0)) * (t - 1))").alias("stt1"),
-        F.expr("SUM(CAST(t AS DECIMAL(38,0)) * (t - 1) * (t - 2))").alias(
-            "stt2"
-        ),
-        F.expr("SUM(CAST(t AS DECIMAL(38,0)) * (t - 1) * (2 * t + 5))").alias(
-            "stt25"
-        ),
-    )
-    grp = per_v.agg(
-        *[
-            F.sum(f"c{i}").cast("bigint").alias(f"n{i}")
-            for i in range(1, _JT_K + 1)
-        ]
-    )
-    moms = grp.selectExpr(*_jt_group_moment_exprs("DECIMAL(38,0)").split(", "))
     return (
-        jt.crossJoin(F.broadcast(ties))
-        .crossJoin(F.broadcast(moms))
+        walk.selectExpr("*", f"({t}) AS t")
+        .agg(
+            F.expr(f"SUM({_JT2_TERMS.format(big='DECIMAL(38,0)')})").alias("jt2"),
+            F.expr("SUM(CAST(t AS DECIMAL(38,0)) * (t - 1))").alias("stt1"),
+            F.expr("SUM(CAST(t AS DECIMAL(38,0)) * (t - 1) * (t - 2))").alias(
+                "stt2"
+            ),
+            F.expr(
+                "SUM(CAST(t AS DECIMAL(38,0)) * (t - 1) * (2 * t + 5))"
+            ).alias("stt25"),
+            *[total_lit(n, n_v).alias(f"n{i}") for i, n in enumerate(sizes, 1)],
+        )
+        .selectExpr("*", *_jt_group_moment_exprs("DECIMAL(38,0)").split(", "))
         .selectExpr(
             "nn AS n_rows",
             f"CAST({_JT_K} AS INT) AS k_groups",

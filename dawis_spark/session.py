@@ -22,6 +22,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding the dawis_spark package (the checkout's root)
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -76,6 +78,10 @@ def get_spark(
         # anything else earns broadcast at runtime by measuring small.
         "spark.sql.autoBroadcastJoinThreshold": str(16 * 1024 * 1024),
         "spark.sql.adaptive.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # the numpy tiers' mapInPandas / pandas-UDF closures import
+        # dawis_spark on the Python workers: put the package on their
+        # path, so a driver started from any directory works
+        "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
         # quiet local runs
         "spark.ui.enabled": os.environ.get("SPARK_GRAFT_UI", "false"),
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

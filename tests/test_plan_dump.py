@@ -8,16 +8,19 @@ def test_normalize_plan_renumbers_ids_and_drops_plan_id():
         "Exchange hashpartitioning(x#187L, 4), ENSURE_REQUIREMENTS, [plan_id=187]\n"
         "+- Project [x#187L, y#12 AS z#3]\n"
         "Output [2]: [x#187L, z#3]\n"
+        "Arguments: [x#187L], MapPartitionsRDD[226] at applySchemaToPythonRDD\n"
     )
     b = (
         "Exchange hashpartitioning(x#901L, 4), ENSURE_REQUIREMENTS, [plan_id=333]\n"
         "+- Project [x#901L, y#40 AS z#41]\n"
         "Output [2]: [x#901L, z#41]\n"
+        "Arguments: [x#901L], MapPartitionsRDD[221] at applySchemaToPythonRDD\n"
     )
     want = (
         "Exchange hashpartitioning(x#1L, 4), ENSURE_REQUIREMENTS, [plan_id]\n"
         "+- Project [x#1L, y#2 AS z#3]\n"
         "Output [2]: [x#1L, z#3]\n"
+        "Arguments: [x#1L], MapPartitionsRDD[1] at applySchemaToPythonRDD\n"
     )
     assert normalize_plan(a) == want
     assert normalize_plan(b) == want

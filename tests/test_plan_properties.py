@@ -729,8 +729,9 @@ def test_pareto_customers_offsets_inlined(spark):
     # r15: the bucket-offset relation (<= 1024 exact integers) is
     # collected at plan-build and inlined as a literal array — the
     # per-row offset lookup is element_at on that literal, so NO join
-    # (hash or shuffle) may exist for the offsets; the only remaining
-    # join is the 1-row pooled-total broadcast
+    # (hash or shuffle) may exist for the offsets; the pooled revenue
+    # total and customer count are the walk's own literals, so no join
+    # remains at all
     plan = _plan(spark, "pareto_customers")
     assert "element_at" in plan
     assert "BroadcastHashJoin" not in plan

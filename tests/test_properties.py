@@ -324,13 +324,12 @@ def test_range_partitioned_ranks_property(spark, vals, desc, nb):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "k int, v long"
     ).repartition(3)
-    got = {
-        r["k"]: (r["r"], r["cum"])
-        for r in range_partitioned_ranks(
-            df, "v", ["k"], desc=desc, n_buckets=nb,
-            out_col="r", sum_col="cum",
-        ).collect()
-    }
+    ranked, n, totals = range_partitioned_ranks(
+        df, "v", ["k"], desc=desc, n_buckets=nb,
+        out_col="r", sum_cols=[("cum", "v")],
+    )
+    assert (n, totals) == (len(vals), [sum(vals)])
+    got = {r["k"]: (r["r"], r["cum"]) for r in ranked.collect()}
     order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]
     w = Window.orderBy(*order)
     want = {

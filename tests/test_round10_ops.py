@@ -119,7 +119,7 @@ def test_range_partitioned_ranks_match_global_row_number(spark):
             r["k"]: r["r"]
             for r in range_partitioned_ranks(
                 df, "v", ["k"], desc=desc, n_buckets=16, out_col="r"
-            ).collect()
+            )[0].collect()
         }
         order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]
         want = {

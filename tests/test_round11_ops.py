@@ -14,12 +14,12 @@ def test_range_partitioned_ranks_sum_col_matches_global_running_sum(spark):
     rows = [(i, rng.choice([1, 2, 2, 3, 5, 5, 5, 900, 10**7])) for i in range(500)]
     df = spark.createDataFrame(rows, ["k", "v"]).repartition(7)
     for desc in (False, True):
-        got = {
-            r["k"]: (r["r"], r["cum"])
-            for r in range_partitioned_ranks(
-                df, "v", ["k"], desc=desc, n_buckets=16, out_col="r", sum_col="cum"
-            ).collect()
-        }
+        ranked, n, totals = range_partitioned_ranks(
+            df, "v", ["k"], desc=desc, n_buckets=16, out_col="r",
+            sum_cols=[("cum", "v")],
+        )
+        assert (n, totals) == (len(rows), [sum(v for _, v in rows)])
+        got = {r["k"]: (r["r"], r["cum"]) for r in ranked.collect()}
         order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]
         w = Window.orderBy(*order)
         want = {
@@ -47,7 +47,7 @@ def test_range_partitioned_ranks_null_values_match_window_null_order(spark):
             r["k"]: r["r"]
             for r in range_partitioned_ranks(
                 df, "v", ["k"], desc=desc, n_buckets=4, out_col="r"
-            ).collect()
+            )[0].collect()
         }
         order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]
         want = {
@@ -149,8 +149,8 @@ def test_range_partitioned_ranks_log_scale_identical_ranks(spark):
             r["k"]: (r["r"], r["cum"])
             for r in range_partitioned_ranks(
                 df, "v", ["k"], desc=desc, n_buckets=16,
-                out_col="r", sum_col="cum",
-            ).collect()
+                out_col="r", sum_cols=[("cum", "v")],
+            )[0].collect()
         }
         order = [F.desc("v") if desc else F.asc("v"), F.asc("k")]
         w = Window.orderBy(*order)

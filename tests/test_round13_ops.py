@@ -49,7 +49,8 @@ def test_value_cum_walk_matches_global_window_twin(spark):
     replaced: inclusive running sums + dense rank from value_cum_walk
     must be BIT-IDENTICAL to SUM(c) OVER (ORDER BY v ROWS UNBOUNDED
     PRECEDING..CURRENT ROW) / row_number, ascending and descending,
-    including multi-sum one-call form and a NULL-free skewed domain."""
+    including multi-sum one-call form and a NULL-free skewed domain.
+    The returned row count and totals equal COUNT and SUM."""
     import random
 
     from pyspark.sql import Window
@@ -79,7 +80,11 @@ def test_value_cum_walk_matches_global_window_twin(spark):
             F.sum("ca").over(w).cast("bigint").alias("xa"),
             F.sum("cb").over(w).cast("bigint").alias("xb"),
         )
-        got = value_cum_walk(per_v, "v", ["ca", "cb"], n_buckets=16, desc=desc)
+        got, n, totals = value_cum_walk(
+            per_v, "v", ["ca", "cb"], n_buckets=16, desc=desc
+        )
+        tot = per_v.agg(F.sum("ca"), F.sum("cb")).first()
+        assert (n, totals) == (per_v.count(), list(tot))
         exp = {row["v"]: (row["r"], row["xa"], row["xb"]) for row in twin.collect()}
         for row in got.collect():
             assert (row["__r"], row["cum_ca"], row["cum_cb"]) == exp[row["v"]], (

@@ -132,8 +132,8 @@ def _edf_walk(spark, n_buckets):
 
     df = spark.range(3000).selectExpr("id AS k", "(id * 7919) % 2003 AS v")
     return range_partitioned_ranks(
-        df, "v", ["k"], n_buckets=n_buckets, out_col="r", sum_col="cum"
-    )
+        df, "v", ["k"], n_buckets=n_buckets, out_col="r", sum_cols=[("cum", "v")]
+    )[0]
 
 
 def test_edf_walk_array_literals_fold_to_constants(spark):

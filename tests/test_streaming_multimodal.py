@@ -919,7 +919,15 @@ def test_stream_heartbeat_silent_then_recovered(spark, tmp_path):
     """A series that stops emitting gets exactly ONE silent alert after
     silence_ms (no re-alert storm), and its next row emits a recovered
     alert carrying the realized gap; a continuously-active series emits
-    nothing."""
+    nothing.
+
+    Timing: the live series is fed about once a second, and a lagging
+    micro-batch (1.7 s has been logged on 4 vCPUs) can stretch its
+    processing-time gap to ~3 s, so the silence window is 5 s. The feed
+    runs past that window: were a sighting not to push the timeout
+    back, the live series would time out mid-feed and fail the check
+    below; were it not to arm one at all, the live series would never
+    go silent after its feed stops."""
     import time as _time
 
     from pyspark.sql import types as T
@@ -958,7 +966,7 @@ def test_stream_heartbeat_silent_then_recovered(spark, tmp_path):
     ).write.mode("append").parquet(staging)
     q = (
         stream_heartbeat_alerts(
-            staging_stream(spark, staging, schema), "series", silence_ms=1500
+            staging_stream(spark, staging, schema), "series", silence_ms=5000
         )
         .writeStream.format("memory")
         .queryName("hb_sink")
@@ -968,7 +976,7 @@ def test_stream_heartbeat_silent_then_recovered(spark, tmp_path):
     )
     try:
         # keep "api" alive past cron's silence window; cron goes quiet
-        for _ in range(5):
+        for _ in range(9):
             _time.sleep(0.8)
             spark.createDataFrame([("api", 1.0)], schema).write.mode(
                 "append"
@@ -978,7 +986,7 @@ def test_stream_heartbeat_silent_then_recovered(spark, tmp_path):
         assert all(s != "api" for s, _ in rows)
         # single-shot: still exactly one cron alert after further silence
         # (api, no longer fed, may alert now — that's correct behavior)
-        _time.sleep(2.5)
+        _time.sleep(6.0)
         assert rows_now().count(("cron", "silent")) == 1
         # recovery: cron emits again -> one recovered row
         spark.createDataFrame([("cron", 2.0)], schema).write.mode(
@@ -986,6 +994,8 @@ def test_stream_heartbeat_silent_then_recovered(spark, tmp_path):
         ).parquet(staging)
         wait_for(lambda rows: ("cron", "recovered") in rows)
         assert rows_now().count(("cron", "silent")) == 1
+        # api's feed stopped long ago: its last sighting armed a timeout
+        wait_for(lambda rows: ("api", "silent") in rows)
     finally:
         q.stop()
 

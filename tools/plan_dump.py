@@ -12,6 +12,9 @@ scratch directory outside the repository. Reads the tables under
 
 Each dump goes through ``normalize_plan``, so two dumps of one unchanged
 query are byte-identical even when they come from different processes.
+One difference it leaves on purpose: ``mmr_diversity_eval``'s AQE final
+plan picks ``BuildLeft`` or ``BuildRight`` for one broadcast join from run
+to run, and masking the build side would hide a real plan change too.
 """
 
 from __future__ import annotations
@@ -27,17 +30,25 @@ sys.path.insert(0, REPO)
 
 _PLAN_ID = re.compile(r"\[plan_id=\d+\]")
 _EXPR_ID = re.compile(r"#(\d+)")
+_RDD_ID = re.compile(r"RDD\[(\d+)\]")
+
+
+def _renumber(pattern: re.Pattern, fmt: str, text: str) -> str:
+    ids: dict[str, str] = {}
+    return pattern.sub(
+        lambda m: fmt.format(ids.setdefault(m.group(1), str(len(ids) + 1))), text
+    )
 
 
 def normalize_plan(text: str) -> str:
     """Drop the per-session exchange ``plan_id`` counter and renumber the
-    ``#n`` expression ids in order of first appearance; both counters are
-    global to the JVM, so they differ between processes for one plan."""
-    ids: dict[str, str] = {}
+    ``#n`` expression ids and the ``RDD[n]`` ids (a row-list relation's
+    ``MapPartitionsRDD[226]``) in order of first appearance; all three
+    counters are global to the JVM or the SparkContext, so they differ
+    between processes for one plan."""
     text = _PLAN_ID.sub("[plan_id]", text)
-    return _EXPR_ID.sub(
-        lambda m: "#" + ids.setdefault(m.group(1), str(len(ids) + 1)), text
-    )
+    text = _renumber(_RDD_ID, "RDD[{}]", text)
+    return _renumber(_EXPR_ID, "#{}", text)
 
 
 def main() -> None:
